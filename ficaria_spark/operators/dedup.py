@@ -926,14 +926,10 @@ def embedding_near_pairs(df: DataFrame, *, id_col: str = "vec_id",
     va = vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
     vb = vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
     if exact:
-        import math
-
         import pandas as pd
 
         from ficaria_spark.operators.pairwise import block_pair_apply
 
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        nb = int(min(64, max(8, round(math.sqrt(8 * cores)))))
         thr = float(threshold)
         # preserve the caller's id type (the pre-blocked path joined on any
         # orderable id; hardcoding long would Arrow-cast-fail string ids)
@@ -956,7 +952,7 @@ def embedding_near_pairs(df: DataFrame, *, id_col: str = "vec_id",
 
         return block_pair_apply(
             vecs, "id", ["vec"], near_block,
-            f"id_a {id_type}, id_b {id_type}, cosine double", nb=nb)
+            f"id_a {id_type}, id_b {id_type}, cosine double")
     else:
         if dim is None:
             raise ValueError("dim is required for the LSH path (exact=False)")

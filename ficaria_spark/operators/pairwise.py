@@ -16,6 +16,7 @@ on a 1000-executor cluster while the reference's pandas version dies at 10⁵.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Sequence
 
 import numpy as np
@@ -25,11 +26,16 @@ from pyspark.sql import functions as F
 
 
 def _pair_groups(df: DataFrame, right_df: DataFrame | None, row_id: str,
-                 cols: Sequence[str], nb: int):
+                 cols: Sequence[str], nb: int | None = None):
     """Shared blocked-pair plumbing: one tagged UNION grouped by the
     (block, partner) key — task (x, y) receives left-block-x rows
     (``__side``=0) together with right-block-y rows (``__side``=1) in a
     single frame.
+
+    ``nb=None`` sizes the block grid to the cluster: nb(nb+1)/2 pair tasks
+    should give ~4 waves of parallelism (measured: 136 small tasks beat 36
+    big ones 2× at 16 cores — load balance outweighs the extra shuffle
+    duplication until nb² shuffle copies dominate).
 
     Deliberately avoids ``cogroup``: a self-cogroup whose two sides share a
     file-scan subtree makes Catalyst's plan deduplication mis-resolve one
@@ -38,6 +44,10 @@ def _pair_groups(df: DataFrame, right_df: DataFrame | None, row_id: str,
     createDataFrame inputs never trigger it, so only source-backed data was
     affected). A union of two branches of the same scan has no such hazard.
     """
+    if nb is None:
+        cores = df.sparkSession.sparkContext.defaultParallelism
+        # nb(nb+1)/2 ≈ 4·cores → nb ≈ sqrt(8·cores); clamp to a sane band
+        nb = int(min(64, max(8, round(math.sqrt(8 * cores)))))
     right_df = right_df if right_df is not None else df
     sel = [row_id, *cols]
     blocks = F.pmod(F.xxhash64(F.col(row_id)), F.lit(nb))
@@ -64,13 +74,11 @@ def block_pair_apply(
     cols: Sequence[str],
     kernel: Callable[[pd.DataFrame, pd.DataFrame], pd.DataFrame],
     out_schema: str,
-    *,
-    nb: int = 8,
-    right_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Generic blocked all-pairs map: ``kernel(left_block, right_block)``
-    returns an arbitrary output frame (e.g. block-local top-k candidates)."""
-    grouped, sel = _pair_groups(df, right_df, row_id, cols, nb)
+    """Generic blocked self-pairs map: ``kernel(left_block, right_block)``
+    returns an arbitrary output frame (e.g. candidate pairs above a
+    threshold). The block grid is sized to the cluster."""
+    grouped, sel = _pair_groups(df, None, row_id, cols)
     out_cols = [c.strip().split()[0].strip("`") for c in out_schema.split(",")]
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:

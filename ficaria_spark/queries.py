@@ -1415,19 +1415,17 @@ FROM ranked WHERE rank <= 3
 
 @register("knn_cosine", oracle=_KNN_COSINE_ORACLE)
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k via the blocked-dgemm scale path (block-local
-    top-k, no full pair materialization). The expression-fold path
-    (`cosine_topk`) produces equal output — pytest
-    test_cosine_topk_blocked_matches_expression_path pins the equality —
-    so one registry entry covers both (keeps the registry inside the
-    driver's 50-query window). The dgemm dot differs from the fold dot by
-    ≲1e-15, far inside the 6dp rounding, so the exact-value hash matches."""
-    from ficaria_spark.operators.similarity import cosine_topk_blocked
+    """Exact cosine top-k (`cosine_topk`). Every shipped corpus fits the
+    broadcast budget, so this runs the broadcast route; the blocked
+    shuffle route is pinned to the same (query, neighbor, rank) output,
+    exact ties included, by pytest
+    test_cosine_topk_broadcast_path_equals_shuffle_path. The dgemm dot
+    differs from the oracle's list_reduce dot by ≲1e-15, far inside the
+    6dp rounding, so the exact-value hash matches."""
+    from ficaria_spark.operators.similarity import cosine_topk
 
     emb = datagen.load(spark, sf_dir, "embeddings")
-    # nb=8 explicit: at gate/bench input sizes (2k vecs) fewer/bigger blocks
-    # win; the nb=None default auto-sizes for corpus-scale inputs
-    out = cosine_topk_blocked(emb, k=3, nb=8)
+    out = cosine_topk(emb, k=3)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 6).alias("cosine"), "rank")
 

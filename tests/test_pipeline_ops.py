@@ -176,15 +176,45 @@ def _embeddings(spark, n=80, dim=16, seed=3, clustered=False):
     return spark.createDataFrame(pdf), M
 
 
+def _topk_reference(M, k):
+    """Brute-force exact top-k of rows ``M`` (ids 0..n-1) by (cosine desc,
+    neighbor_id asc), self-matches and non-finite cosines excluded — the
+    policy every cosine route must implement."""
+    M = np.asarray(M, dtype=np.float64)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        U = M / np.sqrt((M * M).sum(axis=1))[:, None]
+    S = U @ U.T
+    ids = np.arange(len(M))
+    rows = []
+    for q in ids:
+        ok = (ids != q) & np.isfinite(S[q])
+        for r, j in enumerate(np.lexsort((ids[ok], -S[q][ok]))[:k], 1):
+            rows.append((q, ids[ok][j], S[q][ok][j], r))
+    return pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine", "rank"])
+
+
+def _assert_same_topk(got, exp):
+    got = got.sort_values(["query_id", "rank"])
+    exp = exp.sort_values(["query_id", "rank"])
+    assert list(got.query_id) == list(exp.query_id)
+    assert list(got.neighbor_id) == list(exp.neighbor_id)
+    assert list(got["rank"]) == list(exp["rank"])
+    assert np.allclose(got.cosine.to_numpy(), exp.cosine.to_numpy(), atol=1e-9)
+
+
+def _tie_frame(spark, n=600, dim=16, seed=17):
+    """n unit vectors drawn from 8 distinct directions: every query has ~n/8
+    neighbors at cosine exactly 1.0, so its top-k is decided by neighbor_id
+    alone. Basis directions keep every cosine exact (1.0 or 0.0)."""
+    rng = np.random.default_rng(seed)
+    M = np.eye(dim)[rng.integers(0, 8, n)]
+    pdf = pd.DataFrame({"vec_id": range(n), "embedding": list(M)})
+    return spark.createDataFrame(pdf), M
+
+
 def test_cosine_topk_matches_numpy(spark):
     sdf, M = _embeddings(spark)
-    got = sim.cosine_topk(sdf, k=3).toPandas().sort_values(["query_id", "rank"])
-    S = M @ M.T
-    np.fill_diagonal(S, -np.inf)
-    for qid in range(len(M)):
-        order = np.argsort(-S[qid], kind="mergesort")[:3]
-        mine = got[got.query_id == qid].neighbor_id.to_numpy()
-        assert set(mine) == set(order), qid
+    _assert_same_topk(sim.cosine_topk(sdf, k=3).toPandas(), _topk_reference(M, 3))
 
 
 def test_lsh_ann_recall(spark):
@@ -208,14 +238,16 @@ def test_ivf_ann_recall(spark):
 def test_ivf_full_probe_equals_exact(spark):
     """With nprobe == n_lists every list is probed, so IVF must equal the
     exact brute-force top-k — end-to-end check of the vectorized probe
-    expansion (np.repeat/ravel columnwise construction)."""
+    expansion (np.repeat/ravel columnwise construction). The tie frame runs
+    both routes: exact cosine ties must break by neighbor_id there too."""
     sdf, M = _embeddings(spark, n=60, clustered=True)
-    exact = sim.cosine_topk(sdf, k=3).toPandas().sort_values(["query_id", "rank"])
-    full = sim.ivf_ann_topk(sdf, k=3, n_lists=6, nprobe=6).toPandas() \
-              .sort_values(["query_id", "rank"])
-    assert list(exact.query_id) == list(full.query_id)
-    assert list(exact.neighbor_id) == list(full.neighbor_id)
-    assert np.allclose(exact.cosine.to_numpy(), full.cosine.to_numpy(), atol=1e-9)
+    full = sim.ivf_ann_topk(sdf, k=3, n_lists=6, nprobe=6).toPandas()
+    _assert_same_topk(full, _topk_reference(M, 3))
+    tie, T = _tie_frame(spark)
+    for budget in (sim._BROADCAST_BYTES, None):  # broadcast, forced shuffle
+        full = sim.ivf_ann_topk(tie, k=4, n_lists=8, nprobe=8,
+                                broadcast_bytes=budget).toPandas()
+        _assert_same_topk(full, _topk_reference(T, 4))
 
 
 def test_ivf_candidate_pairs_already_unique(spark):
@@ -365,41 +397,45 @@ def test_frame_sample_explodes(spark):
     assert out0.count() == 0 and "payload" not in out0.columns
 
 
-def test_cosine_topk_blocked_matches_expression_path(spark):
-    sdf, M = _embeddings(spark, n=90)
-    a = sim.cosine_topk(sdf, k=4).toPandas().sort_values(["query_id", "rank"])
-    b = sim.cosine_topk_blocked(sdf, k=4, nb=4).toPandas().sort_values(["query_id", "rank"])
-    assert list(a.query_id) == list(b.query_id)
-    assert list(a.neighbor_id) == list(b.neighbor_id)
-    assert np.allclose(a.cosine.to_numpy(), b.cosine.to_numpy(), atol=1e-9)
-
-
 def test_cosine_topk_broadcast_path_equals_shuffle_path(spark):
-    """r7: cosine_topk_blocked auto-routes small corpora to the broadcast
-    mapInArrow kernel (zero exchanges). Both paths — and the expression
-    baseline — must agree on (query, neighbor, rank), INCLUDING exact-tie
-    rows: duplicated vectors make several neighbors share a bit-identical
-    cosine at the k-boundary, exercising the kernel's argpartition tie
-    fallback (ties must resolve by neighbor_id asc, the window policy)."""
+    """Small corpora take the broadcast mapInArrow kernel (zero exchanges),
+    large ones the blocked shuffle route. Both must equal the numpy
+    reference on (query, neighbor, rank), INCLUDING exact-tie rows: a
+    block-local top-k merged by the window is exact only if every block
+    breaks cosine ties by neighbor_id asc, the window's own order."""
     rng = np.random.default_rng(11)
     base = rng.normal(size=(12, 8))
     # rows 0..11 unique, 12..23 duplicate them → every query sees its twin
     # at cosine 1.0 and multiple boundary ties among equal vectors
-    M = np.vstack([base, base, base[:4]])
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
-    pdf = pd.DataFrame({"vec_id": range(len(M)), "embedding": list(M)})
-    sdf = spark.createDataFrame(pdf)
-    a = (sim.cosine_topk(sdf, k=3).toPandas()
-         .sort_values(["query_id", "rank"]))
-    bcast = (sim.cosine_topk_blocked(sdf, k=3).toPandas()
-             .sort_values(["query_id", "rank"]))           # broadcast route
-    shuf = (sim.cosine_topk_blocked(sdf, k=3, nb=3, broadcast_rows=None)
-            .toPandas().sort_values(["query_id", "rank"]))  # forced shuffle
-    for b in (bcast, shuf):
-        assert list(a.query_id) == list(b.query_id)
-        assert list(a.neighbor_id) == list(b.neighbor_id)
-        assert list(a["rank"]) == list(b["rank"])
-        assert np.allclose(a.cosine.to_numpy(), b.cosine.to_numpy(), atol=1e-9)
+    dup = np.vstack([base, base, base[:4]])
+    dup /= np.linalg.norm(dup, axis=1, keepdims=True)
+    frames = [
+        (spark.createDataFrame(pd.DataFrame(
+            {"vec_id": range(len(dup)), "embedding": list(dup)})), dup, 3),
+        (*_embeddings(spark, n=90), 4),
+        (*_tie_frame(spark), 4),  # ~75 neighbors tie at 1.0 per query
+    ]
+    for sdf, M, k in frames:
+        exp = _topk_reference(M, k)
+        _assert_same_topk(sim.cosine_topk(sdf, k=k).toPandas(), exp)
+        _assert_same_topk(
+            sim.cosine_topk(sdf, k=k, broadcast_bytes=None).toPandas(), exp)
+
+
+def test_broadcast_gate_counts_bytes_not_rows(spark):
+    """Two corpora with the same row count: the 16-dim one fits a budget
+    sized for it and broadcasts, the 256-dim one exceeds it and takes the
+    shuffle route — in both cosine_topk and ivf_ann_topk."""
+    budget = 50 * (16 + sim._TOPK_CHUNK_ROWS) * 8
+    for dim, shuffled in ((16, False), (256, True)):
+        sdf, M = _embeddings(spark, n=50, dim=dim)
+        exp = _topk_reference(M, 3)
+        for out in (sim.cosine_topk(sdf, k=3, broadcast_bytes=budget),
+                    sim.ivf_ann_topk(sdf, k=3, n_lists=4, nprobe=4,
+                                     broadcast_bytes=budget)):
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            assert ("FlatMapGroupsInArrow" in plan) == shuffled, dim
+            _assert_same_topk(out.toPandas(), exp)
 
 
 def test_blocked_pairwise_correct_over_parquet_source(spark, tmp_path):
@@ -433,9 +469,8 @@ def test_blocked_pairwise_correct_over_parquet_source(spark, tmp_path):
     M = np.stack(src.orderBy("vec_id").toPandas()["embedding"].to_numpy())
     assert np.allclose(got, (M @ M.T).sum(axis=1))
 
-    a = sim.cosine_topk(src, k=3).toPandas()
-    b = sim.cosine_topk_blocked(src, k=3, nb=8).toPandas()
-    assert set(zip(a.query_id, a.neighbor_id)) == set(zip(b.query_id, b.neighbor_id))
+    _assert_same_topk(sim.cosine_topk(src, k=3, broadcast_bytes=None).toPandas(),
+                      _topk_reference(M, 3))
 
 
 def test_minhash_engines_identical(spark):
@@ -536,7 +571,7 @@ def test_operator_caches_released(spark):
     emb, _ = _embeddings(spark, n=50)
     sim.lsh_ann_topk(emb, dim=16, k=3).count()
     # force the shuffle path: the r7 broadcast route has no internal persist
-    sim.ivf_ann_topk(emb, k=3, n_lists=4, broadcast_rows=None).count()
+    sim.ivf_ann_topk(emb, k=3, n_lists=4, broadcast_bytes=None).count()
     assert live_count() >= 5
     assert release_operator_caches() >= 5
     assert live_count() == 0
@@ -1455,7 +1490,8 @@ def test_nan_component_vectors_excluded_consistently(spark):
     assert 3 not in set(ex.id_a) | set(ex.id_b)
     assert not ex.cosine.isna().any()
 
-    for out in (sim.cosine_topk_blocked(sdf, k=2, nb=2).toPandas(),
+    for out in (sim.cosine_topk(sdf, k=2).toPandas(),
+                sim.cosine_topk(sdf, k=2, broadcast_bytes=None).toPandas(),
                 sim.lsh_ann_topk(sdf, dim=16, k=2, n_planes=2,
                                  n_tables=2).toPandas()):
         assert 3 not in set(out.query_id) | set(out.neighbor_id)

@@ -164,3 +164,23 @@ def test_pack_segments_two_level_handles_numeric_groups(spark):
         .orderBy(*key).toPandas()
     pd.testing.assert_frame_equal(a, b, check_like=True)
     assert (a.src_num == 0).any()  # the falsy group actually exists
+
+
+def test_pack_segments_negative_count_contributes_nothing(spark):
+    """A doc with n_tok < 0 must pack exactly like n_tok = 0 on both offset
+    routes: left negative, it pulled the next doc's offset back into a pack
+    already filled (d3 landed at pack_off 2 inside pack 0, overlapping d1)."""
+    def frame(n2):
+        return spark.createDataFrame(
+            [("s", "d1", 5), ("s", "d2", n2), ("s", "d3", 4)],
+            "source string, doc_id string, n_tok long")
+
+    key = ["source", "pack_id", "doc_id"]
+    for nb in (None, 2):
+        got = pack_segments(frame(-3), context_len=4, num_buckets=nb) \
+            .orderBy(*key).toPandas()
+        exp = pack_segments(frame(0), context_len=4, num_buckets=nb) \
+            .orderBy(*key).toPandas()
+        pd.testing.assert_frame_equal(got, exp, check_like=True)
+        assert (got.groupby("pack_id")["seg_len"].sum() <= 4).all()
+        assert "d2" not in set(got.doc_id)
