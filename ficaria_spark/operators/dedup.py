@@ -8,10 +8,10 @@ Scale shapes (the whole point of each design):
                  on shingle → count common → filter. Shuffles (doc, shingle)
                  pairs; prune super-common shingles (stopword shingles) to
                  kill the quadratic hot-key blowup.
-* minhash+LSH  — signatures via one projection (all hash functions evaluated
-                 per shingle in one pass), banding → candidates join only
-                 within buckets: near-linear. Verification re-computes exact
-                 Jaccard on candidates only.
+* minhash+LSH  — signatures via one chunked mapInArrow pass (all hash
+                 functions evaluated per shingle in one matrix op), banding →
+                 candidates join only within buckets: near-linear. Candidates
+                 are filtered on signature agreement (estimated Jaccard).
 * simhash      — 64-bit signature per doc via one chunked mapInArrow pass
                  (vectorized bit votes); near-dups = banded pigeonhole keys.
 * embedding    — cosine over LSH/bucketed candidates (see similarity.py).
@@ -371,26 +371,22 @@ def _positional_shingle_arrays(words: DataFrame, *, k: int, coefs) -> DataFrame:
 
 
 
-
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        *, k: int = 3, num_hashes: int = 64, seed: int = 13,
                        shingle_hash: str = "xxhash64",
-                       engine: str = "jvm") -> DataFrame:
+                       engine: str = "arrow") -> DataFrame:
     """(id, signature array<long>) — min over shingles of pmod(a·x + b, p) per
-    hash function. Map-only; no shuffle. Both engines produce IDENTICAL
-    values (same integer hash family); they trade latency vs throughput:
-
-    * ``engine="jvm"`` — one aggregate/zip_with fold, no Python round-trip.
-      Wins on small/latency-bound inputs (5k docs: 0.5 s vs 5.7 s — the Arrow
-      worker round-trip dominates there), but the per-shingle accumulator
-      allocation hits this box's DRAM/GC wall: 4×-core scaling ≈ 0.71.
-    * ``engine="arrow"`` — Arrow-batched NumPy (flatten + one matrix op +
-      segment-min). Allocation-light: scales ≈ 0.96 on 4× cores and wins at
-      corpus scale (≥ ~100k docs). The 100 TB default for bulk jobs.
+    hash function. Map-only; no shuffle. Signing is one chunked mapInArrow
+    NumPy kernel (flatten + one matrix op per cache-sized chunk +
+    segment-min); null-text docs get a NULL signature.
 
     ``shingle_hash``: "xxhash64" (native, fastest — the scale path) or "md5"
     (engine-portable: md5 hex → int, reproducible in any SQL engine; used by
-    the exact-oracle twin)."""
+    the exact-oracle twin). ``engine`` names the signing engine and accepts
+    only "arrow", the one that exists; it stays a keyword because the frozen
+    ``bench.py --scaling`` workload passes it."""
+    if engine != "arrow":
+        raise ValueError(f"engine must be 'arrow', got {engine!r}")
     a_params, b_params = _hash_params(num_hashes, seed)
     # materialize the words array ONCE per row: referencing the split()
     # expression inside the shingle lambda would re-evaluate it per shingle
@@ -403,9 +399,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     ).select("id", F.split(F.trim(F.col("__t")), r"\s+").alias("__w"))
     n = F.size("__w")
     idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-    # shingle value: native xxhash64 of the joined k-gram — an order of
-    # magnitude cheaper than md5→hex→conv and just as collision-safe for
-    # signature purposes (deterministic within the engine)
     if shingle_hash == "md5":
         # engine-portable: md5 of the joined k-gram (string build per shingle
         # — slower, but reproducible in any SQL engine; the oracle twin)
@@ -421,8 +414,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
                 F.lit(_MERSENNE),
             ),
         )
-        # null text → null shingle list → NULL signature (both engines): a
-        # sentinel signature would bucket every null doc together as fake
+        # null text → null shingle list → NULL signature: a sentinel
+        # signature would bucket every null doc together as fake
         # est_jaccard=1.0 candidates
         base = words.select(
             "id",
@@ -436,88 +429,65 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
             1, _MERSENNE, size=k, dtype=np.int64)
         base = _positional_shingle_arrays(words, k=k, coefs=coefs)
 
-    if engine == "arrow":
-        a64 = a_params.astype(np.int64)
-        b64 = b_params.astype(np.int64)
-        # shingles per block, sized so the (chunk × num_hashes) hash matrix
-        # stays ~2 MB (cache-resident per worker). One big batch-wide matrix
-        # (~266 MB × temporaries per 10k-doc batch) saturates DRAM bandwidth
-        # when many workers run — measured NEGATIVE scaling 4→16 cores.
-        chunk = max(512, 2_000_000 // (num_hashes * 8))
+    # shingles per block, sized so the (chunk × num_hashes) hash matrix
+    # stays ~2 MB (cache-resident per worker). One big batch-wide matrix
+    # (~266 MB × temporaries per 10k-doc batch) saturates DRAM bandwidth
+    # when many workers run — measured NEGATIVE scaling 4→16 cores. A doc
+    # with more shingles than the chunk is signed as a group of its own.
+    chunk = max(512, 2_000_000 // (num_hashes * 8))
 
-        def sign(batches):
-            # mapInArrow: the list column's flat child array + offsets come
-            # ZERO-COPY — no per-row Python objects (the pandas conversion of
-            # 1 M small lists measured as ~10 CPU-cores of pure overhead)
-            import pyarrow as pa
+    def sign(batches):
+        # mapInArrow: the list column's flat child array + offsets come
+        # ZERO-COPY — no per-row Python objects (the pandas conversion of
+        # 1 M small lists measured as ~10 CPU-cores of pure overhead).
+        # x < p and a, b < p ⇒ a·x + b < 2⁶² — no int64 overflow.
+        import pyarrow as pa
 
-            for rb in batches:
-                n = rb.num_rows
-                ids = rb.column(0)
-                sh = rb.column(1)
-                sigs = np.full((n, num_hashes), _MERSENNE, dtype=np.int64)
-                nulls = np.zeros(n, dtype=bool)
-                if n:
-                    # null shingle lists (null-text docs) must yield NULL
-                    # signatures — same as the JVM fold — so they fall out of
-                    # banding instead of all-bucketing together as sentinels
-                    if sh.null_count:
-                        nulls = ~sh.is_valid().to_numpy(zero_copy_only=False)
-                    offs = sh.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                    flat = sh.values.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-                    lens = np.diff(offs)
-                    lens[nulls] = 0
-                    nz_idx = np.where(lens > 0)[0]
-                    g0 = 0
-                    while g0 < len(nz_idx):
-                        g1 = g0 + 1
-                        d0 = nz_idx[g0]
-                        while (g1 < len(nz_idx)
-                               and offs[nz_idx[g1]] + lens[nz_idx[g1]] - offs[d0] <= chunk):
-                            g1 += 1
-                        sel = nz_idx[g0:g1]
-                        fl = flat[offs[sel[0]]:offs[sel[-1]] + lens[sel[-1]]]
-                        hv = fl[:, None] * a64[None, :]
-                        np.add(hv, b64[None, :], out=hv)
-                        np.mod(hv, _MERSENNE, out=hv)
-                        local_starts = offs[sel] - offs[sel[0]]
-                        sigs[sel] = np.minimum.reduceat(hv, local_starts, axis=0)
-                        g0 = g1
-                if nulls.any():
-                    row_lens = np.where(nulls, 0, num_hashes).astype(np.int64)
-                    out_offs = np.concatenate([[0], np.cumsum(row_lens)]).astype(np.int32)
-                    sig_col = pa.ListArray.from_arrays(
-                        pa.array(out_offs, mask=np.concatenate([nulls, [False]])),
-                        pa.array(sigs[~nulls].ravel(), type=pa.int64()))
-                else:
-                    sig_col = pa.FixedSizeListArray.from_arrays(
-                        pa.array(sigs.ravel(), type=pa.int64()), num_hashes
-                    ).cast(pa.list_(pa.int64()))
-                yield pa.RecordBatch.from_arrays([ids, sig_col], ["id", "signature"])
+        for rb in batches:
+            n = rb.num_rows
+            ids = rb.column(0)
+            sh = rb.column(1)
+            sigs = np.full((n, num_hashes), _MERSENNE, dtype=np.int64)
+            nulls = np.zeros(n, dtype=bool)
+            if n:
+                # null shingle lists (null-text docs) must yield NULL
+                # signatures so they fall out of banding instead of
+                # all-bucketing together as sentinels
+                if sh.null_count:
+                    nulls = ~sh.is_valid().to_numpy(zero_copy_only=False)
+                offs = sh.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+                flat = sh.values.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+                lens = np.diff(offs)
+                lens[nulls] = 0
+                nz_idx = np.where(lens > 0)[0]
+                g0 = 0
+                while g0 < len(nz_idx):
+                    g1 = g0 + 1
+                    d0 = nz_idx[g0]
+                    while (g1 < len(nz_idx)
+                           and offs[nz_idx[g1]] + lens[nz_idx[g1]] - offs[d0] <= chunk):
+                        g1 += 1
+                    sel = nz_idx[g0:g1]
+                    fl = flat[offs[sel[0]]:offs[sel[-1]] + lens[sel[-1]]]
+                    hv = fl[:, None] * a_params[None, :]
+                    np.add(hv, b_params[None, :], out=hv)
+                    np.mod(hv, _MERSENNE, out=hv)
+                    local_starts = offs[sel] - offs[sel[0]]
+                    sigs[sel] = np.minimum.reduceat(hv, local_starts, axis=0)
+                    g0 = g1
+            if nulls.any():
+                row_lens = np.where(nulls, 0, num_hashes).astype(np.int64)
+                out_offs = np.concatenate([[0], np.cumsum(row_lens)]).astype(np.int32)
+                sig_col = pa.ListArray.from_arrays(
+                    pa.array(out_offs, mask=np.concatenate([nulls, [False]])),
+                    pa.array(sigs[~nulls].ravel(), type=pa.int64()))
+            else:
+                sig_col = pa.FixedSizeListArray.from_arrays(
+                    pa.array(sigs.ravel(), type=pa.int64()), num_hashes
+                ).cast(pa.list_(pa.int64()))
+            yield pa.RecordBatch.from_arrays([ids, sig_col], ["id", "signature"])
 
-        return base.mapInArrow(sign, "id long, signature array<long>")
-
-    # ONE aggregate fold over the shingle array: acc (64 running minima) is
-    # zip_with-updated per shingle against the literal (a, b) pairs. Critical:
-    # the shingle expression is referenced exactly ONCE — with 64 separate
-    # array_min(transform(sh, …)) expressions, projection collapse inlines
-    # `sh` into every one and (HOFs being interpreted, outside codegen CSE)
-    # re-evaluates the whole shingle pipeline 64× per row — measured 150×
-    # slower on exploded inputs. x < p and a, b < p ⇒ a·x + b < 2⁶² — no
-    # long overflow under ANSI.
-    consts = F.array(*[
-        F.struct(F.lit(int(a_params[i])).alias("a"), F.lit(int(b_params[i])).alias("b"))
-        for i in range(num_hashes)
-    ])
-    sig = F.aggregate(
-        F.col("sh"),
-        F.array_repeat(F.lit(_MERSENNE).cast("long"), num_hashes),
-        lambda acc, x: F.zip_with(
-            acc, consts,
-            lambda m, c: F.least(m, F.pmod(x * c["a"] + c["b"], F.lit(_MERSENNE))),
-        ),
-    )
-    return base.select("id", sig.alias("signature"))
+    return base.mapInArrow(sign, "id long, signature array<long>")
 
 
 def minhash_lsh_candidates(sigs: DataFrame, *, bands: int = 16,
@@ -566,8 +536,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
                         *, k: int = 3, num_hashes: int = 64, bands: int = 16,
                         threshold: float = 0.8, seed: int = 13,
                         shingle_hash: str = "xxhash64",
-                        hash_buckets: bool = True,
-                        engine: str = "jvm") -> DataFrame:
+                        hash_buckets: bool = True) -> DataFrame:
     """Full MinHash-LSH pipeline: signatures → banded candidates → estimated
     Jaccard (signature agreement) filter ≥ threshold.
 
@@ -576,8 +545,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     signature scan per reference measured 7× slower than one materialization.
     """
     sigs = minhash_signatures(df, text_col, id_col, k=k, num_hashes=num_hashes,
-                              seed=seed, shingle_hash=shingle_hash,
-                              engine=engine)
+                              seed=seed, shingle_hash=shingle_hash)
     sigs = tracked_persist(sigs)
     cands = minhash_lsh_candidates(sigs, bands=bands, hash_buckets=hash_buckets)
     s1 = sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a"))
@@ -598,7 +566,8 @@ def _bidir(edges: DataFrame) -> DataFrame:
     """Both orientations of the (already distinct, consistently oriented)
     edge set. No distinct needed (r7 — it cost one full exchange per star
     round): the CC loop's edge sets always satisfy src != dst with ONE
-    orientation per pair — the initial input is distinct with id_a < id_b,
+    orientation per pair — the initial input is oriented src < dst, then
+    distinct,
     large-star emits (v, m) with v > u >= m, and small-star emits (v, m) /
     (u, m) with m < v <= u and m < u, all followed by their own distinct —
     so the two unioned orientations can never overlap or self-duplicate."""
@@ -644,69 +613,73 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def _cc_union_find_driver(spark, tbl) -> DataFrame:
     """Driver-side connected components over a BOUNDED, Arrow-collected edge
-    table (src, dst): union-find (path halving + union by root id), returns
-    (doc_id, cluster_rep = component min id). Bounded-state driver work in
-    the fit_cap / driver-k-means mold — the caller gates on the collected
-    row count before calling. Duplicate and re-oriented edges are harmless
-    (union is idempotent)."""
+    table (src, dst), returning (doc_id, cluster_rep = component min id).
+    Vectorized union-find: ids are compacted to their sorted ranks, so the
+    smallest rank in a component is its min id. Each round hooks every
+    edge's larger root under the smallest root it meets
+    (``np.minimum.at``), then pointer-jumps every node to its root until
+    nothing changes. Parents only ever decrease, so no cycle can form, and a
+    round that finds no edge spanning two roots is the fixpoint. Duplicate
+    and re-oriented edges are harmless (hooking is idempotent)."""
     src = tbl.column("src").to_numpy()
     dst = tbl.column("dst").to_numpy()
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.setdefault(r, r) != r:
-            parent[r] = parent[parent[r]]  # path halving
-            r = parent[r]
-        return r
-
-    for a, b in zip(src.tolist(), dst.tolist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by root id: the smaller id becomes the root, so the
-            # final root IS the component min (ids are the labels)
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
+    if not len(src):
+        return spark.createDataFrame([], "doc_id long, cluster_rep long")
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = inv[:len(src)], inv[len(src):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        span = ra != rb
+        if not span.any():
+            break
+        ra, rb = ra[span], rb[span]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
     import pandas as pd
 
-    if not parent:
-        return spark.createDataFrame([], "doc_id long, cluster_rep long")
-    ids = list(parent)
-    out = pd.DataFrame({
-        "doc_id": np.asarray(ids, dtype=np.int64),
-        "cluster_rep": np.asarray([find(x) for x in ids], dtype=np.int64),
-    })
-    return spark.createDataFrame(out)
+    return spark.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "cluster_rep": ids[parent]}))
 
 
-def dedup_clusters_star(pairs: DataFrame, *, id_a: str = "id_a",
-                        id_b: str = "id_b", max_iter: int = 25,
-                        small_graph_rows: int | None = 1_000_000) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contractions — O(log n) rounds regardless of component DIAMETER, the
-    variant to use when dup chains can be adversarially long (label
-    propagation needs O(diameter) rounds). Same output contract as
-    :func:`dedup_clusters`: (doc_id, cluster_rep = component min id).
+def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a", id_b: str = "id_b",
+                   max_iter: int = 25,
+                   small_graph_rows: int | None = 1_000_000) -> DataFrame:
+    """Resolve near-dup PAIRS into CLUSTERS: (doc_id, cluster_rep) where
+    cluster_rep = min id of the doc's connected component. The step that
+    turns a pair list (minhash/simhash/jaccard/embedding) into an actual
+    keep/drop decision (keep rows where doc_id == cluster_rep). Output
+    covers every id of a pair with id_a != id_b; an id that appears only in
+    self-pairs is not emitted (like an isolated doc, it is its own
+    representative by definition).
 
-    ``small_graph_rows``: the RAW pair list is probed with a
-    ``limit(threshold + 1)`` Arrow collect — one job, no distinct shuffle,
-    no checkpoint — and when at most ``small_graph_rows`` rows come back
-    (so the probe saw EVERY edge) the components are resolved with a
-    driver-side union-find instead of the iterative star rounds (r7): each
-    distributed round costs ~7 exchanges of per-stage latency, which
-    dominates wall time outright for small graphs (sf1: 2.5k edges,
-    2 rounds + verify ≈ 3 s of scheduling for <1 ms of actual union-find;
-    duplicate pair rows are harmless — union is idempotent — they only
-    make the threshold trigger conservatively). Driver state is bounded by
-    the threshold (16 B/edge ≈ 16 MB at the default); pass ``None`` to
-    force the distributed loop (the driver gate's dedup_clusters slot
-    does, so both distributed CC algorithms stay oracle-checked
-    end-to-end)."""
+    Two routes, one result. The RAW pair list is probed with a
+    ``limit(small_graph_rows + 1)`` Arrow collect — one job, no distinct
+    shuffle, no checkpoint. When at most ``small_graph_rows`` rows come back
+    (so the probe saw EVERY edge), the components are resolved on the
+    driver by :func:`_cc_union_find_driver`: each distributed round costs
+    ~7 exchanges of per-stage latency, which dominates the wall outright for
+    small graphs (sf1: 2.5k edges, 2 rounds + verify ≈ 3 s of scheduling for
+    <1 ms of union-find). Duplicate pair rows only make the threshold
+    trigger conservatively. Driver memory is bounded by the threshold: the
+    union-find's numpy arrays peaked at 100–120 B per edge on 1M-edge random
+    graphs (tracemalloc; 100–120 MB at the 1M default), on top of the
+    16 B/edge collected Arrow table.
+
+    Otherwise — or always, with ``small_graph_rows=None`` — it runs
+    alternating large-star / small-star contractions (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"): O(log n) rounds
+    regardless of component diameter, each lineage-truncated by
+    ``localCheckpoint``. If ``max_iter`` rounds pass without reaching the
+    verified fixpoint it raises ``RuntimeError`` rather than return
+    unconverged labels."""
     raw = (
-        pairs.select(F.col(id_a).cast("long").alias("src"),
-                     F.col(id_b).cast("long").alias("dst"))
+        pairs.select(F.least(id_a, id_b).cast("long").alias("src"),
+                     F.greatest(id_a, id_b).cast("long").alias("dst"))
         .where(F.col("src") != F.col("dst"))
     )
     if small_graph_rows is not None:
@@ -754,75 +727,20 @@ def dedup_clusters_star(pairs: DataFrame, *, id_a: str = "id_a",
                 break
         else:
             edges = nxt
-    # stars point larger → smaller; a node's parent IS the component min.
-    # min-aggregate defensively: if max_iter was exhausted before
-    # convergence a node could still carry several parents, and the output
-    # contract is one row per doc (min is also the correct limit value)
-    parents = (
-        edges.groupBy(F.col("src").alias("doc_id"))
-        .agg(F.min("dst").alias("cluster_rep"))
-    )
+    else:
+        raise RuntimeError(
+            f"dedup_clusters: star contraction did not converge within "
+            f"max_iter={max_iter} rounds ({prev_sig[0]} edges in the last "
+            f"round); raise max_iter")
+    # at the fixpoint every non-root node has exactly one edge, pointing
+    # larger → smaller at its component min; roots have none
+    parents = edges.select(F.col("src").alias("doc_id"),
+                           F.col("dst").alias("cluster_rep"))
     return (
         all_ids.join(parents, "doc_id", "left")
         .select("doc_id",
                 F.coalesce("cluster_rep", "doc_id").alias("cluster_rep"))
     )
-
-
-def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a", id_b: str = "id_b",
-                   max_iter: int = 20) -> DataFrame:
-    """Resolve near-dup PAIRS into CLUSTERS: (doc_id, cluster_rep) where
-    cluster_rep = min id of the doc's connected component. The step that
-    turns a pair list (minhash/simhash/jaccard/embedding) into an actual
-    keep/drop decision (keep rows where doc_id == cluster_rep).
-
-    Algorithm: min-label propagation — each iteration every node takes the
-    min label among itself and its neighbors; converges in O(component
-    diameter) rounds. Near-dup components are small and dense (diameter a
-    few hops), so a handful of join+agg rounds suffice; each round is one
-    shuffle on the node id and the frontier SHRINKS (only labels that
-    changed propagate). ``localCheckpoint`` truncates lineage per round and
-    the per-round convergence check is one tiny aggregate. For adversarial
-    long-chain graphs use the two-phase large-star/small-star variant
-    (Kiveris et al.) — same join primitives, O(log n) rounds.
-
-    Output covers every id appearing in ``pairs`` (isolated docs never enter
-    the pair list — they are their own representative by definition).
-    """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        # candidate label per node: min over neighbors' labels
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-            .groupBy("src").agg(F.min("label").alias("nbr_label"))
-            .withColumnRenamed("src", "id")
-        )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select("id", F.least("label", F.coalesce("nbr_label", "label")).alias("label"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n").join(labels.alias("o"), "id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if not changed:
-            break
-    return labels.select(F.col("id").alias("doc_id"),
-                         F.col("label").alias("cluster_rep"))
 
 
 # ---------------------------------------------------------------------------

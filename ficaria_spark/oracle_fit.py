@@ -900,9 +900,9 @@ def dedup_clusters_expected(sf_dir: str) -> tuple:
 
 
 def clusters_both_oracle_sql(rows) -> str:
-    """Twin for the folded dedup_clusters query: min-label propagation and
-    large-star/small-star contraction must resolve the SAME components, so
-    one union-find result pins both output columns."""
+    """Twin for the folded dedup_clusters query: the operator's driver
+    union-find route and its large-star/small-star route must resolve the
+    SAME components, so one union-find result pins both output columns."""
     if not rows:
         return ("SELECT CAST(NULL AS BIGINT) AS doc_id, "
                 "CAST(NULL AS BIGINT) AS cluster_rep, "

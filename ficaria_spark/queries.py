@@ -803,8 +803,6 @@ def q_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     underestimates (CMS guarantee, also asserted by pytest)."""
     from ficaria_spark.operators.sketch import cms_estimate, count_min_sketch
 
-    from ficaria_spark.plans.layout import widen_thin_input
-
     seqs = datagen.tokenized_sequences(spark, sf_dir, widen=True)
     tok = seqs.select(F.explode("tokens").alias("token"))
     # r7: ONE explode + aggregation pass over the token stream. The exact
@@ -1163,11 +1161,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ficaria_spark.operators.dedup import minhash_dedup_pairs
 
     docs = datagen.load(spark, sf_dir, "documents")
-    # engine="arrow": the corpus-scale signing engine (values identical to
-    # the JVM fold; the fold's 64-constant expression also pays a ~2.5 s
-    # Janino recompile whenever other queries evict it from the codegen cache)
-    out = minhash_dedup_pairs(docs, k=3, num_hashes=64, bands=16, threshold=0.5,
-                              engine="arrow")
+    out = minhash_dedup_pairs(docs, k=3, num_hashes=64, bands=16, threshold=0.5)
     return out.select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
 
 
@@ -1208,26 +1202,21 @@ _register_simhash_portable()
 
 @register("dedup_clusters")
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster resolution, BOTH algorithms from one MinHash pair
-    relation (folded so the driver's 50-query window frees a slot for
-    media_features, VERDICT r4 #1): min-label propagation (`cluster_rep`)
-    and large-star/small-star contraction (`cluster_rep_star`, O(log n)
-    rounds). They must resolve identical components — the driver-twin
-    union-find oracle pins both columns to the same values, so the gate now
-    checks the algorithms against the twin AND against each other."""
-    from ficaria_spark.operators.dedup import (
-        dedup_clusters, dedup_clusters_star, minhash_dedup_pairs)
+    """Near-dup cluster resolution, BOTH routes of ``dedup_clusters`` from
+    one MinHash pair relation: `cluster_rep` from the default call (the
+    driver union-find at gate scales) and `cluster_rep_star` from the
+    distributed large-star/small-star loop (``small_graph_rows=None``).
+    They must resolve identical components — the driver-twin union-find
+    oracle pins both columns to the same values, so the gate checks each
+    route against the twin AND against each other."""
+    from ficaria_spark.operators.dedup import dedup_clusters, minhash_dedup_pairs
     from ficaria_spark.plans.cache import tracked_persist
 
     docs = datagen.load(spark, sf_dir, "documents")
     pairs = tracked_persist(minhash_dedup_pairs(
-        docs, k=3, num_hashes=64, bands=16, threshold=0.5, engine="arrow"))
+        docs, k=3, num_hashes=64, bands=16, threshold=0.5))
     a = dedup_clusters(pairs)
-    # small_graph_rows=None: the GATE deliberately runs the DISTRIBUTED
-    # star loop (r7 — the production operator defaults to a driver
-    # union-find below 1M edges; the gate keeps both distributed CC
-    # algorithms oracle-checked end-to-end)
-    b = dedup_clusters_star(pairs, small_graph_rows=None).withColumnRenamed(
+    b = dedup_clusters(pairs, small_graph_rows=None).withColumnRenamed(
         "cluster_rep", "cluster_rep_star")
     return a.join(b, "doc_id")
 
@@ -1263,18 +1252,17 @@ def sessionize_prod_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_clusters_star_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only (NOT in the driver registry — VERDICT r5 #5): the star-only
-    production path of cluster resolution. The gate query above deliberately
-    runs BOTH CC algorithms to cross-check them, which doubles its wall; the
-    100× plan is pairs → large-star/small-star alone, and this is the shape
-    the headline bench should track."""
-    from ficaria_spark.operators.dedup import (
-        dedup_clusters_star, minhash_dedup_pairs)
+    """Bench-only (NOT in the driver registry — VERDICT r5 #5): the
+    production path of cluster resolution, one default ``dedup_clusters``
+    call (the size probe picks the route). The gate query above deliberately
+    runs BOTH routes to cross-check them, which doubles its wall; this is
+    the shape the headline bench should track. The name predates the
+    single operator and stays because bench.py imports it."""
+    from ficaria_spark.operators.dedup import dedup_clusters, minhash_dedup_pairs
 
     docs = datagen.load(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(
-        docs, k=3, num_hashes=64, bands=16, threshold=0.5, engine="arrow")
-    return dedup_clusters_star(pairs)
+    pairs = minhash_dedup_pairs(docs, k=3, num_hashes=64, bands=16, threshold=0.5)
+    return dedup_clusters(pairs)
 
 
 @register("media_features")

@@ -473,39 +473,83 @@ def test_blocked_pairwise_correct_over_parquet_source(spark, tmp_path):
                       _topk_reference(M, 3))
 
 
-def test_minhash_engines_identical(spark):
-    """JVM fold and Arrow/NumPy engines compute the SAME hash family — the
-    signatures must be identical element-for-element (and for both shingle
-    hashes)."""
-    sdf, _ = _docs(spark, n=30)
+def _minhash_reference(texts, shingle_hash, *, k=3, num_hashes=64, seed=13):
+    """Driver numpy twin of minhash_signatures: the engine's tokenization
+    (trim spaces, split on the ASCII whitespace class), distinct k-gram
+    shingles (positional combo of per-word XXH64, or md5 hex of the joined
+    k-gram), then per-hash minima of (a·x + b) mod p. None for null text."""
+    import hashlib
+    import re
+
+    from ficaria_spark.functions.xxh import spark_xxhash64_str
+
+    p = dd._MERSENNE
+    a, b = dd._hash_params(num_hashes, seed)
+    coefs = np.random.default_rng(seed + 101).integers(1, p, size=k, dtype=np.int64)
+    out = []
+    for text in texts:
+        if text is None:
+            out.append(None)
+            continue
+        w = re.split("[ \t\n\x0b\f\r]+", text.strip(" "))
+        if shingle_hash == "md5":
+            sh = np.array([
+                int(hashlib.md5(" ".join(w[i:i + k]).encode()).hexdigest()[:15], 16) % p
+                for i in range(max(len(w) - k, 0) + 1)], dtype=np.int64)
+        else:
+            wh = np.array([spark_xxhash64_str(x) % p for x in w], dtype=np.int64)
+            m = len(wh) - k + 1
+            if m > 0:
+                sh = sum((wh[j:j + m] * coefs[j]) % p for j in range(k)) % p
+            else:
+                sh = wh[:1]
+        sh = np.unique(sh)
+        out.append(((sh[:, None] * a[None, :] + b[None, :]) % p).min(axis=0))
+    return out
+
+
+def test_minhash_signatures_match_numpy_reference(spark):
+    """The Arrow signing kernel equals a driver numpy reference for both
+    shingle hashes — on normal docs, a null-text doc, a one-word doc and a
+    giant doc with more distinct shingles than the kernel's chunk, which is
+    signed as a group of its own."""
+    rng = np.random.default_rng(8)
+    gw = [f"g{int(i)}" for i in rng.integers(0, 3000, size=5000)]
+    giant = " ".join(gw)
+    _, pdf = _docs(spark, n=8)
+    texts = list(pdf.text[:3]) + [None, "solitary", giant] + list(pdf.text[3:])
+    frame = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    sdf = spark.createDataFrame(frame, "doc_id long, text string")
+    chunk = max(512, 2_000_000 // (64 * 8))
+    assert len(set(zip(gw, gw[1:], gw[2:]))) > chunk
     for shash in ("xxhash64", "md5"):
-        a = dd.minhash_signatures(sdf, shingle_hash=shash, engine="jvm") \
-              .orderBy("id").toPandas()
-        b = dd.minhash_signatures(sdf, shingle_hash=shash, engine="arrow") \
-              .orderBy("id").toPandas()
-        assert list(a.id) == list(b.id)
-        for x, y in zip(a.signature, b.signature):
-            assert list(x) == list(y), shash
+        got = dd.minhash_signatures(sdf, shingle_hash=shash).orderBy("id").toPandas()
+        exp = _minhash_reference(texts, shash)
+        assert list(got.id) == list(range(len(texts)))
+        for did, sig, ref in zip(got.id, got.signature, exp):
+            if ref is None:
+                assert sig is None, (shash, did)
+            else:
+                assert list(sig) == ref.tolist(), (shash, did)
 
 
-def test_minhash_null_text_yields_null_signature_both_engines(spark):
-    """Null-text docs must get a NULL signature in BOTH engines (the arrow
-    kernel used to emit an all-sentinel signature, bucketing every null doc
-    together as est_jaccard=1.0 candidates — ADVICE r2)."""
+def test_minhash_null_text_yields_null_signature(spark):
+    """Null-text docs must get a NULL signature (the arrow kernel used to
+    emit an all-sentinel signature, bucketing every null doc together as
+    est_jaccard=1.0 candidates — ADVICE r2)."""
     from pyspark.sql import functions as F
 
     sdf, _ = _docs(spark, n=6)
     sdf = sdf.withColumn(
         "text", F.when(F.col("doc_id") % 3 == 0, F.lit(None)).otherwise(F.col("text")))
-    for eng in ("jvm", "arrow"):
-        out = dd.minhash_signatures(sdf, engine=eng).orderBy("id").toPandas()
-        for did, sig in zip(out.id, out.signature):
-            if did % 3 == 0:
-                assert sig is None, (eng, did)
-            else:
-                assert sig is not None and len(sig) == 64, (eng, did)
+    out = dd.minhash_signatures(sdf).orderBy("id").toPandas()
+    for did, sig in zip(out.id, out.signature):
+        if did % 3 == 0:
+            assert sig is None, did
+        else:
+            assert sig is not None and len(sig) == 64, did
     # and null docs never surface as candidate pairs
-    pairs = dd.minhash_dedup_pairs(sdf, threshold=0.0, engine="arrow").toPandas()
+    pairs = dd.minhash_dedup_pairs(sdf, threshold=0.0).toPandas()
     assert not ((pairs.id_a % 3 == 0) | (pairs.id_b % 3 == 0)).any()
 
 
@@ -585,45 +629,81 @@ def test_operator_caches_released(spark):
     assert not (set(jsc.getPersistentRDDs().keySet().toArray()) - baseline)
 
 
+def _cc_reference(pairs):
+    """Pure-Python union-find: {doc_id: min id of its component} over the
+    non-self pairs (an id seen only in self-pairs is not emitted)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _cc_both_routes(spark, pairs):
+    """dedup_clusters on the driver union-find route (default probe) and on
+    the forced distributed star route, each as {doc_id: cluster_rep}."""
+    sdf = spark.createDataFrame(pairs, "id_a long, id_b long")
+    out = []
+    for kw in ({}, {"small_graph_rows": None}):
+        got = dd.dedup_clusters(sdf, **kw).toPandas()
+        assert got.doc_id.is_unique, kw
+        out.append(dict(zip(got.doc_id, got.cluster_rep)))
+    return out
+
+
 def test_dedup_clusters_matches_union_find(spark):
-    """Min-label propagation must resolve the same components as a python
-    union-find: triangle, 6-node chain (exercises multi-round propagation),
-    and a 2-node island."""
-    pairs = pd.DataFrame({
-        "id_a": [1, 2, 1, 10, 11, 12, 13, 14, 50],
-        "id_b": [2, 3, 3, 11, 12, 13, 14, 15, 51],
-    })
-    sdf = spark.createDataFrame(pairs)
-    got = dd.dedup_clusters(sdf).toPandas()
-    exp = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10,
-           50: 50, 51: 50}
-    assert dict(zip(got.doc_id, got.cluster_rep)) == exp
-
-
-def test_dedup_clusters_star_matches_label_propagation(spark):
-    """Large-star/small-star must resolve identical components to min-label
-    propagation — including a 30-node chain (adversarial diameter, the case
-    star contraction exists for) and random clustered pair graphs."""
+    """Both routes of dedup_clusters, with the default caps, resolve the
+    components of a pure-Python union-find: triangle + 6-node chain +
+    island; a 30-node chain with random clustered blobs; a 100-node chain
+    with shuffled ids; and hostile inputs — duplicate pair rows, reversed
+    orientation (id_a > id_b), self-pairs, and an empty pair frame."""
     rng = np.random.default_rng(17)
-    chain = [(i, i + 1) for i in range(100, 130)]
+    chain100 = [int(x) for x in rng.permutation(100) + 1000]
     blobs = []
     for base in (500, 600, 700):
         members = base + rng.choice(40, size=12, replace=False)
         for i in range(len(members) - 1):
             blobs.append((int(members[i]), int(members[i + 1])))
-    pairs = pd.DataFrame(chain + blobs, columns=["id_a", "id_b"])
-    sdf = spark.createDataFrame(pairs)
-    a = dd.dedup_clusters(sdf, max_iter=40).toPandas()
-    # r7: both routes — the driver union-find (default, small graphs) and
-    # the forced distributed star loop — must agree with min-label
-    b = dd.dedup_clusters_star(sdf).toPandas()
-    c = dd.dedup_clusters_star(sdf, small_graph_rows=None).toPandas()
-    ma = dict(zip(a.doc_id, a.cluster_rep))
-    mb = dict(zip(b.doc_id, b.cluster_rep))
-    mc = dict(zip(c.doc_id, c.cluster_rep))
-    assert ma == mb == mc
-    # the chain resolves to its minimum
-    assert all(ma[i] == 100 for i in range(100, 131))
+    inputs = {
+        "triangle_chain_island": [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12),
+                                  (12, 13), (13, 14), (14, 15), (50, 51)],
+        "chain30_blobs": [(i, i + 1) for i in range(100, 130)] + blobs,
+        "chain100": list(zip(chain100, chain100[1:])),
+        "duplicates": [(1, 2), (1, 2), (2, 3), (2, 3), (2, 3), (7, 8), (7, 8)],
+        "reversed": [(2, 1), (3, 2), (1, 3), (9, 4), (4, 9), (6, 5)],
+        "self_pairs": [(1, 1), (1, 2), (2, 2), (7, 7), (8, 8), (8, 9)],
+        "empty": [],
+    }
+    for name, pairs in inputs.items():
+        exp = _cc_reference(pairs)
+        driver, star = _cc_both_routes(spark, pairs)
+        assert driver == exp, name
+        assert star == exp, name
+    # the pinned semantics behind those references
+    assert _cc_reference(inputs["triangle_chain_island"]) == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10,
+        50: 50, 51: 50}
+    assert _cc_reference(inputs["self_pairs"]) == {1: 1, 2: 1, 8: 8, 9: 8}
+    assert _cc_reference(inputs["chain100"]) == {i: 1000 for i in chain100}
+    assert _cc_reference([]) == {}
+
+
+def test_dedup_clusters_star_raises_when_max_iter_exhausted(spark):
+    """The star loop fails loudly instead of returning unconverged labels."""
+    sdf = spark.createDataFrame([(i, i + 1) for i in range(30)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match=r"max_iter=1 .*\d+ edges"):
+        dd.dedup_clusters(sdf, small_graph_rows=None, max_iter=1)
 
 
 def test_shingles_null_text_emits_no_rows_both_hash_families(spark):
