@@ -665,20 +665,14 @@ def _cc_both_routes(spark, pairs):
 def test_dedup_clusters_matches_union_find(spark):
     """Both routes of dedup_clusters, with the default caps, resolve the
     components of a pure-Python union-find: triangle + 6-node chain +
-    island; a 30-node chain with random clustered blobs; a 100-node chain
-    with shuffled ids; and hostile inputs — duplicate pair rows, reversed
-    orientation (id_a > id_b), self-pairs, and an empty pair frame."""
+    island; a 100-node chain with shuffled ids; and hostile inputs —
+    duplicate pair rows, reversed orientation (id_a > id_b), self-pairs,
+    and an empty pair frame."""
     rng = np.random.default_rng(17)
     chain100 = [int(x) for x in rng.permutation(100) + 1000]
-    blobs = []
-    for base in (500, 600, 700):
-        members = base + rng.choice(40, size=12, replace=False)
-        for i in range(len(members) - 1):
-            blobs.append((int(members[i]), int(members[i + 1])))
     inputs = {
         "triangle_chain_island": [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12),
                                   (12, 13), (13, 14), (14, 15), (50, 51)],
-        "chain30_blobs": [(i, i + 1) for i in range(100, 130)] + blobs,
         "chain100": list(zip(chain100, chain100[1:])),
         "duplicates": [(1, 2), (1, 2), (2, 3), (2, 3), (2, 3), (7, 8), (7, 8)],
         "reversed": [(2, 1), (3, 2), (1, 3), (9, 4), (4, 9), (6, 5)],
@@ -697,6 +691,26 @@ def test_dedup_clusters_matches_union_find(spark):
     assert _cc_reference(inputs["self_pairs"]) == {1: 1, 2: 1, 8: 8, 9: 8}
     assert _cc_reference(inputs["chain100"]) == {i: 1000 for i in chain100}
     assert _cc_reference([]) == {}
+
+
+def test_dedup_clusters_star_matches_label_propagation(spark):
+    """The distributed large-star/small-star route must resolve the same
+    labels as the driver union-find route and the pure-Python reference
+    (the minimum-label components that min-label propagation used to
+    compute) on a 30-node chain (adversarial diameter, the case star
+    contraction exists for) plus random clustered pair graphs."""
+    rng = np.random.default_rng(17)
+    chain = [(i, i + 1) for i in range(100, 130)]
+    blobs = []
+    for base in (500, 600, 700):
+        members = base + rng.choice(40, size=12, replace=False)
+        for i in range(len(members) - 1):
+            blobs.append((int(members[i]), int(members[i + 1])))
+    pairs = chain + blobs
+    driver, star = _cc_both_routes(spark, pairs)
+    assert star == driver == _cc_reference(pairs)
+    # the chain resolves to its minimum
+    assert all(star[i] == 100 for i in range(100, 131))
 
 
 def test_dedup_clusters_star_raises_when_max_iter_exhausted(spark):
