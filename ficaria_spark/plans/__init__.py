@@ -1,1 +1,2 @@
-"""Execution-plan utilities: lineage manifests, checkpoint resume, metrics."""
+"""Execution-plan utilities: lineage manifests + checkpoint resume, operator
+cache release, thin-input widening."""
