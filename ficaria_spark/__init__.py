@@ -28,13 +28,18 @@ __all__ = [
     "get_spark",
     "compat",  # reference-named drop-in surface (see compat.__all__)
     # operator modules (import as ficaria_spark.operators.<x>)
-    # - temporal: pit_backfill, asof_join, lag_lead, sessionize, tumble,
-    #             interpolate_linear
+    # - temporal: pit_backfill, pit_backfill_bounded, asof_join, lag_lead,
+    #             sessionize, sessionize_blocked, tumble, interpolate_linear,
+    #             interval_join, hypertable_rollup
     # - impute:   FCMCentroidImputer, FCMParameterImputer,
     #             FCMRoughParameterImputer, FCMKIterativeImputer,
     #             FCMInterpolationIterativeImputer, FCMDTIterativeImputer
     # - select:   FuzzyGranularitySelector, WeightedFuzzyRoughSelector
-    # - dedup / similarity / text / multimodal / skew / pairwise
-    # plus: pipeline.Pipeline, catalog.Catalog, plans.lineage
+    # - dedup / similarity / text / tokens / sampling / sketch / pairwise
+    # - multimodal: image_features (+ phash64), audio_features,
+    #               video_features, frame_sample
+    # - skew:     salted_agg
+    # plus: pipeline.Pipeline, catalog.Catalog, plans.lineage,
+    #       streaming.backfill
 ]
 __version__ = "0.1.0"

@@ -159,21 +159,3 @@ def write_tokenized_corpus(spark: SparkSession, sf_dir: str, root: str,
     seqs = datagen.tokenized_sequences(spark, sf_dir)
     return cat.write(seqs, "tokenized_sequences",
                      partition_by=[f"bucket({n_buckets}, doc_id)", "source"])
-
-
-def write_bucketed_table(df: DataFrame, name: str, *, path: str, key: str,
-                         n_buckets: int, sort: bool = True,
-                         mode: str = "overwrite") -> None:
-    """Spark-native bucketed external table (metastore-registered).
-
-    Co-locates rows by ``hash(key) % n_buckets`` at WRITE time, so any join
-    or aggregation on ``key`` between tables bucketed with the same key and
-    bucket count runs SHUFFLE-FREE — the 100 TB answer for dimensions that
-    are repeatedly joined on the same key (doc_id lookups, signature → doc
-    re-ranks). ``sort=True`` also sorts within buckets, letting SortMergeJoin
-    skip its per-task sort. Verified by tests/test_catalog.py: the joined
-    plan contains no Exchange on either side."""
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.option("path", path).saveAsTable(name)

@@ -916,8 +916,9 @@ def hamming_near_pairs(sigs: DataFrame, *, id_col: str = "id",
     ``max_hamming + 1`` contiguous slices, so any pair within the radius
     agrees on at least one full band; candidates join only inside band
     buckets (guaranteed recall), then an exact ``bit_count(xor)`` verify.
-    Shared by the text (simhash) and image (phash) near-dup operators —
-    returns (id_a, id_b, hamming). Input should be persisted by the
+    Shared by the text near-dup operator (simhash_near_pairs) and image
+    phash frames (image_features(with_phash=True)) — returns (id_a, id_b,
+    hamming). Input should be persisted by the
     caller when the signature is expensive (both sides of the self-join
     reference it)."""
     if not 0 <= max_hamming <= 31:
@@ -960,8 +961,8 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc
                        *, max_hamming: int = 3, seed: int = 29,
                        word_hash: str = "xxhash64") -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming via banded pigeonhole
-    (see :func:`hamming_near_pairs` — the banding/verify core is shared with
-    the image-phash near-dup operator).
+    (see :func:`hamming_near_pairs` — the banding/verify core also pairs
+    image phash frames).
 
     Cost/recall contract: wider radii mean narrower bands (nbits // bands),
     i.e. coarser buckets and more candidates. That is the price of exact recall;

@@ -1,5 +1,5 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` payloads with
-typed metadata, processed through Arrow-batched ``mapInPandas`` stages.
+"""Multimodal columns: image/audio/video as opaque, self-describing
+``binary`` payloads, processed through Arrow-batched ``mapInPandas`` stages.
 
 The Spark-side plumbing — schemas, batch shapes, partition sizing, UDF
 signatures — is real and tested. Codecs: binary netpbm images (P5/P6),
@@ -11,13 +11,11 @@ external library; all exercised end-to-end by ``synthetic_media_table``);
 the remaining compressed formats (perceptual audio MP3/AAC/Opus, video,
 exotic images) still dispatch to a clearly-marked ``NotImplementedError``
 seam — swap in Pillow/torchaudio/PyAV on a real cluster; nothing else
-changes. A deterministic fake codec remains for payload-agnostic plumbing
-tests.
+changes.
 
 Scale notes: binary payloads dominate I/O — keep them in their own column so
-column pruning skips them unless the stage needs bytes; repartition by size
-budget (``target_batch_mb``) before decode so one Arrow batch stays within
-executor memory.
+column pruning skips them unless the stage needs bytes; repartition by a
+size budget before decode so one Arrow batch stays within executor memory.
 """
 
 from __future__ import annotations
@@ -29,14 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-IMAGE_META_SCHEMA = T.StructType([
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("channels", T.IntegerType()),
-    T.StructField("format", T.StringType()),
-])
 
 def _schema_minus(df: DataFrame, drop_col: str, extras: str) -> str:
     """DDL schema string: ``df``'s fields minus ``drop_col``, plus
@@ -45,13 +36,6 @@ def _schema_minus(df: DataFrame, drop_col: str, extras: str) -> str:
     kept = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                      for f in df.schema.fields if f.name != drop_col)
     return f"{kept}, {extras}" if kept else extras
-
-
-AUDIO_META_SCHEMA = T.StructType([
-    T.StructField("sample_rate", T.IntegerType()),
-    T.StructField("n_samples", T.LongType()),
-    T.StructField("format", T.StringType()),
-])
 
 
 def decode_netpbm(payload: bytes) -> np.ndarray:
@@ -89,8 +73,8 @@ def decode_netpbm(payload: bytes) -> np.ndarray:
 
 
 def encode_netpbm(img: np.ndarray) -> bytes:
-    """Inverse of :func:`decode_netpbm` (used by tests and the resize
-    round-trip): uint8 (h, w, 1|3) or 2-D gray (h, w) → P5/P6 bytes.
+    """Inverse of :func:`decode_netpbm` (used by the synthetic media
+    table and tests): uint8 (h, w, 1|3) or 2-D gray (h, w) → P5/P6 bytes.
     Any other channel count raises — netpbm has no 2- or 4-channel form,
     and writing one would round-trip to silently interleaved garbage."""
     if img.ndim == 2:
@@ -372,78 +356,20 @@ def phash64(img: np.ndarray) -> int:
     return v - (1 << 64) if v >= 1 << 63 else v
 
 
-def image_phash(
-    df: DataFrame, *, payload_col: str = "payload",
-    use_fake_codec: bool = False, fake_dims: tuple[int, int, int] = (32, 32, 3),
-) -> DataFrame:
-    """Decode → :func:`phash64` per row (``phash`` bigint; payload column
-    dropped on output — same stage contract as image_features). Null
-    payloads yield null phash, never a dead stage."""
-    schema = _schema_minus(df, payload_col, "phash bigint")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes: list[int | None] = []
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    hashes.append(None)
-                    continue
-                img = (_decode_image_fake(bytes(payload), *fake_dims)
-                       if use_fake_codec
-                       else _decode_image_real(bytes(payload)))
-                hashes.append(phash64(img))
-            out = pdf.drop(columns=[payload_col]).copy()
-            out["phash"] = pd.array(hashes, dtype="Int64")
-            yield out
-
-    return df.mapInPandas(run, schema)
-
-
-def image_near_pairs(
-    df: DataFrame, *, id_col: str = "item_id", payload_col: str = "payload",
-    max_hamming: int = 10, use_fake_codec: bool = False,
-) -> DataFrame:
-    """Near-duplicate IMAGE pairs: perceptual hash + the same banded
-    pigeonhole Hamming join the text family uses
-    (dedup.hamming_near_pairs — guaranteed recall at the radius, exact
-    bit_count verify). 100 TB shape: the payload column is dropped at the
-    phash stage, so only (id, 8-byte hash) ever shuffles; candidates join
-    inside band buckets only. Returns (id_a, id_b, hamming)."""
-    from ficaria_spark.operators.dedup import hamming_near_pairs
-    from ficaria_spark.plans.cache import tracked_persist
-
-    sigs = image_phash(df.select(id_col, payload_col),
-                       payload_col=payload_col,
-                       use_fake_codec=use_fake_codec)
-    sigs = tracked_persist(sigs.where(F.col("phash").isNotNull()))
-    return hamming_near_pairs(sigs, id_col=id_col, hash_col="phash",
-                              max_hamming=max_hamming)
-
-
-def _decode_image_fake(payload: bytes, width: int, height: int, channels: int) -> np.ndarray:
-    """Deterministic stand-in: pixels derived from the payload digest, so
-    downstream feature math is real and reproducible."""
-    digest = hashlib.sha256(payload).digest()
-    rng = np.random.default_rng(int.from_bytes(digest[:8], "big"))
-    return rng.integers(0, 256, size=(height, width, channels), dtype=np.uint8)
-
-
 def image_features(
-    df: DataFrame, *, payload_col: str = "payload", meta_col: str | None = "meta",
-    use_fake_codec: bool = True, with_phash: bool = False,
+    df: DataFrame, *, payload_col: str = "payload", with_phash: bool = False,
 ) -> DataFrame:
     """Decode → per-channel mean/std + 8-bucket luminance histogram.
 
-    One mapInPandas pass; output drops the payload (features only), so the
-    binary column never shuffles. ``meta_col=None`` is allowed with the real
-    codec (self-describing payloads like netpbm carry their own dimensions).
-    ``with_phash=True`` also emits :func:`phash64` from the SAME decode —
-    callers needing both features and the perceptual hash (e.g. the media
-    gate) avoid a second decode pass.
+    One mapInPandas pass through the real codecs (:func:`_decode_image_real`
+    dispatches netpbm/PNG/JPEG/WebP/TIFF by magic bytes; every payload is
+    self-describing, so no metadata column is needed). Output drops the
+    payload (features only), so the binary column never shuffles. A null
+    payload yields NaN features (and a null ``phash``) instead of failing
+    the stage. ``with_phash=True`` also emits :func:`phash64` from the SAME
+    decode — callers needing both features and the perceptual hash (e.g.
+    the media gate) avoid a second decode pass.
     """
-    if meta_col is None and use_fake_codec:
-        raise ValueError("meta_col=None requires use_fake_codec=False "
-                         "(the fake codec needs width/height/channels)")
     extras = ("chan_mean array<double>, chan_std array<double>, "
               "lum_hist array<double>")
     if with_phash:
@@ -455,8 +381,7 @@ def image_features(
         for pdf in batches:
             means, stds, hists = [], [], []
             hashes: list[int | None] = []
-            metas = pdf[meta_col] if meta_col is not None else [None] * len(pdf)
-            for payload, meta in zip(pdf[payload_col], metas):
+            for payload in pdf[payload_col]:
                 if payload is None:
                     # corrupt/failed-fetch row must not kill the stage
                     # (same policy as audio_features): NaN features,
@@ -465,11 +390,7 @@ def image_features(
                     hists.append([float("nan")] * 8)
                     hashes.append(None)
                     continue
-                if use_fake_codec:
-                    img = _decode_image_fake(
-                        payload, meta["width"], meta["height"], meta["channels"])
-                else:
-                    img = _decode_image_real(payload)
+                img = _decode_image_real(payload)
                 px = img.reshape(-1, img.shape[-1]).astype(np.float64)
                 means.append(px.mean(axis=0))
                 stds.append(px.std(axis=0))
@@ -484,45 +405,6 @@ def image_features(
             out["lum_hist"] = hists
             if with_phash:
                 out["phash"] = pd.array(hashes, dtype="Int64")
-            yield out
-
-    return df.mapInPandas(run, schema)
-
-
-def resize_images(
-    df: DataFrame, *, payload_col: str = "payload", meta_col: str = "meta",
-    target: tuple[int, int] = (64, 64), use_fake_codec: bool = True,
-) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-emit raw bytes + updated meta.
-    Demonstrates the binary-in/binary-out stage shape."""
-    # same schema out as in — pass the StructType itself (a simpleString
-    # round-trip drops nullability/metadata and breaks on quoted names)
-    schema = df.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        th, tw = target
-        for pdf in batches:
-            payloads, metas = [], []
-            for payload, meta in zip(pdf[payload_col], pdf[meta_col]):
-                if payload is None:
-                    # null in, null out — a corrupt row survives the stage
-                    payloads.append(None)
-                    metas.append(meta)
-                    continue
-                if use_fake_codec:
-                    img = _decode_image_fake(
-                        payload, meta["width"], meta["height"], meta["channels"])
-                else:
-                    img = _decode_image_real(payload)
-                ys = (np.arange(th) * img.shape[0] // th)
-                xs = (np.arange(tw) * img.shape[1] // tw)
-                resized = img[ys][:, xs]
-                payloads.append(resized.tobytes())
-                metas.append({"width": tw, "height": th,
-                              "channels": meta["channels"], "format": "raw"})
-            out = pdf.copy()
-            out[payload_col] = payloads
-            out[meta_col] = metas
             yield out
 
     return df.mapInPandas(run, schema)
@@ -837,21 +719,3 @@ def synthetic_media_table(spark, n: int = 32, seed: int = 6) -> DataFrame:
     # mapInPandas stage spins one Python worker PER near-empty partition
     # (measured: 7.8 s cold for 32 rows at 32 partitions vs ~1 s coalesced)
     return spark.createDataFrame(tbl).coalesce(max(1, min(4, n // 8)))
-
-
-def synthetic_image_table(spark, n: int = 64, seed: int = 5) -> DataFrame:
-    """Deterministic fake multimodal table for tests/benchmarks:
-    (item_id, payload binary, meta struct)."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        w, h = int(rng.integers(16, 48)), int(rng.integers(16, 48))
-        payload = rng.integers(0, 256, size=64, dtype=np.uint8).tobytes()
-        rows.append((i, bytearray(payload), {"width": w, "height": h,
-                                             "channels": 3, "format": "fake"}))
-    schema = T.StructType([
-        T.StructField("item_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", IMAGE_META_SCHEMA),
-    ])
-    return spark.createDataFrame(rows, schema)

@@ -1,11 +1,13 @@
-"""Skew handling: salted repartition / salted aggregation.
+"""Skew handling: salted two-phase aggregation.
 
 AQE's skew-join splitting (enabled in session.py) handles skewed *joins* at
 runtime, but skewed *aggregations* (a hot ``doc_id`` or ``source`` absorbing
-most rows of a groupBy) still serialize into one task. ``salted_agg`` does the
-classic two-phase rewrite: partial-aggregate on (key, salt), then final-
-aggregate on key — turning one hot reducer into ``n_salts`` parallel ones at
-the cost of a second (tiny) shuffle.
+most rows of a groupBy) still serialize into one task. :func:`salted_agg`
+does the classic two-phase rewrite: partial-aggregate on (key, salt), then
+final-aggregate on key — turning one hot reducer into ``n_salts`` parallel
+ones at the cost of a second (tiny) shuffle. The salt is
+``pmod(xxhash64(row), n_salts)``, so results are deterministic and equal to
+the plain groupBy (the ``salted_agg`` gate slot's oracle).
 """
 
 from __future__ import annotations
@@ -17,18 +19,6 @@ from pyspark.sql import functions as F
 
 # Aggregates that re-combine with themselves (partial = final function).
 _SELF_COMBINING = {"sum", "min", "max", "count"}
-
-
-def salt_rebalance(df: DataFrame, key: str | Sequence[str], n_salts: int,
-                   salt_col: str = "__salt") -> DataFrame:
-    """Add a deterministic salt bucket derived from the full row hash, and
-    repartition on (key, salt). Use before an order-insensitive wide op whose
-    key is skewed."""
-    keys = [key] if isinstance(key, str) else list(key)
-    salted = df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    )
-    return salted.repartition(*[F.col(c) for c in keys], F.col(salt_col))
 
 
 def salted_agg(

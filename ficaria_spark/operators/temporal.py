@@ -1,5 +1,6 @@
 """Temporal kernel: point-in-time backfill, as-of join, lag/lead, sessionize,
-tumbling/sliding windows, linear interpolation.
+tumbling/sliding windows, linear interpolation, interval join and
+multi-resolution rollup.
 
 These are the engine's core operators. The reference library's only
 order-sensitive operation is column-wise ``DataFrame.interpolate(axis=0,
@@ -7,16 +8,17 @@ limit_direction='both')`` (reference: ficaria/missing_imputation.py:1141);
 everything else here generalizes that into the leakage-free temporal feature
 pipeline the engine is specified to provide.
 
-All operators are pure ``pyspark.sql`` — window functions over
-``Window.partitionBy(entity).orderBy(ts)`` — so they stay inside Tungsten /
+All operators are pure ``pyspark.sql``. The ordered ones are window functions
+over ``Window.partitionBy(entity).orderBy(ts)``, so they stay inside Tungsten /
 whole-stage codegen with exactly one shuffle (the window exchange on the
-entity key). No Python UDFs anywhere in this module.
+entity key); the as-of join is the same window over a union of both sides.
+No Python UDFs anywhere in this module (plan-asserted in tests/test_plans.py).
 
 Scale notes (100 TB):
 * One shuffle per distinct partitioning — chain multiple window ops over the
   same (entity, ts) ordering and Catalyst reuses a single Exchange+Sort.
 * A hot entity (skewed ``doc_id``) serializes its window into one task. Where
-  semantics allow pre-aggregation, use :func:`salted` from
+  semantics allow pre-aggregation, use :func:`salted_agg` from
   ``operators.skew`` to split the entity; for the order-dependent ops the
   bounded-carry rewrites :func:`sessionize_blocked` and
   :func:`pit_backfill_bounded` (``method="blocked"``) split one entity's
@@ -41,22 +43,6 @@ def _w(entity: str | Sequence[str], order: str | Sequence[str]) -> WindowSpec:
     ent = [entity] if isinstance(entity, str) else list(entity)
     ords = [order] if isinstance(order, str) else list(order)
     return Window.partitionBy(*ent).orderBy(*[F.col(c).asc() for c in ords])
-
-
-def range_partition(df: DataFrame, entity: str | Sequence[str], ts: str,
-                    *, num_partitions: int | None = None) -> DataFrame:
-    """Range-partition by (entity, ts) ahead of the window kernel.
-
-    With AQE the window's hash exchange is usually fine; explicit range
-    partitioning helps when (a) downstream writes should be time-clustered,
-    or (b) the same ordering is reused across many window stages and you
-    want locality-friendly file output. Pure layout — no semantic effect.
-    """
-    ent = [entity] if isinstance(entity, str) else list(entity)
-    cols = [F.col(c) for c in (*ent, ts)]
-    if num_partitions:
-        return df.repartitionByRange(num_partitions, *cols)
-    return df.repartitionByRange(*cols)
 
 
 def pit_backfill(
@@ -404,6 +390,11 @@ def asof_join(
     ``strict=False`` right rows sort *before* left rows at equal ``on`` (so an
     exact-timestamp right row is visible); with ``strict=True`` they sort
     *after* (so it is not).
+
+    ``tolerance_seconds`` drops matches older than the bound (inclusive).
+    Staleness is integer microseconds (``round(tolerance_seconds·1e6)``), as
+    in :func:`pit_backfill_bounded`, so a match exactly at the bound is kept
+    whatever the timestamps' float rounding.
     """
     by = [by] if isinstance(by, str) else list(by)
     lcols = left.columns
@@ -412,7 +403,7 @@ def asof_join(
     # value columns are all NULL still counts as a match (merge_asof parity);
     # last(ignorenulls) skips only rows with no struct (i.e. left rows).
     r_struct = F.struct(
-        F.col(on).alias("__ts"), *[F.col(c).alias(c) for c in value_cols]
+        _ep_us(right, on).alias("__ep"), *[F.col(c).alias(c) for c in value_cols]
     )
     lhs = left.select(
         *lcols,
@@ -427,11 +418,11 @@ def asof_join(
         F.lit(tag_right).alias("__side"),
         r_struct.alias("__r"),
     )
-    # SQL null-join semantics (pinned, same as asof_join_cogroup): a null
-    # entity key matches NOTHING. Window.partitionBy groups nulls into one
-    # partition, so without this filter a null-key right row would leak its
-    # value to null-key left rows (found by the r6 hypothesis sweep). Left
-    # rows with null keys stay in the output with null as-of values.
+    # SQL null-join semantics (pinned): a null entity key matches NOTHING.
+    # Window.partitionBy groups nulls into one partition, so without this
+    # filter a null-key right row would leak its value to null-key left rows
+    # (found by the r6 hypothesis sweep). Left rows with null keys stay in
+    # the output with null as-of values.
     for c in by:
         rhs = rhs.where(F.col(c).isNotNull())
     unioned = lhs.unionByName(rhs)
@@ -447,125 +438,12 @@ def asof_join(
     )
     out = picked.where(F.col("__side") == 1)
     if tolerance_seconds is not None:
-        in_tol = (
-            F.col(on).cast("double") - F.col("__m.__ts").cast("double")
-        ) <= F.lit(float(tolerance_seconds))
+        tol_us = int(round(float(tolerance_seconds) * 1_000_000))
+        in_tol = _ep_us(out, on) - F.col("__m.__ep") <= F.lit(tol_us)
         out = out.withColumn("__m", F.when(in_tol, F.col("__m")))
     for c in value_cols:
         out = out.withColumn(f"{c}{suffix}", F.col(f"__m.{c}"))
     return out.drop("__side", "__m")
-
-
-def asof_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    by: str,
-    value_cols: Sequence[str],
-    strict: bool = False,
-    suffix: str = "_asof",
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """As-of join via ``cogroup().applyInPandas(pd.merge_asof)``.
-
-    Parity variant matching pandas ``merge_asof`` semantics exactly
-    (``allow_exact_matches=not strict``). Prefer :func:`asof_join` at scale —
-    this one materializes pandas frames per group.
-
-    Entities are HASH-BUCKETED into ``num_buckets`` cogroup keys (default
-    4 × defaultParallelism) and the kernel runs one vectorized
-    ``merge_asof(..., by=entity)`` per bucket: per-entity semantics are
-    unchanged, but the task count is bounded by the bucket count instead of
-    the entity cardinality — cogrouping millions of tiny per-entity frames
-    spends more time scheduling than merging (measured 10 s → ~1 s on 10k
-    entities; same effect at 100× scale)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    # build the output StructType from COPIED field lists (StructType.add
-    # would mutate the live schema; a simpleString round-trip drops
-    # nullability and breaks on names needing backtick quoting)
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [T.StructField(f"{c}{suffix}", right.schema[c].dataType, True)
-           for c in value_cols])
-    out_names = [f.name for f in left.schema.fields] + [
-        f"{c}{suffix}" for c in value_cols]
-    out_cols = [f"{c}{suffix}" for c in value_cols]
-    nb = num_buckets or max(1, 4 * left.sparkSession.sparkContext.defaultParallelism)
-    bkt = lambda c: F.pmod(F.xxhash64(F.col(c)), F.lit(nb))  # noqa: E731
-    # fresh attribute names on the right side: a shared-lineage right frame
-    # gets its payload columns pruned away under cogroup otherwise (same
-    # Catalyst behavior worked around in operators/pairwise.py)
-    r_sel = right.select(
-        F.col(by).alias("__r_by"), F.col(on).alias("__r_on"),
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
-    ).withColumn("__bkt", bkt("__r_by"))
-    l_sel = left.withColumn("__bkt", bkt(by))
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf):
-            return pd.DataFrame(columns=out_names)
-        # merge_asof(by=...) needs both frames sorted by `on` (globally,
-        # not per entity); stable sort keeps input order among on-ties,
-        # matching the previous per-entity variant
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        if not len(rpdf):
-            out = lpdf.copy()
-            for c in out_cols:
-                out[c] = np.nan
-            return out[out_names]
-        rpdf = rpdf.sort_values("__r_on", kind="mergesort")[
-            ["__r_by", "__r_on", *[f"__r_{c}" for c in value_cols]]
-        ].rename(columns={"__r_by": by, "__r_on": on,
-                          **{f"__r_{c}": f"{c}{suffix}" for c in value_cols}})
-        l_null = lpdf[by].isna()
-        if (lpdf[by].dtype != rpdf[by].dtype
-                or l_null.any() or rpdf[by].isna().any()):
-            # a null entity on ONE side makes Arrow hand that side float64
-            # while the other stays int64, and merge_asof refuses mixed key
-            # dtypes; when BOTH sides carry nulls the dtypes agree (float64)
-            # but whether a NaN left key matches a NaN right key would then
-            # ride on pandas' float-factorization internals
-            # (version-dependent) — so whenever any null is present: coerce
-            # to object (value comparison, 5 == 5.0, no precision loss on
-            # big ids) and DROP null-key right rows, pinning SQL null-join
-            # semantics (a null key matches nothing; null-key left rows stay
-            # in the output with null as-of values)
-            lpdf = lpdf.assign(**{by: lpdf[by].astype(object)})
-            rpdf = rpdf[rpdf[by].notna()]
-            rpdf = rpdf.assign(**{by: rpdf[by].astype(object)})
-            if l_null.any():
-                # None == None would still match in pandas' hashtable; give
-                # each null LEFT key a unique unmatchable sentinel instead
-                key = lpdf[by].copy()
-                sentinels = pd.Series(
-                    [("__null__", i) for i in range(int(l_null.sum()))],
-                    dtype=object, index=key.index[l_null.values])
-                key[l_null.values] = sentinels
-                lpdf = lpdf.assign(**{by: key})
-            if not len(rpdf):
-                out = lpdf.assign(**{c: np.nan for c in out_cols})
-                out[by] = out[by].mask(l_null.values, np.nan)
-                return out[out_names]
-        out = pd.merge_asof(
-            lpdf, rpdf, on=on, by=by,
-            allow_exact_matches=not strict, direction="backward",
-        )
-        if l_null.any():
-            # restore the null keys the sentinels stood in for
-            out[by] = out[by].mask(
-                out[by].map(lambda v: isinstance(v, tuple)), np.nan)
-        return out[out_names]
-
-    return (
-        l_sel.groupBy("__bkt")
-        .cogroup(r_sel.groupBy("__bkt"))
-        .applyInPandas(merge, schema=out_schema)
-    )
 
 
 def interpolate_linear(

@@ -1272,7 +1272,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     five scanline filter types (VERDICT r5 #4 — stdlib zlib + numpy
     unfiltering, operators/multimodal.decode_png), and PCM-16 WAV clips,
     built in-plan from (n=32, seed=6)) through the REAL codecs —
-    image_features(use_fake_codec=False) and audio_features — emitted in
+    image_features and audio_features — emitted in
     long form (item_id, kind, feature, value). Oracle = driver-twin VALUES
     relation computed by oracle_fit.media_features_expected from the same
     generator + decoders (pure numpy/stdlib, no Spark)."""
@@ -1282,8 +1282,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = synthetic_media_table(spark, n=32, seed=6)
     # with_phash: the perceptual hash comes out of the SAME decode pass as
     # the channel features — one decode per payload, not two
-    img = image_features(media.where("kind = 'image'"), meta_col=None,
-                         use_fake_codec=False, with_phash=True)
+    img = image_features(media.where("kind = 'image'"), with_phash=True)
     au = audio_features(media.where("kind = 'audio'"))
     vid = video_features(media.where("kind = 'video'"))
 
@@ -1749,7 +1748,7 @@ def q_pipeline_flagship_fcm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Remaining coverage: skew-safe aggregation (exact oracle — salting must not
-# change results), cogroup merge_asof variant, DT imputer.
+# change results), non-strict as-of join, DT imputer.
 # ---------------------------------------------------------------------------
 
 @register(
@@ -1791,13 +1790,13 @@ ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') r
 """,
 )
 def q_asof_join_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pandas merge_asof variant (allow_exact_matches=True ⇔ DuckDB >=)."""
-    from ficaria_spark.operators.temporal import asof_join_cogroup
-
+    """Non-strict as-of join (``strict=False`` ⇔ DuckDB ``>=``); the
+    ``asof_join`` slot runs the strict form. The slot keeps its name from
+    the retired pandas cogroup variant."""
     ev = datagen.load(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "value")
-    joined = asof_join_cogroup(
+    joined = asof_join(
         clicks, views, on="ts", by="user_id", value_cols=["value"], strict=False)
     return joined.select("event_id", "user_id", _us("ts").alias("ts_us"),
                          F.col("value_asof"))

@@ -1,1 +1,2 @@
-"""Structured Streaming variants of the temporal kernel."""
+"""Structured Streaming face of the temporal kernel: checkpoint-resumable
+point-in-time backfill (:mod:`ficaria_spark.streaming.backfill`)."""

@@ -77,37 +77,6 @@ def test_write_tokenized_corpus(spark, tmp_path, sf_dir):
     assert set(back.columns) == {"doc_id", "tokens", "n_tok", "source"}
 
 
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """Two tables bucketed by the same key/count must SortMergeJoin with NO
-    Exchange on either side (co-located join — the repeated-join scale path).
-    Broadcast is disabled so the test proves bucketing, not broadcasting."""
-    import pandas as pd
-
-    from ficaria_spark.catalog import write_bucketed_table
-
-    a = spark.createDataFrame(pd.DataFrame({
-        "doc_id": range(500), "x": [float(i) for i in range(500)]}))
-    b = spark.createDataFrame(pd.DataFrame({
-        "doc_id": range(0, 500, 2), "y": ["s"] * 250}))
-    spark.sql("DROP TABLE IF EXISTS bk_a")
-    spark.sql("DROP TABLE IF EXISTS bk_b")
-    write_bucketed_table(a, "bk_a", path=str(tmp_path / "a"), key="doc_id", n_buckets=8)
-    write_bucketed_table(b, "bk_b", path=str(tmp_path / "b"), key="doc_id", n_buckets=8)
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bk_a").join(spark.table("bk_b"), "doc_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 250
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bk_a")
-        spark.sql("DROP TABLE IF EXISTS bk_b")
-
-
 def _iceberg_runtime_available(spark) -> bool:
     """True iff an Iceberg runtime jar + catalog are on this session's
     classpath (never in this sandbox; real clusters configure

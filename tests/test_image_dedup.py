@@ -1,9 +1,11 @@
-"""Perceptual image hashing + Hamming-banded image near-dup detection.
+"""Perceptual image hashing + the Hamming-banded near-pair join.
 
 phash64 is the shared kernel/twin function (structural parity inside the
-media gate); image_near_pairs reuses dedup.hamming_near_pairs — the same
-banded pigeonhole the text family uses, so recall at the radius is
-guaranteed by construction and verified here against brute force.
+media gate, where image_features(with_phash=True) emits it);
+dedup.hamming_near_pairs is the banded pigeonhole join under the text
+family's simhash_near_pairs and under image near-dup pairing, so recall at
+the radius is guaranteed by construction and verified here against brute
+force.
 """
 from __future__ import annotations
 
@@ -57,8 +59,7 @@ def test_phash_locality():
 def test_hamming_near_pairs_exact_vs_bruteforce(spark):
     """The generalized banded join returns EXACTLY the pairs within the
     radius for arbitrary signed 64-bit signatures (completeness AND
-    soundness) — the shared core under simhash_near_pairs and
-    image_near_pairs."""
+    soundness) — the shared core under simhash_near_pairs."""
     from ficaria_spark.operators.dedup import hamming_near_pairs
 
     rng = np.random.default_rng(5)
@@ -82,11 +83,15 @@ def test_hamming_near_pairs_exact_vs_bruteforce(spark):
 
 
 def test_image_near_pairs_end_to_end(spark):
-    """Images stored in MIXED lossless formats: perturbed copies pair up
-    within the radius, unrelated images don't, and only (id, hash) ever
-    reaches the join (payload dropped at the phash stage)."""
+    """Images stored in MIXED lossless formats, hashed by
+    image_features(with_phash=True) and paired by the banded join:
+    perturbed copies pair up within the radius, unrelated images and a
+    null-payload row don't."""
+    from pyspark.sql import functions as F
+
+    from ficaria_spark.operators.dedup import hamming_near_pairs
     from ficaria_spark.operators.multimodal import (
-        encode_netpbm, encode_png, image_near_pairs)
+        encode_netpbm, encode_png, image_features)
     from ficaria_spark.operators.webp import encode_webp_lossless
 
     rng = np.random.default_rng(11)
@@ -102,21 +107,27 @@ def test_image_near_pairs_end_to_end(spark):
         (4, None),                                       # corrupt row
     ]
     df = spark.createDataFrame(rows, "item_id long, payload binary")
+    sigs = image_features(df, with_phash=True).where(F.col("phash").isNotNull())
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in image_near_pairs(df, max_hamming=8).collect()}
+             for r in hamming_near_pairs(sigs, id_col="item_id",
+                                         hash_col="phash",
+                                         max_hamming=8).collect()}
     assert (0, 1) in pairs and pairs[(0, 1)] == 0   # format-independent
     assert (0, 2) in pairs and (1, 2) in pairs
     assert all(3 not in p and 4 not in p for p in pairs)
 
 
 def test_image_phash_null_payloads(spark):
-    from ficaria_spark.operators.multimodal import encode_netpbm, image_phash
+    """image_features(with_phash=True) emits phash64 of the decoded pixels
+    and a null hash (not a dead stage) for a null payload."""
+    from ficaria_spark.operators.multimodal import encode_netpbm, image_features
 
     rng = np.random.default_rng(2)
     img = rng.integers(0, 256, size=(9, 9, 3), dtype=np.uint8)
     df = spark.createDataFrame(
         [(0, bytearray(encode_netpbm(img))), (1, None)],
         "item_id long, payload binary")
-    out = {r["item_id"]: r["phash"] for r in image_phash(df).collect()}
+    out = {r["item_id"]: r["phash"]
+           for r in image_features(df, with_phash=True).collect()}
     assert out[0] == phash64(img)
     assert out[1] is None

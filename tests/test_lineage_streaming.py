@@ -1,4 +1,4 @@
-"""Lineage manifests + checkpoint resume + streaming sessionize."""
+"""Lineage manifests + checkpoint resume + stateless text ops on a stream."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from ficaria_spark.plans.lineage import (
     read_output,
     run_with_manifests,
 )
-from ficaria_spark.streaming.sessionize import streaming_sessionize, streaming_tumble
 
 
 def _events(spark, n=500, seed=2):
@@ -158,128 +157,6 @@ def test_manifests_record_code_version_and_run(spark, tmp_path):
     assert len(version) in (40, 64 + len("sha256:")) and wall > 0
     assert m[0]["run_id"] != run_id and m[0]["code_version"] == version
     assert not any("wall_sec" in x or "rows_per_sec" in x for x in m.values())
-
-
-def test_session_window_semantics_match_batch_sessionize(spark):
-    """session_window (streaming op, run in batch mode here) must agree with
-    the batch sessionize on session counts."""
-    import datetime as dt
-
-    from ficaria_spark.operators.temporal import sessionize
-
-    rows = []
-    base = dt.datetime(2024, 1, 1)
-    rng = np.random.default_rng(8)
-    t = base
-    for i in range(200):
-        t = t + dt.timedelta(seconds=int(rng.integers(1, 4000)))
-        rows.append((int(rng.integers(0, 5)), t, float(i)))
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-    sdf = spark.createDataFrame(pdf)
-
-    stream_style = streaming_sessionize(sdf, gap="30 minutes").toPandas()
-    batch = sessionize(sdf, "user_id", "ts", gap_seconds=1800.0)
-    batch_sessions = (
-        batch.groupBy("user_id", "session_seq").count().toPandas()
-    )
-    # same number of sessions per user
-    a = stream_style.groupby("user_id").size().sort_index()
-    b = batch_sessions.groupby("user_id").size().sort_index()
-    assert (a == b).all()
-    # same total events
-    assert stream_style.n_events.sum() == 200
-
-
-def test_streaming_tumble_batch_semantics(spark):
-    sdf, _ = _events(spark)
-    import datetime as dt
-
-    ev = sdf.withColumn(
-        "ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")) + F.make_interval(secs=F.col("rid") * 100)
-    )
-    got = streaming_tumble(ev, width="1 hour", value_col="v").toPandas()
-    assert got.n_events.sum() == 500
-    # 500 events * 100s = ~50000s ≈ 14 hourly buckets
-    assert 13 <= len(got) <= 15
-
-
-def test_streaming_sessionize_runs_as_a_real_stream(spark, tmp_path):
-    """End-to-end Structured Streaming: file source → watermark →
-    session_window agg → memory sink (availableNow). Emitted (watermark-
-    closed) sessions must be a subset of the batch sessionize result."""
-    import datetime as dt
-
-    rng = np.random.default_rng(12)
-    rows = []
-    t = dt.datetime(2024, 1, 1)
-    for i in range(300):
-        t = t + dt.timedelta(seconds=int(rng.integers(1, 3000)))
-        rows.append((int(rng.integers(0, 6)), t, float(i)))
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-    src = str(tmp_path / "in")
-    spark.createDataFrame(pdf).write.parquet(src)
-
-    static = spark.read.parquet(src)
-    stream = spark.readStream.schema(static.schema).parquet(src)
-    agg = streaming_sessionize(stream, gap="30 minutes", watermark="1 hour")
-    q = (
-        agg.writeStream.format("memory").queryName("sess_stream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("sess_stream").toPandas()
-
-    batch = streaming_sessionize(static, gap="30 minutes").toPandas()
-    assert len(got) > 0
-    batch_keys = set(zip(batch.user_id, batch.session_start))
-    got_keys = set(zip(got.user_id, got.session_start))
-    assert got_keys <= batch_keys
-    # watermark-closed sessions must agree exactly with batch on counts
-    merged = got.merge(batch, on=["user_id", "session_start"], suffixes=("_s", "_b"))
-    assert (merged.n_events_s == merged.n_events_b).all()
-
-
-def test_streaming_exact_dedup_end_to_end(spark, tmp_path):
-    """File source → watermark → dropDuplicatesWithinWatermark → memory sink:
-    exactly one survivor per distinct normalized content (duplicates planted
-    within the horizon), and the stateless fingerprint tag matches the batch
-    digest."""
-    import datetime as dt
-
-    from ficaria_spark.streaming.dedup import (
-        streaming_exact_dedup,
-        streaming_fingerprint_tag,
-    )
-
-    t0 = dt.datetime(2024, 3, 1)
-    rows = []
-    for i in range(60):
-        # 20 distinct contents, each appearing 3× within minutes (same horizon)
-        content = f"doc body {i % 20} words here"
-        if i % 20 == 5:
-            content = "Doc  Body 5  words HERE"  # normalization twin of #5
-        rows.append((i, content, t0 + dt.timedelta(minutes=i)))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "ts"])
-    src = str(tmp_path / "docs_in")
-    spark.createDataFrame(pdf).write.parquet(src)
-
-    static = spark.read.parquet(src)
-    stream = spark.readStream.schema(static.schema).parquet(src)
-    deduped = streaming_exact_dedup(stream, watermark="2 hours")
-    q = (
-        deduped.writeStream.format("memory").queryName("dedup_stream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("dedup_stream").toPandas()
-
-    # 20 distinct normalized contents -> exactly 20 survivors
-    assert len(got) == 20
-    assert got.content_hash.nunique() == 20
-
-    tagged = streaming_fingerprint_tag(static).toPandas()
-    assert tagged.content_hash.nunique() == 20
-    assert (tagged.n_tokens >= 4).all()
 
 
 def test_streaming_text_scrub_matches_batch(spark, tmp_path):

@@ -11,12 +11,7 @@ from pyspark.sql import functions as F
 from ficaria_spark.operators import dedup as dd
 from ficaria_spark.operators import similarity as sim
 from ficaria_spark.operators import text as tx
-from ficaria_spark.operators.multimodal import (
-    frame_sample,
-    image_features,
-    resize_images,
-    synthetic_image_table,
-)
+from ficaria_spark.operators.multimodal import frame_sample, image_features
 
 
 def _docs(spark, n=60, seed=4, dup_every=10):
@@ -351,19 +346,38 @@ def test_rolling_fingerprints_shape(spark):
     assert len(got.shingle_fps[0]) == 12 - 5 + 1
 
 
+def _image_rows(n, seed=5):
+    """(item_id, payload) rows of real netpbm (even ids) and PNG (odd ids)
+    payloads of assorted sizes, and the pixel arrays they encode."""
+    from ficaria_spark.operators.multimodal import encode_netpbm, encode_png
+
+    rng = np.random.default_rng(seed)
+    rows, imgs = [], {}
+    for i in range(n):
+        h, w = int(rng.integers(16, 48)), int(rng.integers(16, 48))
+        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        enc = encode_netpbm if i % 2 == 0 else encode_png
+        rows.append((i, bytearray(enc(img))))
+        imgs[i] = img
+    return rows, imgs
+
+
 def test_image_features_and_resize(spark):
-    tbl = synthetic_image_table(spark, n=12)
+    """Real netpbm/PNG payloads: per-channel means match a driver-side
+    computation, histograms are distributions, the payload never leaves
+    the stage, and reruns are deterministic. The name is kept from when a
+    resize stage was also tested here."""
+    rows, imgs = _image_rows(12)
+    tbl = spark.createDataFrame(rows, "item_id long, payload binary")
     feats = image_features(tbl).toPandas()
     assert len(feats) == 12
     assert all(len(v) == 3 for v in feats.chan_mean)
     assert all(abs(sum(h) - 1.0) < 1e-9 for h in feats.lum_hist)
     assert "payload" not in feats.columns  # binary never leaves the stage
+    for item_id, got in zip(feats.item_id, feats.chan_mean):
+        exp = imgs[item_id].reshape(-1, 3).astype(np.float64).mean(axis=0)
+        assert np.allclose(np.asarray(got, dtype=float), exp)
 
-    resized = resize_images(tbl, target=(8, 8)).toPandas()
-    assert all(m["width"] == 8 and m["height"] == 8 for m in resized.meta)
-    assert all(len(p) == 8 * 8 * 3 for p in resized.payload)
-
-    # determinism of the fake codec
     f2 = image_features(tbl).toPandas()
     assert np.allclose(np.stack(feats.chan_mean), np.stack(f2.chan_mean))
 
@@ -848,9 +862,8 @@ def test_netpbm_roundtrip_and_wav_decode():
 
 def test_real_codec_media_pipeline(spark):
     """End-to-end REAL decode through the Spark stages: the synthetic media
-    table's PPM payloads flow through image_features(use_fake_codec=False)
-    and its WAV payloads through audio_features — actual pixel/sample math,
-    no fake codec anywhere."""
+    table's PPM payloads flow through image_features and its WAV payloads
+    through audio_features — actual pixel/sample math."""
     import numpy as np
 
     from ficaria_spark.operators.multimodal import (
@@ -858,12 +871,7 @@ def test_real_codec_media_pipeline(spark):
 
     media = synthetic_media_table(spark, n=16)
     imgs = media.where("kind = 'image'")
-    # meta built from the REAL header so the schema matches image_features
-    img_feats = image_features(
-        imgs.withColumn("meta", F.expr(
-            "named_struct('width', 0, 'height', 0, 'channels', 3, 'format', 'ppm')")),
-        use_fake_codec=False,
-    ).toPandas()
+    img_feats = image_features(imgs).toPandas()
     assert len(img_feats) == 7  # 8 even ids minus the video slot (i = 14)
     assert all(len(m) == 3 for m in img_feats.chan_mean)
     assert all(0.0 <= v <= 255.0 for m in img_feats.chan_mean for v in m)
@@ -925,18 +933,11 @@ def test_audio_features_null_payload_row(spark):
 
 
 def test_image_stages_null_payload_row(spark):
-    """ADVICE r4: image_features and resize_images share audio_features'
-    null-payload policy — NaN features / null passthrough, row alignment
-    preserved, no crash."""
-    import numpy as np
-
-    from ficaria_spark.operators.multimodal import (
-        image_features, resize_images, synthetic_image_table)
-
-    imgs = synthetic_image_table(spark, n=4)
-    with_null = imgs.unionByName(
-        imgs.limit(1).selectExpr("item_id + 100 as item_id",
-                                 "cast(null as binary) as payload", "meta"))
+    """ADVICE r4: image_features shares audio_features' null-payload
+    policy — NaN features, row alignment preserved, no crash."""
+    rows, _ = _image_rows(4)
+    with_null = spark.createDataFrame(
+        rows + [(100, None)], "item_id long, payload binary")
     feats = image_features(with_null).orderBy("item_id").toPandas()
     assert len(feats) == 5
     null_row = feats[feats.item_id >= 100].iloc[0]
@@ -944,11 +945,6 @@ def test_image_stages_null_payload_row(spark):
     assert np.isnan(np.asarray(null_row.lum_hist, dtype=float)).all()
     ok = feats[feats.item_id < 100]
     assert all(np.isfinite(np.asarray(v, dtype=float)).all() for v in ok.chan_mean)
-
-    rs = resize_images(with_null, target=(8, 8)).orderBy("item_id").toPandas()
-    assert len(rs) == 5
-    assert rs[rs.item_id >= 100].payload.iloc[0] is None
-    assert all(len(p) == 8 * 8 * 3 for p in rs[rs.item_id < 100].payload)
 
 
 def test_encode_netpbm_rejects_bad_channels():
@@ -1018,7 +1014,7 @@ def test_png_rows_flow_through_media_gate_kernel(spark):
     # the remaining 5 PNG rows cycle all five filter types exactly once.
     # (sorted: collect() row order is not a contract)
     assert sorted(png_ids) == [2, 6, 10, 18, 26]
-    feats = image_features(imgs, meta_col=None, use_fake_codec=False).toPandas()
+    feats = image_features(imgs).toPandas()
     for item_id in png_ids:
         img = _decode_image_real(payloads[item_id])
         exp = img.reshape(-1, 3).astype(np.float64).mean(axis=0)
@@ -1318,7 +1314,7 @@ def test_jpeg_rows_flow_through_media_gate_kernel(spark):
     for item_id in jpeg_ids:
         is_prog = bytes([0xFF, 0xC2]) in payloads[item_id]
         assert is_prog == (item_id >= 16), item_id
-    feats = image_features(imgs, meta_col=None, use_fake_codec=False).toPandas()
+    feats = image_features(imgs).toPandas()
     for item_id in jpeg_ids:
         img = _decode_image_real(payloads[item_id])
         exp = img.reshape(-1, 3).astype(np.float64).mean(axis=0)

@@ -63,12 +63,46 @@ def test_chained_windows_share_one_exchange(spark):
 
 
 def test_temporal_kernel_has_no_python(spark):
-    """The temporal kernel is pure JVM: no Python/Arrow eval nodes."""
+    """The temporal kernel is pure JVM: no operator in
+    operators/temporal.py plans a Python/Arrow eval or pandas/Arrow map
+    node, on any of its routes."""
+    from ficaria_spark.operators import temporal as tp
+
     grid = datagen.feature_grid(spark, SF)
-    plan = _plan(pit_backfill(grid, "entity_id", "ts", ["f_value"]))
-    assert "ArrowEvalPython" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "FlatMapGroupsInPandas" not in plan
+    ev = datagen.load(spark, SF, "events")
+    clicks = ev.where(F.col("event_type") == "click")
+    views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "value")
+    windows = ev.select(F.col("event_id").alias("win_id"),
+                        F.col("ts").alias("ws"),
+                        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("we"))
+    key = ("entity_id", "ts")
+    plans = {
+        "pit_backfill": pit_backfill(grid, *key, ["f_value"]),
+        **{f"asof_join strict={st}": tp.asof_join(
+            clicks, views, on="ts", by="user_id", value_cols=["value"],
+            strict=st) for st in (True, False)},
+        **{f"pit_backfill_bounded {m}": tp.pit_backfill_bounded(
+            grid, *key, ["f_value"], tolerance_seconds=3600.0,
+            tiebreak=["event_id"], method=m) for m in ("window", "blocked")},
+        "sessionize": sessionize(grid, *key, gap_seconds=1800.0),
+        "sessionize_blocked": tp.sessionize_blocked(
+            grid, *key, gap_seconds=1800.0, block_seconds=86400.0),
+        "lag_lead": lag_lead(grid, *key, ["f_value"]),
+        "interpolate_linear": tp.interpolate_linear(grid, *key, ["f_value"]),
+        "tumble": tp.tumble(grid, "ts", width_seconds=3600),
+        **{f"interval_join W={w}": tp.interval_join(
+            ev, windows, ts="ts", start="ws", end="we",
+            bucket_width_seconds=w) for w in (0, 3600)},
+        "hypertable_rollup": tp.hypertable_rollup(
+            ev, ts="ts", keys=["event_type"], value_col="value"),
+    }
+    python_nodes = ("ArrowEvalPython", "BatchEvalPython",
+                    "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+                    "MapInPandas", "MapInArrow")
+    for name, df in plans.items():
+        plan = _plan(df)
+        for node in python_nodes:
+            assert node not in plan, (name, node, plan)
 
 
 def test_asof_join_single_shuffle(spark):
@@ -177,31 +211,6 @@ def test_aqe_skew_join_split_engages(spark):
     assert without <= n_shuffle, (without, n_shuffle)
     assert with_split > n_shuffle, (
         f"skew join did not split: {with_split} tasks <= {n_shuffle} partitions")
-
-
-def test_image_near_pairs_shuffles_hash_not_payload(spark):
-    """The image near-dup scale claim is structural: the binary payload is
-    dropped at the phash mapInPandas stage, so every exchange downstream
-    carries only (id, 8-byte hash, band, bucket) — a payload column in a
-    shuffle would move the whole corpus over the wire at 100 TB."""
-    import numpy as np
-
-    from ficaria_spark.operators.multimodal import (
-        encode_netpbm, image_near_pairs)
-
-    rng = np.random.default_rng(4)
-    rows = [(i, bytearray(encode_netpbm(
-        rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8))))
-        for i in range(6)]
-    df = spark.createDataFrame(rows, "item_id long, payload binary")
-    pairs = image_near_pairs(df, max_hamming=6)
-    plan = _formatted(pairs)
-    # the payload column name must not appear in any exchange/sort/join
-    # operator line of the formatted plan
-    for line in plan.splitlines():
-        if re.search(r"Exchange|Sort |Join", line):
-            assert "payload" not in line, line
-    assert "MapInPandas" in plan.replace("MapInPandasExec", "MapInPandas")
 
 
 def test_bloom_decontaminate_plan_has_no_join(spark, sf_dir):

@@ -1,13 +1,13 @@
-"""Property-based sweep for the as-of family (VERDICT r5 #7): for arbitrary
+"""Property-based sweep for the as-of join (VERDICT r5 #7): for arbitrary
 (left, right) relations — null keys on either/both sides, duplicate
-timestamps, empty sides — the window-union :func:`asof_join` and the
-hash-bucketed :func:`asof_join_cogroup` must both implement the pinned
-reference semantics: latest right row with ``ts_r <= ts_l`` (``<`` when
-strict) per entity, SQL null-join keys (a null key matches NOTHING; null-key
-left rows survive with null as-of values).
+timestamps, empty sides — the window-union :func:`asof_join` must implement
+the pinned reference semantics: latest right row with ``ts_r <= ts_l``
+(``<`` when strict) per entity, SQL null-join keys (a null key matches
+NOTHING; null-key left rows survive with null as-of values). The test name
+is kept from when a pandas cogroup variant was swept alongside it.
 
-The sweep extends the point pins in tests/test_temporal.py (r5, temporal.py
-null-coercion block) to generated cases — and its dry-run during round 6
+The sweep extends the null-entity point pins in tests/test_temporal.py to
+generated cases — and its dry-run during round 6
 found a REAL divergence: Window.partitionBy groups null keys into one
 partition, so the window variant leaked null-entity right values to
 null-entity left rows (fixed in asof_join by dropping null-key right rows
@@ -15,8 +15,8 @@ before the union).
 
 Right values are a deterministic function of (entity, ts) so duplicate
 right timestamps — whose winner among equal (on, side) sort keys is
-legitimately unspecified in both engines — cannot make the comparison
-flaky while still exercising the tie code paths.
+legitimately unspecified — cannot make the comparison flaky while still
+exercising the tie code paths.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from ficaria_spark.operators.temporal import asof_join, asof_join_cogroup
+from ficaria_spark.operators.temporal import asof_join
 
 _entity = st.one_of(st.none(), st.integers(0, 2))
 _ts = st.integers(0, 12)
@@ -74,19 +74,18 @@ def test_asof_window_and_cogroup_match_reference(spark, left_rows,
         [(e, float(t), _rv(e, t)) for e, t in right_rows], _R_SCHEMA)
     exp = _ref_asof(left_rows, right_rows, strict)
 
-    for name, op in (("window", asof_join), ("cogroup", asof_join_cogroup)):
-        got = {
-            r["lid"]: r["v_asof"]
-            for r in op(left, right, on="ts", by="entity",
-                        value_cols=["v"], strict=strict).collect()
-        }
-        assert set(got) == set(exp), (name, strict)
-        for lid, want in exp.items():
-            have = got[lid]
-            if want is None:
-                assert have is None or (isinstance(have, float)
-                                        and math.isnan(have)), (
-                    name, strict, lid, have, left_rows, right_rows)
-            else:
-                assert have == want, (
-                    name, strict, lid, have, want, left_rows, right_rows)
+    got = {
+        r["lid"]: r["v_asof"]
+        for r in asof_join(left, right, on="ts", by="entity",
+                           value_cols=["v"], strict=strict).collect()
+    }
+    assert set(got) == set(exp), strict
+    for lid, want in exp.items():
+        have = got[lid]
+        if want is None:
+            assert have is None or (isinstance(have, float)
+                                    and math.isnan(have)), (
+                strict, lid, have, left_rows, right_rows)
+        else:
+            assert have == want, (
+                strict, lid, have, want, left_rows, right_rows)

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from ficaria_spark.operators.temporal import (
     asof_join,
-    asof_join_cogroup,
     interpolate_linear,
     lag_lead,
     pit_backfill,
@@ -147,21 +146,6 @@ def test_asof_join_window_vs_cogroup_merge_asof(spark):
         )
 
 
-def test_asof_join_cogroup_parity(spark):
-    left_sdf, _ = _mk_events(spark, seed=21)
-    right_sdf, _ = _mk_events(spark, seed=22)
-    right_sdf = right_sdf.drop("rid")
-    a = (
-        asof_join(left_sdf, right_sdf, on="ts", by="entity", value_cols=["v"])
-        .orderBy("rid").toPandas()
-    )
-    b = (
-        asof_join_cogroup(left_sdf, right_sdf, on="ts", by="entity", value_cols=["v"])
-        .orderBy("rid").toPandas()
-    )
-    assert np.allclose(a["v_asof"].to_numpy(float), b["v_asof"].to_numpy(float), equal_nan=True)
-
-
 def test_interpolate_linear_matches_pandas_positional(spark):
     """Parity with DataFrame.interpolate(axis=0, limit_direction='both') —
     the reference's only ordered op (missing_imputation.py:1141)."""
@@ -208,6 +192,22 @@ def test_asof_join_tolerance(spark):
     assert np.allclose(
         got["v_asof"].to_numpy(float), exp["v_asof"].to_numpy(float), equal_nan=True)
 
+    # A right row exactly at the (inclusive) bound must match. In double
+    # seconds 1700149981.545288 - 1700149981.445288 > 0.1, so a float
+    # staleness test drops it; integer microseconds keep it.
+    t_r = dt.datetime(2023, 11, 16, 15, 53, 1, 445288)
+    left = spark.createDataFrame(pd.DataFrame({
+        "rid": [0], "entity": [1],
+        "ts": [t_r + dt.timedelta(microseconds=100_000)]}))
+    right = spark.createDataFrame(
+        pd.DataFrame({"entity": [1], "ts": [t_r], "v": [7.0]}))
+    edge = asof_join(left, right, on="ts", by="entity", value_cols=["v"],
+                     tolerance_seconds=0.1).collect()
+    assert [r["v_asof"] for r in edge] == [7.0]
+    tight = asof_join(left, right, on="ts", by="entity", value_cols=["v"],
+                      tolerance_seconds=0.099999).collect()
+    assert [r["v_asof"] for r in tight] == [None]
+
 
 def test_tumble_sliding_windows(spark):
     sdf, pdf = _mk_events(spark)
@@ -222,20 +222,6 @@ def test_tumble_sliding_windows(spark):
     assert ((ts_epoch - ws) >= 0).all()
     assert ((ts_epoch - ws) < 7200).all()
     assert (ws % 3600 == 0).all()  # starts on the slide grid
-
-
-def test_range_partition_layout(spark):
-    from ficaria_spark.operators.temporal import range_partition
-
-    sdf, _ = _mk_events(spark)
-    rp = range_partition(sdf, "entity", "ts", num_partitions=4)
-    assert rp.rdd.getNumPartitions() == 4
-    # backfill on top still correct
-    out = pit_backfill(rp, "entity", "ts", ["v"], tiebreak=["rid"])
-    base = pit_backfill(sdf, "entity", "ts", ["v"], tiebreak=["rid"])
-    a = out.orderBy("rid").toPandas()["v_filled"].to_numpy(float)
-    b = base.orderBy("rid").toPandas()["v_filled"].to_numpy(float)
-    assert np.allclose(a, b, equal_nan=True)
 
 
 def test_interval_join_bucketed_equals_broadcast(spark):
@@ -383,16 +369,10 @@ def test_interval_join_auto_mode_picks_safe_plan(spark):
 
 
 def test_asof_cogroup_null_entity_one_side(spark):
-    """A null entity on only ONE side must not crash the bucketed
-    merge_asof (Arrow hands that side float64 keys, the other int64 —
-    review r4): dtypes are coerced to object and non-null entities join
-    exactly as before."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from ficaria_spark.operators.temporal import asof_join_cogroup
-
+    """A null entity on only ONE side (a nullable key column, as Arrow
+    hands it over from pandas ``Int64``): the null-key right row matches
+    nothing and non-null entities join exactly. The name is kept from the
+    retired pandas cogroup variant, where this case once crashed."""
     t0 = dt.datetime(2024, 5, 1)
     left = pd.DataFrame({
         "rid": [0, 1, 2],
@@ -404,7 +384,7 @@ def test_asof_cogroup_null_entity_one_side(spark):
         "ts": [t0, t0 + dt.timedelta(minutes=6), t0 + dt.timedelta(minutes=1)],
         "v": [10.0, 20.0, 99.0],
     })
-    out = asof_join_cogroup(
+    out = asof_join(
         spark.createDataFrame(left), spark.createDataFrame(right),
         on="ts", by="entity", value_cols=["v"],
     ).orderBy("rid").toPandas()
@@ -414,16 +394,10 @@ def test_asof_cogroup_null_entity_one_side(spark):
 def test_asof_cogroup_null_entity_both_sides(spark):
     """Null entities on BOTH sides: SQL null-join semantics are pinned — a
     null-key left row stays in the output with a null as-of value (it must
-    NOT pick up a null-key right row; both-null matching would otherwise
-    ride on pandas' version-dependent NaN factorization), and non-null
-    entities join exactly as before. num_buckets=1 forces the null rows of
-    both sides into the same pandas merge call."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from ficaria_spark.operators.temporal import asof_join_cogroup
-
+    NOT pick up a null-key right row, although ``Window.partitionBy`` puts
+    both sides' null keys in one partition), and non-null entities join
+    exactly as before. The name is kept from the retired pandas cogroup
+    variant."""
     t0 = dt.datetime(2024, 5, 1)
     left = pd.DataFrame({
         "rid": [0, 1, 2],
@@ -435,20 +409,20 @@ def test_asof_cogroup_null_entity_both_sides(spark):
         "ts": [t0, t0 + dt.timedelta(minutes=1), t0 + dt.timedelta(minutes=2)],
         "v": [10.0, 98.0, 99.0],
     })
-    out = asof_join_cogroup(
+    out = asof_join(
         spark.createDataFrame(left), spark.createDataFrame(right),
-        on="ts", by="entity", value_cols=["v"], num_buckets=1,
+        on="ts", by="entity", value_cols=["v"],
     ).orderBy("rid").toPandas()
     assert out.v_asof.tolist()[0] == 10.0
     assert pd.isna(out.v_asof.tolist()[1]) and pd.isna(out.v_asof.tolist()[2])
-    # the null keys themselves survive (no sentinel leaks into the output)
+    # the null keys themselves survive
     assert pd.isna(out.entity[1]) and pd.isna(out.entity[2])
 
-    # all-null right side + null left keys: the early-return path
+    # all-null right side + null left keys: nothing matches
     right2 = right.assign(entity=pd.array([None, None, None], dtype="Int64"))
-    out2 = asof_join_cogroup(
+    out2 = asof_join(
         spark.createDataFrame(left), spark.createDataFrame(right2),
-        on="ts", by="entity", value_cols=["v"], num_buckets=1,
+        on="ts", by="entity", value_cols=["v"],
     ).orderBy("rid").toPandas()
     assert out2.v_asof.isna().all()
 

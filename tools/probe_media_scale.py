@@ -58,8 +58,7 @@ def _child(cores: int) -> None:
     media = spark.read.parquet(PARQUET).repartition(2 * cores).cache()
     n = media.count()                       # materialize before timing
     t0 = time.time()
-    img = image_features(media.where("kind = 'image'"), meta_col=None,
-                         use_fake_codec=False)
+    img = image_features(media.where("kind = 'image'"))
     au = audio_features(media.where("kind = 'audio'"))
     vid = video_features(media.where("kind = 'video'"))
     rows = img.count() + au.count() + vid.count()
