@@ -37,7 +37,7 @@ __all__ = [
     # - select:   FuzzyGranularitySelector, WeightedFuzzyRoughSelector
     # - dedup / similarity / text / tokens / sampling / sketch / pairwise
     # - multimodal: image_features (+ phash64), audio_features,
-    #               video_features, frame_sample
+    #               video_features
     # - skew:     salted_agg
     # plus: pipeline.Pipeline, catalog.Catalog, plans.lineage,
     #       streaming.backfill

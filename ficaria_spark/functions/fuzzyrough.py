@@ -7,10 +7,10 @@ Gaussian fuzzy relations vs H, fuzzy-rough POS/NOG lower/upper approximations,
 relevance/redundancy → logistic feature weights, and a greedy separability
 ranking. Fresh, vectorized implementation.
 
-Scale structure: everything row-parallel is an X×H computation with |H| small
-— the Spark path broadcasts (H, W, α) and computes per-batch POS/NOG partial
-sums inside mapInPandas (see operators/select.py); only the m² driver-side
-scalar bookkeeping stays local.
+Scale structure: every Rel(B) is an X×H computation — local while the n×|H|
+block fits the selector's driver budget, otherwise the Spark path broadcasts
+(H, W, α) and computes per-batch POS/NOG partial sums inside mapInPandas (see
+operators/select.py); the m² scalar bookkeeping stays on the driver.
 """
 
 from __future__ import annotations

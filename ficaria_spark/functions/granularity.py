@@ -10,7 +10,9 @@ n×n similarity matrices are never needed as such — every score consumes only
   * δ_B(i)        = Σ_j min_{c∈B} sim_c(i, j)           (granule row-sums)
   * tdiff_B(i)    = Σ_j |min_{c∈B} sim_c(i, j) − [y_i = y_j]|
 so both reduce to blocked pairwise row-sum aggregates (see
-operators/pairwise.py), shuffling O(n·nb) rows and returning n scalars.
+operators/pairwise.py), shuffling O(n·nb) rows and returning n scalars. The
+selector takes that route only when the fit's n×n float64 block exceeds its
+driver budget; below it the same sums run here in NumPy.
 """
 
 from __future__ import annotations
@@ -64,9 +66,9 @@ class FigfsCore:
     """Driver-side FIGFS over a bounded pandas frame.
 
     ``delta_provider``: optional callable ``(subsets: dict[key, list[cols]])
-    -> dict[key, np.ndarray]`` returning δ row-sum vectors — inject the Spark
-    blocked-pairwise evaluator here to distribute the O(n²) work; defaults to
-    local NumPy.
+    -> dict[key, np.ndarray]`` returning δ row-sum vectors — the selector
+    injects the Spark blocked-pairwise evaluator here when the fit set is too
+    big for the driver; defaults to local NumPy.
     """
 
     def __init__(self, U: pd.DataFrame, target_name: str, *, eps: float = 2.0,

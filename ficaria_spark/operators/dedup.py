@@ -67,6 +67,8 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     equality is preserved (same words → same id; collisions are the usual
     hash-family caveat), shingle columns are 8-byte longs instead of 32-char
     hex strings."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     from ficaria_spark.plans.layout import widen_thin_input
 
     # widen BELOW the tokenize projection (r7): the exchange then carries
@@ -81,8 +83,8 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         sh = F.transform(idx, lambda i: F.md5(F.array_join(F.slice(F.col("__w"), i + 1, k), " ")))
         # null-text docs must emit NO rows, matching the xxhash64 branch's
         # NULL-array guard (ADVICE r3: the md5 path used to explode a [null]
-        # array into an (id, NULL) shingle row, skewing shingles()/
-        # hot_shingles() cardinalities across hash families)
+        # array into an (id, NULL) shingle row, skewing shingles()
+        # cardinalities across hash families)
         return (base.select("id", F.explode(F.array_distinct(sh)).alias("shingle"))
                 .where(F.col("shingle").isNotNull()))
     if shingle_hash != "xxhash64":
@@ -90,16 +92,6 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     coefs = np.random.default_rng(137).integers(1, _MERSENNE, size=k, dtype=np.int64)
     arrays = _positional_shingle_arrays(base, k=k, coefs=coefs)
     return arrays.select("id", F.explode("sh").alias("shingle"))
-
-
-def hot_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                 *, k: int = 3, max_shingle_freq: int = 1000,
-                 shingle_hash: str = "md5") -> DataFrame:
-    """Audit table of the shingles ``ngram_jaccard_pairs`` would prune:
-    (shingle, count) for every shingle shared by more than ``max_shingle_freq``
-    docs. Run this to see what the frequency guard drops."""
-    sh = shingles(df, text_col, id_col, k=k, shingle_hash=shingle_hash)
-    return sh.groupBy("shingle").count().where(F.col("count") > max_shingle_freq)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -114,8 +106,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     yields an N²-row self-join). The default is a finite guard; pass ``None``
     only for exact small-corpus runs. Pruning slightly *underestimates*
     Jaccard for docs containing hot shingles (they leave both the intersection
-    and the union). Use :func:`hot_shingles` to audit exactly what is dropped
-    — plan construction itself never runs hidden jobs.
+    and the union); ``shingles(...).groupBy("shingle").count()`` audits what
+    is dropped — plan construction itself never runs hidden jobs.
     """
     # the shingle plan is referenced up to 4× (freq guard, sizes, both join
     # sides) — persist once instead of recomputing the scan per reference
@@ -147,9 +139,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
 
 def decontaminate(train: DataFrame, bench: DataFrame, *, text_col: str = "text",
                   id_col: str = "doc_id", k: int = 3,
-                  min_shared: int = 1, shingle_hash: str = "md5",
-                  method: str = "broadcast",
-                  bloom_fpp: float = 1e-4) -> DataFrame:
+                  min_shared: int = 1, shingle_hash: str = "md5") -> DataFrame:
     """Benchmark decontamination: flag training docs sharing ≥ ``min_shared``
     distinct word ``k``-grams with ANY benchmark doc (the standard n-gram
     eval-leakage guard for LLM training corpora).
@@ -157,170 +147,26 @@ def decontaminate(train: DataFrame, bench: DataFrame, *, text_col: str = "text",
     Returns (id_col, n_shared) for flagged docs — anti-join the training set
     on it to drop them.
 
-    ``method`` picks the scale shape (all three produce the same flag
-    semantics; bloom adds a bounded one-sided error):
-
-    - ``"broadcast"`` (default, exact): the benchmark's distinct shingle set
-      is BROADCAST; the training side is one map-side shingle projection +
-      a broadcast-hash semi-join + one hash agg — no all-pairs anything, no
-      shuffle of document text. Right whenever the benchmark shingle set
-      fits a broadcast (the usual case: eval sets are small).
-    - ``"shuffle"`` (exact): a plain semi-join with no broadcast hint —
-      Catalyst/AQE picks sort-merge or shuffled-hash. The fallback when the
-      held-out corpus is too big to broadcast; costs a shuffle of the TRAIN
-      shingle stream.
-    - ``"bloom"``: a Bloom filter over the benchmark shingles replaces the
-      set — CONSTANT broadcast state (sized by the optimal
-      m = −n·ln(fpp)/ln²2 at ``bloom_fpp``) and a map-only probe: the
-      multi-TB train shingle stream never shuffles for the membership test.
-      Built distributed (per-partition numpy bitmaps via mapInArrow,
-      OR-reduced on the driver — TWO bounded plan-time jobs, a sizing
-      count then the bitmap build, the fit-state pattern and a documented
-      exception to the plan-construction-runs-no-jobs rule like
-      interval_join's auto mode), probed by a vectorized Arrow kernel
-      against the broadcast bitmap. ONE-SIDED error: every truly-shared shingle hits (missed
-      contamination is impossible — the error that matters), a false
-      positive can only over-flag at ≤ ``bloom_fpp`` per probe, further
-      damped by ``min_shared`` > 1 (FP hits are independent).
+    One exact equi-join of the train shingles against the benchmark's
+    distinct shingle set, then one hash agg — no all-pairs anything, no
+    shuffle of document text. The planner picks the join: a small benchmark
+    set (the usual case) is broadcast under ``autoBroadcastJoinThreshold``
+    and AQE, and a held-out corpus too big for that gets a shuffle join.
     """
+    if min_shared < 1:
+        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     tr = shingles(train, text_col, id_col, k=k, shingle_hash=shingle_hash)
-    if method == "bloom":
-        be_sh = shingles(bench, text_col, id_col, k=k,
-                         shingle_hash=shingle_hash).select(
-            F.xxhash64("shingle").alias("h"))
-        bits_bc = _bloom_build(be_sh, fpp=bloom_fpp)
-        hits = _bloom_probe(
-            tr.select("id", F.xxhash64("shingle").alias("h")), bits_bc)
-        shared = (hits.where("hit").groupBy("id")
-                  .agg(F.count("*").alias("n_shared")))
-    elif method in ("broadcast", "shuffle"):
-        be = shingles(bench, text_col, id_col, k=k,
-                      shingle_hash=shingle_hash).select("shingle").distinct()
-        if method == "broadcast":
-            be = F.broadcast(be)
-        shared = (
-            tr.join(be, "shingle")
-            .groupBy("id")
-            .agg(F.count("*").alias("n_shared"))
-        )
-    else:
-        raise ValueError(
-            f"method must be 'broadcast', 'shuffle' or 'bloom', got {method!r}")
+    be = shingles(bench, text_col, id_col, k=k,
+                  shingle_hash=shingle_hash).select("shingle").distinct()
+    shared = (
+        tr.join(be, "shingle")
+        .groupBy("id")
+        .agg(F.count("*").alias("n_shared"))
+    )
     return (
         shared.where(F.col("n_shared") >= min_shared)
         .withColumnRenamed("id", id_col)
     )
-
-
-#: Bloom probe count k ≈ (m/n)·ln2 is fixed at build time; positions come
-#: from double hashing h1 + i·h2 (Kirsch–Mitzenmatcher: k independent
-#: functions are unnecessary — two suffice without hurting the FP bound)
-_BLOOM_K_CAP = 16
-
-
-def _bloom_positions(h: "np.ndarray", n_bits: int, n_hashes: int) -> "np.ndarray":
-    """(len(h), n_hashes) bit positions via double hashing on the uint64
-    xxhash64 values — identical math in build and probe (one function)."""
-    hu = h.astype(np.uint64)
-    h1 = hu & np.uint64(0xFFFFFFFF)
-    h2 = (hu >> np.uint64(32)) | np.uint64(1)  # odd → full-period stride
-    i = np.arange(n_hashes, dtype=np.uint64)[None, :]
-    return ((h1[:, None] + i * h2[:, None]) % np.uint64(n_bits)).astype(np.int64)
-
-
-def _bloom_build(hashed: DataFrame, *, fpp: float):
-    """Distributed Bloom build over a (h long) column: each partition emits
-    its local numpy bitmap (one binary row via mapInArrow), the driver ORs
-    the bounded partials, and the result ships back as an sc.broadcast —
-    the library's standard fit-state shape. Returns (broadcast, n_bits,
-    n_hashes)."""
-    import math
-
-    import pyarrow as pa
-
-    n_items = max(int(hashed.agg(
-        F.approx_count_distinct("h").alias("n")).first()["n"]), 16)
-    n_bits = max(1024, int(-n_items * math.log(fpp) / (math.log(2) ** 2)))
-    n_hashes = min(_BLOOM_K_CAP, max(1, round(n_bits / n_items * math.log(2))))
-    n_bytes = (n_bits + 7) // 8
-
-    def build(batches):
-        bits = np.zeros(n_bytes, dtype=np.uint8)
-        for batch in batches:
-            col = batch.column(0)
-            # NEVER to_numpy a nullable int64 hash column directly: one null
-            # makes Arrow fall back to float64 and xxhash64 values beyond
-            # 2^53 lose bits — every position in the batch would corrupt.
-            # fill_null keeps the int64 buffer; the validity mask drops the
-            # filled rows.
-            h = np.asarray(col.fill_null(0))
-            valid = np.asarray(col.is_valid())
-            pos = _bloom_positions(h[valid], n_bits, n_hashes)
-            np.bitwise_or.at(bits, pos >> 3,
-                             np.uint8(1) << (pos & 7).astype(np.uint8))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([bits.tobytes()], type=pa.binary())], names=["bm"])
-
-    # ≤ 256 partials keeps the partial COUNT bounded regardless of input
-    # size. The OR-reduce must balance three constraints at the comment's
-    # own pathological sizing (fpp=1e-4 over 100M items → ~240 MB/bitmap,
-    # 256 partials ≈ 60 GB total): (a) a collect() needs ~60 GB of driver
-    # heap; (b) a bare toLocalIterator computes the EXPENSIVE build tasks
-    # serially, one per driver pull (r6 review); (c) a shuffle boundary
-    # (repartition/treeReduce) parallelizes the builds but writes all
-    # 60 GB of incompressible bitmaps to shuffle disk (r6 fix-review).
-    # sc.runJob over chunked partition ranges threads the needle: each
-    # wave computes `chunk` build partitions IN PARALLEL and ships only
-    # their bitmaps to the driver, which ORs and drops them — no shuffle,
-    # no disk, driver peak = chunk·bitmap + acc, bounded at ~2 GB.
-    src = hashed.where(F.col("h").isNotNull())
-    if src.rdd.getNumPartitions() > 256:
-        src = src.repartition(256)
-    rdd = src.mapInArrow(build, "bm binary").rdd
-    nparts = rdd.getNumPartitions()
-    chunk = max(1, min(nparts, int(2 * 2**30) // max(n_bytes, 1)))
-    sc = hashed.sparkSession.sparkContext
-    acc = np.zeros(n_bytes, dtype=np.uint8)
-    for start in range(0, nparts, chunk):
-        wave = list(range(start, min(start + chunk, nparts)))
-        for bm in sc.runJob(rdd, lambda it: [r["bm"] for r in it], wave):
-            acc |= np.frombuffer(bm, dtype=np.uint8)
-    return sc.broadcast(acc), n_bits, n_hashes
-
-
-def _bloom_probe(df: DataFrame, bloom_state) -> DataFrame:
-    """Vectorized membership probe: adds a boolean ``hit`` column testing
-    the ``h`` column against the broadcast bitmap. Map-only."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    bits_bc, n_bits, n_hashes = bloom_state
-    # NB: df.schema.add() would MUTATE the frame's live StructType — copy
-    schema_out = T.StructType(
-        df.schema.fields + [T.StructField("hit", T.BooleanType())])
-
-    def probe(batches):
-        bits = bits_bc.value
-        for batch in batches:
-            col = batch.column(batch.schema.get_field_index("h"))
-            # see build(): fill_null keeps int64 (a float64 fallback would
-            # corrupt >2^53 hash values for the WHOLE batch); null h rows
-            # stay hit=False via the validity mask
-            h = np.asarray(col.fill_null(0))
-            valid = np.asarray(col.is_valid())
-            hit = np.zeros(len(h), dtype=bool)
-            if valid.any():
-                pos = _bloom_positions(h[valid], n_bits, n_hashes)
-                probes = (bits[pos >> 3]
-                          & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
-                hit[valid] = probes.all(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, pa.array(hit)],
-                names=[*batch.schema.names, "hit"])
-
-    # pass the StructType itself — a simpleString round-trip drops
-    # nullability/metadata and breaks on names needing backtick quoting
-    return df.mapInArrow(probe, schema_out)
 
 
 # ---------------------------------------------------------------------------
@@ -387,6 +233,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     ``bench.py --scaling`` workload passes it."""
     if engine != "arrow":
         raise ValueError(f"engine must be 'arrow', got {engine!r}")
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     a_params, b_params = _hash_params(num_hashes, seed)
     # materialize the words array ONCE per row: referencing the split()
     # expression inside the shingle lambda would re-evaluate it per shingle

@@ -14,7 +14,7 @@ returning composed full-canvas RGB frames plus per-frame delays.
 
 Real video codecs (H.264/VP9/AV1) are transform coders that genuinely
 need a library — they remain the declared seam (plug PyAV/ffmpeg into the
-frame_sample decode stage on a real cluster). GIF gives the Spark-side
+video_features decode stage on a real cluster). GIF gives the Spark-side
 pipeline a REAL multi-frame decode path end-to-end: payload → frames →
 per-frame features, exercised by the driver gate.
 """

@@ -3,15 +3,16 @@ similarity machinery (FIGFS granule δ-sums, consistency sums, FSI-style
 statistics) WITHOUT ever materializing an n×n matrix cluster-wide.
 
 Scheme: rows are hashed into ``nb`` blocks; each side is replicated nb times
-(explode over partner-block ids) and cogrouped on the (block, partner) pair —
+(explode over partner-block ids) and grouped on the (block, partner) pair —
 so task (x, y) holds left-block x and right-block y as two pandas frames,
 computes an (|x|, |y|) NumPy kernel locally, and emits only per-left-row
 partial sums. A final groupBy(row_id).sum() reduces the partials.
 
 Cost model: shuffle O(n·nb) rows, n_blocks² tasks, each O((n/nb)²·|cols|)
-vectorized work, output O(n·nb) partial rows → scales out with executors;
-choose nb ≈ sqrt(target task count). This is how a 10⁸-row granule pass runs
-on a 1000-executor cluster while the reference's pandas version dies at 10⁵.
+vectorized work, output O(n·nb) partial rows → scales out with executors.
+The grid is sized to the cluster (nb ≈ sqrt(8·cores), clamped to [8, 64]) for
+every caller. This is how a 10⁸-row granule pass runs on a 1000-executor
+cluster while the reference's pandas version dies at 10⁵.
 """
 
 from __future__ import annotations
@@ -25,15 +26,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _pair_groups(df: DataFrame, right_df: DataFrame | None, row_id: str,
-                 cols: Sequence[str], nb: int | None = None):
+def _pair_groups(df: DataFrame, row_id: str, cols: Sequence[str]):
     """Shared blocked-pair plumbing: one tagged UNION grouped by the
     (block, partner) key — task (x, y) receives left-block-x rows
     (``__side``=0) together with right-block-y rows (``__side``=1) in a
     single frame.
 
-    ``nb=None`` sizes the block grid to the cluster: nb(nb+1)/2 pair tasks
-    should give ~4 waves of parallelism (measured: 136 small tasks beat 36
+    The block grid is sized to the cluster: nb(nb+1)/2 pair tasks should
+    give ~4 waves of parallelism (measured: 136 small tasks beat 36
     big ones 2× at 16 cores — load balance outweighs the extra shuffle
     duplication until nb² shuffle copies dominate).
 
@@ -44,11 +44,9 @@ def _pair_groups(df: DataFrame, right_df: DataFrame | None, row_id: str,
     createDataFrame inputs never trigger it, so only source-backed data was
     affected). A union of two branches of the same scan has no such hazard.
     """
-    if nb is None:
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        # nb(nb+1)/2 ≈ 4·cores → nb ≈ sqrt(8·cores); clamp to a sane band
-        nb = int(min(64, max(8, round(math.sqrt(8 * cores)))))
-    right_df = right_df if right_df is not None else df
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    # nb(nb+1)/2 ≈ 4·cores → nb ≈ sqrt(8·cores); clamp to a sane band
+    nb = int(min(64, max(8, round(math.sqrt(8 * cores)))))
     sel = [row_id, *cols]
     blocks = F.pmod(F.xxhash64(F.col(row_id)), F.lit(nb))
     partner = F.explode(F.sequence(F.lit(0), F.lit(nb - 1)))
@@ -60,7 +58,7 @@ def _pair_groups(df: DataFrame, right_df: DataFrame | None, row_id: str,
         .withColumn("__side", F.lit(0))
     )
     right = (
-        right_df.select(*sel)
+        df.select(*sel)
         .withColumn("__p", blocks)
         .withColumn("__b", partner)
         .withColumn("__side", F.lit(1))
@@ -78,7 +76,7 @@ def block_pair_apply(
     """Generic blocked self-pairs map: ``kernel(left_block, right_block)``
     returns an arbitrary output frame (e.g. candidate pairs above a
     threshold). The block grid is sized to the cluster."""
-    grouped, sel = _pair_groups(df, None, row_id, cols)
+    grouped, sel = _pair_groups(df, row_id, cols)
     out_cols = [c.strip().split()[0].strip("`") for c in out_schema.split(",")]
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -97,17 +95,16 @@ def block_pair_sums(
     cols: Sequence[str],
     kernel: Callable[[pd.DataFrame, pd.DataFrame], dict[str, np.ndarray]],
     *,
-    nb: int = 8,
-    right_df: DataFrame | None = None,
     out_names: Sequence[str] | None = None,
 ) -> DataFrame:
-    """For every left row i: Σ over ALL right rows j of kernel values.
+    """For every row i: Σ over ALL rows j of kernel values.
 
     ``kernel(left_pdf, right_pdf)`` returns {name: (len(left),) partial sums
     against this right block}. Result: DataFrame(row_id, *names) with the
-    partials summed over all right blocks.
+    partials summed over all right blocks. The block grid is sized to the
+    cluster, as for every blocked-pair caller.
     """
-    grouped, sel = _pair_groups(df, right_df, row_id, cols, nb)
+    grouped, sel = _pair_groups(df, row_id, cols)
 
     if out_names is not None:
         names = list(out_names)

@@ -6,10 +6,11 @@ uniform integer in [0, 2⁶⁰) from a key column's hash and compare against
 precomputed integer thresholds — pure column expressions, exact and
 engine-portable (no float comparisons cross the engine boundary).
 
-* :func:`hash_sample` — keep a deterministic ``rate`` fraction.
 * :func:`hash_split` — assign disjoint named splits by cumulative weights
   (train/val/test); a row's split never changes when other rows appear.
-* :func:`stratified_sample` — per-group rates (mix weights by ``source``).
+* :func:`stratified_sample` — per-group rates (mix weights by ``source``);
+  ``stratified_sample(df, {}, default_rate=r)`` is a plain deterministic
+  ``r``-fraction sample.
 
 ``method="xxhash64"`` is the scale path (native JVM hash);
 ``method="md5"`` is the engine-portable twin used by the exact oracles —
@@ -42,15 +43,6 @@ def _threshold(rate: float) -> int:
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
     return int(rate * UNIT)
-
-
-def hash_sample(df: DataFrame, rate: float, *, key_col: str = "doc_id",
-                seed: int = 0, method: str = "xxhash64") -> DataFrame:
-    """Deterministic ``rate``-fraction sample: row kept iff
-    hash(key, seed) < rate·2⁶⁰. Stable under re-runs, partitioning, and
-    row additions elsewhere in the corpus."""
-    return df.where(hash_unit_int(key_col, seed=seed, method=method)
-                    < F.lit(_threshold(rate)))
 
 
 def hash_split(df: DataFrame, weights: dict[str, float], *,

@@ -5,13 +5,18 @@ Two selectors mirroring the reference's surface
 
 * :class:`FuzzyGranularitySelector` (FIGFS) — greedy driver loop; per-round
   candidate scores consume only granule δ row-sums, which are computed either
-  locally (bounded fit set) or DISTRIBUTED via the blocked pairwise kernel
-  (``delta_engine='spark'``): one shuffle per batch of candidate subsets,
-  never materializing n×n.
-* :class:`WeightedFuzzyRoughSelector` (WFRS) — the high-density region H is
-  small by construction; (H, weights, α) broadcast once, and every subset
-  relevance Rel(B) is a map-only pass computing per-batch POS/NOG partial
-  sums (``rel_engine='spark'``) followed by one scalar aggregate.
+  locally or DISTRIBUTED via the blocked pairwise kernel: one shuffle per
+  batch of candidate subsets, never materializing n×n.
+* :class:`WeightedFuzzyRoughSelector` (WFRS) — (H, weights, α) of the
+  high-density region H are computed on the driver; every subset relevance
+  Rel(B) is either a local X×H pass or a DISTRIBUTED map-only pass computing
+  per-batch POS/NOG partial sums with (H, weights, α) broadcast once,
+  followed by one scalar aggregate.
+
+Each fit picks its engine from the fit size: the Spark engine runs when the
+float64 pairwise block the driver route would build (n·n for FIGFS, n·|H| for
+WFRS) exceeds the selector's byte budget below, and the choice is recorded
+as ``engine_`` ("driver" or "spark"). Both engines give the same selection.
 
 ``transform`` for both is pure projection (``df.select``) — zero cost at any
 scale.
@@ -33,15 +38,23 @@ from ficaria_spark.functions.validation import check_feature_frame, validate_par
 from ficaria_spark.operators.impute import NotFittedError
 from ficaria_spark.operators.pairwise import block_pair_sums
 
+# Driver-route budgets, in bytes of the float64 pairwise block the driver
+# engine builds per subset: n·n·8 for FIGFS, n·|H|·8 for WFRS. Above the
+# budget the fit runs on the Spark engine. Set from the crossover measured on
+# 4 cores, local[4], 4 features + binary label (table in CHANGES.md): FIGFS's
+# driver wins at n=4k (122 MiB) and loses at 6k (275 MiB); WFRS's wins at 2k
+# (23 MiB), ties at 2.5k (35 MiB) and loses from 3k (53 MiB).
+_FIGFS_DRIVER_BYTES = 200 << 20
+_WFRS_DRIVER_BYTES = 40 << 20
+
 
 class FuzzyGranularitySelector:
     """FIGFS: rank features by fuzzy-implication granularity (reference:
-    feature_selection.py:32–563). fit over the bounded fit set (or with
-    distributed δ-sums); transform = projection."""
+    feature_selection.py:32–563). fit over the bounded fit set, with local
+    or distributed δ-sums chosen from its size; transform = projection."""
 
     def __init__(self, k: int = 2, eps: float = 2.0, max_features: int | None = None,
                  feature_cols: Sequence[str] | None = None, fit_cap: int = 10_000,
-                 delta_engine: str = "driver", nb: int = 8,
                  fit_order_col: str | None = None):
         # reference validation shape (feature_selection.py:84–92): the repo's
         # `k` is the reference's `n_features` (count of features to keep)
@@ -52,7 +65,7 @@ class FuzzyGranularitySelector:
                 f"n_features must be <= max_features: {max_features}, got {k} instead")
         self.k, self.eps, self.max_features = k, eps, max_features
         self.feature_cols = list(feature_cols) if feature_cols else None
-        self.fit_cap, self.delta_engine, self.nb = fit_cap, delta_engine, nb
+        self.fit_cap = fit_cap
         self.fit_order_col = fit_order_col
         self.S_: list[str] | None = None
 
@@ -70,9 +83,10 @@ class FuzzyGranularitySelector:
         tname = target_col or "__target"
         if target_col is None:
             pdf[tname] = 0  # unsupervised: single dummy class
-        provider = None
-        if self.delta_engine == "spark":
-            provider = self._spark_delta_provider(df.sparkSession, pdf, tname)
+        n = len(pdf)
+        self.engine_ = "spark" if n * n * 8 > _FIGFS_DRIVER_BYTES else "driver"
+        provider = (self._spark_delta_provider(df.sparkSession, pdf, tname)
+                    if self.engine_ == "spark" else None)
         core = gr.FigfsCore(
             pdf, tname, eps=self.eps, max_features=self.max_features,
             delta_provider=provider)
@@ -98,7 +112,6 @@ class FuzzyGranularitySelector:
         # this frame itself before returning
         sdf = spark.createDataFrame(work).persist()
         self._fit_caches = getattr(self, "_fit_caches", []) + [sdf]
-        nb = self.nb
 
         def provider(subsets: dict) -> dict:
             names = {key: f"d{i}" for i, key in enumerate(subsets)}
@@ -111,7 +124,7 @@ class FuzzyGranularitySelector:
                 return out
 
             res = (
-                block_pair_sums(sdf, "__rid", list(pdf.columns), kernel, nb=nb,
+                block_pair_sums(sdf, "__rid", list(pdf.columns), kernel,
                                 out_names=list(names.values()))
                 .orderBy("__rid")
                 .toPandas()
@@ -139,7 +152,8 @@ def wfrs_fit_pandas(pdf: pd.DataFrame, cols: list[str], target_col: str, *,
     """The WFRS fit core over a bounded pandas frame — pure pandas/NumPy so
     the exact-oracle twin (oracle_fit) can reproduce the fit without Spark.
     ``rel_eval_builder(M, MH, yH, classes, is_num, W_diag)`` may inject the
-    distributed Rel evaluator; default is the local one."""
+    distributed Rel evaluator; when it is absent or returns None the local
+    one runs."""
     X = pdf[cols]
     y = pdf[target_col].to_numpy()
     k = min(k, len(X) - 1)
@@ -178,8 +192,8 @@ def wfrs_fit_pandas(pdf: pd.DataFrame, cols: list[str], target_col: str, *,
             out.append(fr.relevance_of(R, yH, classes))
         return out
 
-    rel_eval = (rel_eval_builder(M, MH, yH, classes, is_num, W_diag)
-                if rel_eval_builder else driver_eval)
+    rel_eval = (rel_eval_builder and rel_eval_builder(
+        M, MH, yH, classes, is_num, W_diag)) or driver_eval
 
     # greedy separability ranking: sig(a) = Rel(B∪a) − Rel(B)
     selected: list[int] = []
@@ -197,11 +211,12 @@ def wfrs_fit_pandas(pdf: pd.DataFrame, cols: list[str], target_col: str, *,
 
 class WeightedFuzzyRoughSelector:
     """WFRS: weighted fuzzy-rough relevance/redundancy ranking (reference:
-    feature_selection.py:566–1316)."""
+    feature_selection.py:566–1316). The Rel(B) engine is chosen per fit
+    from n·|H| (see the module docstring)."""
 
     def __init__(self, n_features: int = 2, k: int = 5, alpha: float = 0.5,
                  feature_cols: Sequence[str] | None = None, fit_cap: int = 10_000,
-                 rel_engine: str = "driver", fit_order_col: str | None = None):
+                 fit_order_col: str | None = None):
         # reference validation (feature_selection.py:623–632)
         validate_params({"n_features": n_features, "k": k})
         if not isinstance(alpha, (int, float)) or isinstance(alpha, bool):
@@ -210,7 +225,7 @@ class WeightedFuzzyRoughSelector:
             raise ValueError(f"alpha must be in range (0, 1], got {alpha} instead")
         self.n_features, self.k, self.alpha = n_features, k, alpha
         self.feature_cols = list(feature_cols) if feature_cols else None
-        self.fit_cap, self.rel_engine = fit_cap, rel_engine
+        self.fit_cap = fit_cap
         self.fit_order_col = fit_order_col
         self.feature_sequence_: list[int] | None = None
 
@@ -230,10 +245,9 @@ class WeightedFuzzyRoughSelector:
             sub = sub.limit(self.fit_cap)
         pdf = sub.toPandas()
 
-        builder = self._spark_rel_eval_builder(df.sparkSession) \
-            if self.rel_engine == "spark" else None
-        res = wfrs_fit_pandas(pdf, cols, target_col, k=self.k, alpha=self.alpha,
-                              rel_eval_builder=builder)
+        res = wfrs_fit_pandas(
+            pdf, cols, target_col, k=self.k, alpha=self.alpha,
+            rel_eval_builder=self._spark_rel_eval_builder(df.sparkSession))
         self.H_ = res["H"]
         self.W_ = np.diag(res["W_diag"])
         selected = res["selected"]
@@ -255,10 +269,16 @@ class WeightedFuzzyRoughSelector:
 
     def _spark_rel_eval_builder(self, spark):
         """Distributed Rel: X streams through mapInPandas; (H slice, weights)
-        broadcast; per-batch partial sums of POS+NOG per subset → one agg."""
+        broadcast; per-batch partial sums of POS+NOG per subset → one agg.
+        The builder returns None (the local evaluator) while the n×|H|
+        block fits the driver budget."""
         alpha = self.alpha
 
         def builder(M, MH, yH, classes, is_num, W_diag):
+            big = len(M) * len(MH) * 8 > _WFRS_DRIVER_BYTES
+            self.engine_ = "spark" if big else "driver"
+            if not big:
+                return None
             pdf_all = pd.DataFrame(M)
             # plain persist (NOT tracked): released at the end of fit
             sdf = spark.createDataFrame(pdf_all.rename(columns=str)).persist()

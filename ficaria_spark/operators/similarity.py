@@ -80,7 +80,7 @@ def cosine_topk(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedd
     if broadcast_bytes is not None and _broadcast_fits(df, vec_col, broadcast_bytes)[0]:
         return _cosine_topk_broadcast(df, id_col=id_col, vec_col=vec_col, k=k)
     base = df.select(F.col(id_col).alias("rid"), F.col(vec_col).alias("vec"))
-    grouped, _ = _pair_groups(base, None, "rid", ["vec"])
+    grouped, _ = _pair_groups(base, "rid", ["vec"])
     return _merge_block_topk(grouped, k)
 
 

@@ -1,5 +1,5 @@
 """Text analysis for large-scale training-data pipelines: tokenization &
-token counting, quality scoring, language identification, document
+token counting, quality scoring, repetition and PII gates, document
 fingerprinting. All pure ``pyspark.sql`` column expressions (JVM-side,
 whole-stage codegen) — no Python in the hot path.
 
@@ -60,10 +60,12 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
        English stopword list only and ``upper_ratio`` counts ASCII ``A-Z`` —
        non-English documents score near-zero stopword ratio regardless of
        quality, and :func:`quality_score` then penalizes them (its stopword
-       term floors the score at 0.5×). On a multilingual corpus, first run
-       :func:`lang_id` and select the stopword list per detected language
-       (``_STOPWORDS[lang]`` is the extension seam — the table already
-       carries en/de/fr/es), or exclude the stopword term from the composite.
+       term floors the score at 0.5×). On a multilingual corpus, first
+       detect the language from per-language stopword hits (the
+       ``lang_profile`` query's expression) and select the stopword list per
+       detected language (``_STOPWORDS[lang]`` is the extension seam — the
+       table already carries en/de/fr/es), or exclude the stopword term from
+       the composite.
        The heuristic scope is deliberate here: the DuckDB oracle twin mirrors
        the same English list, so the parity contract pins the behavior."""
     t = F.col(text_col)
@@ -106,9 +108,9 @@ def quality_score(df: DataFrame, text_col: str = "text",
 
     .. warning:: Inherits :func:`quality_features`' English-centric
        ``stopword_ratio`` — a fluent non-English doc lands at ~0.5× score
-       from the stopword term alone. Gate on :func:`lang_id` first (or swap
-       in a per-language stopword list) before shipping this on a
-       multilingual corpus."""
+       from the stopword term alone. Gate on language first (see
+       :func:`quality_features`) or swap in a per-language stopword list
+       before shipping this on a multilingual corpus."""
     q = quality_features(df, text_col)
     score = (
         F.when(F.col("n_words") < min_words, 0.0).otherwise(1.0)
@@ -174,26 +176,6 @@ def repetition_features(df: DataFrame, text_col: str = "text",
     return (base.withColumn("dup_word_frac", dup_word)
             .withColumn("dup_kgram_frac", dup_kgram)
             .drop("__rw", "__rg"))
-
-
-def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
-    """Stopword-profile language ID. Per candidate language: count stopword
-    hits among the document's words; argmax wins ('und' = undetermined when
-    no profile hits). Pure column expressions — scales as a projection."""
-    words = F.transform(word_tokens(F.col(text_col)), lambda w: F.lower(w))
-    scores = []
-    for lang, stops in _STOPWORDS.items():
-        arr = F.array(*[F.lit(w) for w in stops])
-        scores.append(
-            F.struct(
-                F.size(F.filter(words, lambda w: F.array_contains(arr, w))).alias("hits"),
-                F.lit(lang).alias("lang"),
-            )
-        )
-    best = F.array_max(F.array(*scores))
-    return df.withColumn(
-        out_col, F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-    )
 
 
 # PII redaction patterns (ordered: more specific first so e.g. an SSN is not

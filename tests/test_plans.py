@@ -214,10 +214,10 @@ def test_aqe_skew_join_split_engages(spark):
 
 
 def test_bloom_decontaminate_plan_has_no_join(spark, sf_dir):
-    """The bloom method's scale claim is structural: the train shingle
-    stream takes NO join (membership is a map-only Arrow probe against
-    broadcast state); the only exchange left is the per-doc count agg.
-    The broadcast method, by contrast, must show a join."""
+    """decontaminate's join shape is the planner's: the benchmark shingle
+    set broadcasts under the default threshold, a shuffle join runs with
+    the threshold off, and both plans give the same rows. The name is kept
+    from when a Bloom probe was a caller-chosen, join-free method."""
     from ficaria_spark import datagen
     from ficaria_spark.operators.dedup import decontaminate
 
@@ -225,13 +225,19 @@ def test_bloom_decontaminate_plan_has_no_join(spark, sf_dir):
     train = docs.where("doc_id % 17 != 0")
     bench = docs.where("doc_id % 17 = 0")
 
-    bloom_plan = decontaminate(
-        train, bench, k=3, min_shared=2, method="bloom",
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in bloom_plan
-    assert "MapInArrow" in bloom_plan
+    bcast = decontaminate(train, bench, k=3, min_shared=2)
+    assert "BroadcastHashJoin" in \
+        bcast._jdf.queryExecution().executedPlan().toString()
+    rows = sorted(bcast.collect())
 
-    bcast_plan = decontaminate(
-        train, bench, k=3, min_shared=2,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in bcast_plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuf = decontaminate(train, bench, k=3, min_shared=2)
+        plan = shuf._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan
+        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+        assert sorted(shuf.collect()) == rows
+    finally:
+        spark.conf.set(key, saved)

@@ -11,7 +11,6 @@ import pytest
 from ficaria_spark.operators.dedup import decontaminate
 from ficaria_spark.operators.sampling import (
     UNIT,
-    hash_sample,
     hash_split,
     stratified_sample,
 )
@@ -28,15 +27,21 @@ def _docs(spark, n=400, seed=1):
     return spark.createDataFrame(pdf), pdf
 
 
+def _rate_sample(sdf, rate, seed):
+    """A plain deterministic ``rate``-fraction sample: no groups, every row
+    takes the default rate."""
+    return stratified_sample(sdf, {}, default_rate=rate, seed=seed)
+
+
 def test_hash_sample_rate_and_determinism(spark):
     sdf, _ = _docs(spark, n=2000)
-    kept = hash_sample(sdf, 0.3, seed=5).select("doc_id").toPandas()
+    kept = _rate_sample(sdf, 0.3, seed=5).select("doc_id").toPandas()
     # deterministic: identical on re-run and under different partitioning
-    kept2 = hash_sample(sdf.repartition(13), 0.3, seed=5).select("doc_id").toPandas()
+    kept2 = _rate_sample(sdf.repartition(13), 0.3, seed=5).select("doc_id").toPandas()
     assert sorted(kept.doc_id) == sorted(kept2.doc_id)
     assert 0.25 < len(kept) / 2000 < 0.35
     # subset property: raising the rate only ADDS rows
-    more = hash_sample(sdf, 0.5, seed=5).select("doc_id").toPandas()
+    more = _rate_sample(sdf, 0.5, seed=5).select("doc_id").toPandas()
     assert set(kept.doc_id) <= set(more.doc_id)
 
 
@@ -44,7 +49,7 @@ def test_hash_sample_xxhash_matches_python_twin(spark):
     from ficaria_spark.functions.xxh import _signed, xxh64_int, xxh64_long
 
     sdf, pdf = _docs(spark, n=500)
-    kept = sorted(hash_sample(sdf, 0.4, seed=9).select("doc_id").toPandas().doc_id)
+    kept = sorted(_rate_sample(sdf, 0.4, seed=9).select("doc_id").toPandas().doc_id)
     exp = [int(d) for d in pdf.doc_id
            if _signed(xxh64_int(9, xxh64_long(int(d), 42))) % UNIT < int(0.4 * UNIT)]
     assert kept == exp
@@ -119,3 +124,34 @@ def test_decontaminate_xxhash_shingles_flag_same_docs(spark):
                       shingle_hash="xxhash64").toPandas()
     assert dict(zip(a.doc_id, a.n_shared)) == dict(zip(b.doc_id, b.n_shared))
     assert {7, 33} <= set(a.doc_id)
+
+
+def test_shingle_width_and_min_shared_below_one_are_rejected(spark):
+    """k < 1 used to shingle every doc to md5("") (or crash the xxhash64
+    plan), so decontaminate flagged docs sharing no word with the benchmark
+    and ngram_jaccard_pairs scored disjoint docs 1.0; min_shared=0 returned
+    only docs with a shared shingle, not every doc. All are rejected before
+    any plan is built."""
+    from ficaria_spark.operators.dedup import (
+        minhash_signatures, ngram_jaccard_pairs, shingles)
+
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [1, 2, 3],
+        "text": ["alpha beta gamma", "delta epsilon zeta", "eta theta iota"],
+    }))
+    train = docs.where("doc_id < 3")
+    bench = docs.where("doc_id = 3")
+    for k in (0, -2):
+        for fam in ("md5", "xxhash64"):
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                decontaminate(train, bench, k=k, min_shared=1, shingle_hash=fam)
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                shingles(docs, k=k, shingle_hash=fam)
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                minhash_signatures(docs, k=k, shingle_hash=fam)
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            ngram_jaccard_pairs(train, k=k)
+    with pytest.raises(ValueError, match="min_shared must be >= 1"):
+        decontaminate(train, bench, k=1, min_shared=0)
+    # the smallest legal width still flags nothing here: no shared word
+    assert decontaminate(train, bench, k=1, min_shared=1).count() == 0

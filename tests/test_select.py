@@ -48,14 +48,20 @@ def test_figfs_deterministic(spark):
     assert s1 == s2
 
 
-def test_figfs_spark_delta_engine_matches_driver(spark):
+def test_figfs_spark_delta_engine_matches_driver(spark, monkeypatch):
+    """A fit whose n×n block is under the driver budget runs locally; with
+    the budget at 0 the same fit takes the blocked Spark δ-sums and picks
+    the same features."""
+    from ficaria_spark.operators import select
+
     pdf = _dataset(7, n=60)
     sdf = spark.createDataFrame(pdf)
-    s_driver = FuzzyGranularitySelector(k=3, feature_cols=COLS).fit(sdf, "label").S_
-    s_spark = FuzzyGranularitySelector(
-        k=3, feature_cols=COLS, delta_engine="spark", nb=4
-    ).fit(sdf, "label").S_
-    assert s_driver == s_spark
+    driver = FuzzyGranularitySelector(k=3, feature_cols=COLS).fit(sdf, "label")
+    assert driver.engine_ == "driver"
+    monkeypatch.setattr(select, "_FIGFS_DRIVER_BYTES", 0)
+    spark_fit = FuzzyGranularitySelector(k=3, feature_cols=COLS).fit(sdf, "label")
+    assert spark_fit.engine_ == "spark"
+    assert driver.S_ == spark_fit.S_
 
 
 def test_delta_sums_block_kernel_equals_dense(spark):
@@ -74,7 +80,7 @@ def test_delta_sums_block_kernel_equals_dense(spark):
         return {"s": gr.granule_block(l, r, ["a", "b"], stats, "label").sum(axis=1)}
 
     got = (
-        block_pair_sums(sdf, "__rid", list(pdf.columns), kernel, nb=4)
+        block_pair_sums(sdf, "__rid", list(pdf.columns), kernel)
         .orderBy("__rid").toPandas()["s"].to_numpy()
     )
     assert np.allclose(got, dense)
@@ -122,13 +128,19 @@ def test_wfrs_selects_and_projects(spark):
     assert len(sel.feature_importances_) == 4
 
 
-def test_wfrs_spark_rel_engine_matches_driver(spark):
+def test_wfrs_spark_rel_engine_matches_driver(spark, monkeypatch):
+    """A fit whose n×|H| block is under the driver budget runs locally;
+    with the budget at 0 the same fit takes the distributed Rel(B) pass and
+    ranks the features the same way."""
+    from ficaria_spark.operators import select
+
     pdf = _dataset(23, n=50)
     sdf = spark.createDataFrame(pdf)
     a = WeightedFuzzyRoughSelector(n_features=2, k=4, feature_cols=COLS).fit(sdf, "label")
-    b = WeightedFuzzyRoughSelector(
-        n_features=2, k=4, feature_cols=COLS, rel_engine="spark"
-    ).fit(sdf, "label")
+    assert a.engine_ == "driver"
+    monkeypatch.setattr(select, "_WFRS_DRIVER_BYTES", 0)
+    b = WeightedFuzzyRoughSelector(n_features=2, k=4, feature_cols=COLS).fit(sdf, "label")
+    assert b.engine_ == "spark"
     assert a.feature_sequence_ == b.feature_sequence_
 
 
@@ -248,7 +260,7 @@ def test_block_pair_sums_probe_runs_no_spark_jobs(spark):
     sc = spark.sparkContext
     sc.setJobGroup("pair-probe", "plan construction must be job-free")
     try:
-        plan = block_pair_sums(sdf, "__rid", list(pdf.columns), kernel, nb=4)
+        plan = block_pair_sums(sdf, "__rid", list(pdf.columns), kernel)
     finally:
         sc.setJobGroup(None, None)
     assert sc.statusTracker().getJobIdsForGroup("pair-probe") == [], \
