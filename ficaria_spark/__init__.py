@@ -39,7 +39,6 @@ __all__ = [
     # - multimodal: image_features (+ phash64), audio_features,
     #               video_features
     # - skew:     salted_agg
-    # plus: pipeline.Pipeline, catalog.Catalog, plans.lineage,
-    #       streaming.backfill
+    # plus: pipeline.Pipeline, plans.lineage
 ]
 __version__ = "0.1.0"

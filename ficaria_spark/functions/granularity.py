@@ -5,14 +5,16 @@ feature_selection.py:111–563) — adaptive-radius fuzzy similarity, granule
 δ row-sums, implication entropies, global/local granularity consistency, and
 the greedy J = W·cor − sim loop — implemented fresh and fully vectorized.
 
-The KEY structural insight used by the Spark path (operators/select.py): the
-n×n similarity matrices are never needed as such — every score consumes only
+The scores consume row-sums of the n×n similarity matrices, not the
+matrices themselves:
   * δ_B(i)        = Σ_j min_{c∈B} sim_c(i, j)           (granule row-sums)
   * tdiff_B(i)    = Σ_j |min_{c∈B} sim_c(i, j) − [y_i = y_j]|
-so both reduce to blocked pairwise row-sum aggregates (see
-operators/pairwise.py), shuffling O(n·nb) rows and returning n scalars. The
-selector takes that route only when the fit's n×n float64 block exceeds its
-driver budget; below it the same sums run here in NumPy.
+Only δ_B goes through the optional ``delta_provider``: when the fit's n×n
+float64 block exceeds the selector's driver budget, operators/select.py
+injects a blocked pairwise row-sum job (operators/pairwise.py, O(n·nb)
+shuffled rows, n scalars back), one job per subset. tdiff_B and the
+per-class local δ sums are always computed here as dense NumPy blocks
+(n×n and per-class), so driver memory stays O(n²) on both engines.
 """
 
 from __future__ import annotations
@@ -68,7 +70,9 @@ class FigfsCore:
     ``delta_provider``: optional callable ``(subsets: dict[key, list[cols]])
     -> dict[key, np.ndarray]`` returning δ row-sum vectors — the selector
     injects the Spark blocked-pairwise evaluator here when the fit set is too
-    big for the driver; defaults to local NumPy.
+    big for the driver; defaults to local NumPy. :meth:`delta_sums` calls it
+    with one subset at a time; :meth:`target_diff_sums` and
+    :meth:`local_consistency` never use it.
     """
 
     def __init__(self, U: pd.DataFrame, target_name: str, *, eps: float = 2.0,

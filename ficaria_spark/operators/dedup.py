@@ -14,7 +14,8 @@ Scale shapes (the whole point of each design):
                  are filtered on signature agreement (estimated Jaccard).
 * simhash      — 64-bit signature per doc via one chunked mapInArrow pass
                  (vectorized bit votes); near-dups = banded pigeonhole keys.
-* embedding    — cosine over LSH/bucketed candidates (see similarity.py).
+* embedding    — exact cosine all-pairs, one BLAS block per (block, block)
+                 task of the blocked-pair grid (operators/pairwise.py).
 """
 
 from __future__ import annotations
@@ -668,82 +669,46 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 def embedding_near_pairs(df: DataFrame, *, id_col: str = "vec_id",
-                         vec_col: str = "embedding", threshold: float = 0.95,
-                         dim: int | None = None, n_planes: int = 8,
-                         n_tables: int = 4, seed: int = 7,
-                         exact: bool = False) -> DataFrame:
+                         vec_col: str = "embedding",
+                         threshold: float = 0.95) -> DataFrame:
     """All pairs (id_a < id_b) with cosine(embedding_a, embedding_b) ≥
     threshold — semantic near-duplicates over an embedding column.
 
-    ``exact=True`` — blocked-dgemm all-pairs sweep (operators/pairwise
-    block scheme: each task scores one (block, block) cosine matrix in BLAS
-    and emits only the pairs over threshold): the correctness baseline and
-    the exact-oracle query path. A per-pair JVM cosine fold here would run
-    interpreted — measured 64 s vs ~2 s on a 6k×6k sweep.
-    ``exact=False`` — candidates share a random-hyperplane LSH bucket in ANY
-    table, exact cosine verified on candidates only: near-linear, the corpus
-    scale path (high-cosine pairs collide in some table w.h.p.; recall is
-    tunable via n_planes/n_tables).
+    Blocked-dgemm all-pairs sweep (operators/pairwise block scheme: each
+    task scores one (block, block) cosine matrix in BLAS and emits only the
+    pairs over threshold). A per-pair JVM cosine fold here would run
+    interpreted — measured 64 s vs ~2 s on a 6k×6k sweep. Zero-norm or
+    NaN-bearing embeddings score NaN and never pair. The caller's id type is
+    kept.
     """
-    from ficaria_spark.operators.similarity import _as_double, lsh_bucketize
+    import pandas as pd
+
+    from ficaria_spark.operators.pairwise import block_pair_apply
+    from ficaria_spark.operators.similarity import _as_double
 
     vecs = _as_double(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")), "vec")
-    va = vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    vb = vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    if exact:
-        import pandas as pd
+    thr = float(threshold)
+    id_type = df.schema[id_col].dataType.simpleString()
 
-        from ficaria_spark.operators.pairwise import block_pair_apply
+    def near_block(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        A = np.stack(lpdf["vec"].to_numpy())
+        B = np.stack(rpdf["vec"].to_numpy())
+        A = A / np.sqrt((A * A).sum(axis=1))[:, None]
+        B = B / np.sqrt((B * B).sum(axis=1))[:, None]
+        S = A @ B.T
+        ia = lpdf["id"].to_numpy()
+        ib = rpdf["id"].to_numpy()
+        # id_a < id_b keeps each unordered pair in exactly ONE of the
+        # (x,y)/(y,x) block tasks — no dedup shuffle needed
+        m = (S >= thr) & (ia[:, None] < ib[None, :])
+        r, c = np.nonzero(m)
+        return pd.DataFrame({"id_a": ia[r], "id_b": ib[c],
+                             "cosine": S[r, c]})
 
-        thr = float(threshold)
-        # preserve the caller's id type (the pre-blocked path joined on any
-        # orderable id; hardcoding long would Arrow-cast-fail string ids)
-        id_type = df.schema[id_col].dataType.simpleString()
-
-        def near_block(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-            A = np.stack(lpdf["vec"].to_numpy())
-            B = np.stack(rpdf["vec"].to_numpy())
-            A = A / np.sqrt((A * A).sum(axis=1))[:, None]
-            B = B / np.sqrt((B * B).sum(axis=1))[:, None]
-            S = A @ B.T
-            ia = lpdf["id"].to_numpy()
-            ib = rpdf["id"].to_numpy()
-            # id_a < id_b keeps each unordered pair in exactly ONE of the
-            # (x,y)/(y,x) block tasks — no dedup shuffle needed
-            m = (S >= thr) & (ia[:, None] < ib[None, :])
-            r, c = np.nonzero(m)
-            return pd.DataFrame({"id_a": ia[r], "id_b": ib[c],
-                                 "cosine": S[r, c]})
-
-        return block_pair_apply(
-            vecs, "id", ["vec"], near_block,
-            f"id_a {id_type}, id_b {id_type}, cosine double")
-    else:
-        if dim is None:
-            raise ValueError("dim is required for the LSH path (exact=False)")
-        buckets = lsh_bucketize(df, id_col=id_col, vec_col=vec_col, dim=dim,
-                                n_planes=n_planes, n_tables=n_tables,
-                                seed=seed)
-        buckets = tracked_persist(buckets)
-        x, y = buckets.alias("x"), buckets.alias("y")
-        cands = (
-            x.join(y, (F.col("x.table") == F.col("y.table"))
-                   & (F.col("x.bucket") == F.col("y.bucket"))
-                   & (F.col("x.id") < F.col("y.id")))
-            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-            .distinct()
-        )
-        pairs = cands.join(va, "id_a").join(vb, "id_b")
-    # exact cosine verify on candidates — vectorized Arrow pair kernel, not
-    # a per-pair interpreted JVM fold (see similarity._pair_cosine_arrow)
-    from ficaria_spark.operators.similarity import _pair_cosine_arrow
-
-    return (
-        _pair_cosine_arrow(pairs, "vec_a", "vec_b")
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    return block_pair_apply(
+        vecs, "id", ["vec"], near_block,
+        f"id_a {id_type}, id_b {id_type}, cosine double")
 
 
 def simhash_band_layout(max_hamming: int, nbits: int) -> tuple[list[int], list[int]]:

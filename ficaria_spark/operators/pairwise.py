@@ -95,54 +95,18 @@ def block_pair_sums(
     cols: Sequence[str],
     kernel: Callable[[pd.DataFrame, pd.DataFrame], dict[str, np.ndarray]],
     *,
-    out_names: Sequence[str] | None = None,
+    out_names: Sequence[str],
 ) -> DataFrame:
     """For every row i: Σ over ALL rows j of kernel values.
 
     ``kernel(left_pdf, right_pdf)`` returns {name: (len(left),) partial sums
-    against this right block}. Result: DataFrame(row_id, *names) with the
-    partials summed over all right blocks. The block grid is sized to the
-    cluster, as for every blocked-pair caller.
+    against this right block} for every name in ``out_names``. Result:
+    DataFrame(row_id, *out_names) with the partials summed over all right
+    blocks. The block grid is sized to the cluster, as for every
+    blocked-pair caller; plan construction runs no Spark job.
     """
-    grouped, sel = _pair_groups(df, row_id, cols)
-
-    if out_names is not None:
-        names = list(out_names)
-    else:
-        # discover output names by probing the kernel with an empty LOCAL
-        # pandas frame — plan construction must never run a Spark job (the
-        # old limit(0).toPandas() probe ran two). Dtypes approximate what
-        # Arrow->pandas hands the kernel at runtime so the common
-        # dtype-sensitive kernels (.dt accessors, integer keys) behave in
-        # the probe too — but the mirror is best-effort, NOT exact: integer
-        # columns probe int64 yet arrive float64 when the batch contains
-        # nulls (Arrow null promotion). A kernel that branches on those
-        # dtypes should pass ``out_names`` explicitly instead of relying on
-        # the probe.
-        from pyspark.sql import types as _T
-
-        def _pd_dtype(dt):
-            if isinstance(dt, (_T.TimestampType, _T.TimestampNTZType)):
-                return "datetime64[ns]"
-            if isinstance(dt, _T.DateType):
-                # Arrow->pandas yields object(datetime.date) at runtime,
-                # not datetime64[ns]
-                return object
-            if isinstance(dt, (_T.ByteType, _T.ShortType, _T.IntegerType,
-                               _T.LongType)):
-                return "int64"
-            if isinstance(dt, (_T.FloatType, _T.DoubleType)):
-                return "float64"
-            if isinstance(dt, _T.BooleanType):
-                return "bool"
-            return object  # strings, decimals, arrays, structs
-
-        sel_fields = {f.name: f.dataType for f in df.select(*sel).schema.fields}
-        empty = pd.DataFrame({
-            name: pd.Series(dtype=_pd_dtype(dt))
-            for name, dt in sel_fields.items()})
-        probe = kernel(empty, empty.copy())
-        names = sorted(probe.keys())
+    grouped, _ = _pair_groups(df, row_id, cols)
+    names = list(out_names)
     out_schema = f"{row_id} long, " + ", ".join(f"`{n}` double" for n in names)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:

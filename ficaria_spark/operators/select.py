@@ -3,15 +3,18 @@
 Two selectors mirroring the reference's surface
 (/root/reference/ficaria/feature_selection.py):
 
-* :class:`FuzzyGranularitySelector` (FIGFS) — greedy driver loop; per-round
-  candidate scores consume only granule δ row-sums, which are computed either
-  locally or DISTRIBUTED via the blocked pairwise kernel: one shuffle per
-  batch of candidate subsets, never materializing n×n.
+* :class:`FuzzyGranularitySelector` (FIGFS) — greedy driver loop over the
+  bounded fit set. Its Spark engine distributes only the granule δ row-sums,
+  through the blocked pairwise kernel: one Spark job per feature subset, as
+  ``FigfsCore.delta_sums`` asks for one subset at a time. The consistency
+  scores (``target_diff_sums``, ``local_consistency``) still build a dense
+  n×n block and per-class blocks on the driver under either engine, so the
+  driver holds O(n²) memory whichever engine runs.
 * :class:`WeightedFuzzyRoughSelector` (WFRS) — (H, weights, α) of the
   high-density region H are computed on the driver; every subset relevance
   Rel(B) is either a local X×H pass or a DISTRIBUTED map-only pass computing
-  per-batch POS/NOG partial sums with (H, weights, α) broadcast once,
-  followed by one scalar aggregate.
+  per-batch POS/NOG partial sums with (H, weights, α) broadcast once per
+  fit (destroyed when fit returns), followed by one scalar aggregate.
 
 Each fit picks its engine from the fit size: the Spark engine runs when the
 float64 pairwise block the driver route would build (n·n for FIGFS, n·|H| for
@@ -103,8 +106,9 @@ class FuzzyGranularitySelector:
         self._fit_caches = []
 
     def _spark_delta_provider(self, spark, pdf: pd.DataFrame, tname: str):
-        """Distributed δ row-sums: per call, ONE blocked-pairwise job batching
-        every requested subset."""
+        """Distributed δ row-sums: one blocked-pairwise job per call, over
+        every subset in the call (``FigfsCore`` passes one subset per
+        call)."""
         stats = {c: gr.column_stats(pdf[c], self.eps) for c in pdf.columns}
         work = pdf.copy()
         work["__rid"] = np.arange(len(work))
@@ -264,7 +268,9 @@ class WeightedFuzzyRoughSelector:
         )
         for h in getattr(self, "_fit_caches", []):
             h.unpersist(blocking=False)
-        self._fit_caches = []
+        for bc in getattr(self, "_fit_broadcasts", []):
+            bc.destroy()
+        self._fit_caches, self._fit_broadcasts = [], []
         return self
 
     def _spark_rel_eval_builder(self, spark):
@@ -287,6 +293,7 @@ class WeightedFuzzyRoughSelector:
             bc = spark.sparkContext.broadcast(
                 {"MH": MH, "yH": yH, "classes": classes, "is_num": is_num,
                  "alpha": alpha, "Wd": W_diag})
+            self._fit_broadcasts = [bc]  # destroyed at the end of fit
 
             def spark_eval(subsets: list[list[int]]) -> list[float]:
                 subs = [list(B) for B in subsets]

@@ -313,7 +313,7 @@ def _pair_cosine_arrow(pairs: DataFrame, a_col: str, b_col: str,
                        out_col: str = "cosine") -> DataFrame:
     """Vectorized per-ROW cosine over two joined vector columns: one
     mapInArrow pass computing the whole batch's dots/norms in NumPy. Use on
-    candidate-pair frames (LSH re-rank, near-dup verify) — a per-pair JVM
+    candidate-pair frames (the LSH re-rank) — a per-pair JVM
     aggregate/zip_with fold runs interpreted, ~10-50× slower on bulk pair
     sets (that fold shape lives on only as the documented twin of the
     oracles' DuckDB ``list_reduce`` cosine). Values differ from a fold by

@@ -108,12 +108,16 @@ def sessionize(
     """Assign per-entity session sequence numbers (1-based) by inactivity gap.
 
     A new session starts when ``ts - lag(ts) > gap_seconds`` (or at the first
-    event). Implemented as a running sum of new-session flags — one window
-    exchange, no UDFs.
+    event), compared in integer microseconds (:func:`_ep_us` against
+    ``round(gap_seconds·1e6)``), so a gap exactly equal to a fractional
+    ``gap_seconds`` never splits. Implemented as a running sum of
+    new-session flags — one window exchange, no UDFs.
     """
     w = _w(entity, [ts, *tiebreak])
-    gap = F.col(ts).cast("double") - F.lag(F.col(ts).cast("double")).over(w)
-    new_sess = F.when(gap.isNull() | (gap > F.lit(float(gap_seconds))), 1).otherwise(0)
+    ep = _ep_us(df, ts)
+    gap = ep - F.lag(ep).over(w)
+    new_sess = F.when(gap.isNull() | (gap > F.lit(_seconds_us(gap_seconds))), 1) \
+        .otherwise(0)
     run = _w(entity, [ts, *tiebreak]).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn(session_col, F.sum(new_sess).over(run))
 
@@ -124,13 +128,20 @@ def _ent_list(entity: str | Sequence[str]) -> list[str]:
 
 def _ep_us(df: DataFrame, ts: str) -> Column:
     """Integer-exact event epoch: microseconds for timestamps, raw value ×1e6
-    (as long) for numeric ``ts``. Block ids and staleness bounds computed on
+    rounded to a long for numeric ``ts`` (a truncating cast would read
+    1.000001 s as 1,000,000 µs). Block ids and staleness bounds computed on
     this column are exact integer arithmetic — identical in Spark and any
     ANSI oracle — so blocked variants can never diverge from the exact path
     by a float ULP at a block or tolerance boundary."""
     if isinstance(df.schema[ts].dataType, TimestampType):
         return F.unix_micros(F.col(ts))
-    return (F.col(ts).cast("double") * F.lit(1_000_000.0)).cast("long")
+    return F.round(F.col(ts).cast("double") * F.lit(1_000_000.0)).cast("long")
+
+
+def _seconds_us(seconds: float) -> int:
+    """A duration bound in whole microseconds, for comparison with
+    :func:`_ep_us` differences."""
+    return int(round(float(seconds) * 1_000_000))
 
 
 def sessionize_blocked(
@@ -158,8 +169,8 @@ def sessionize_blocked(
     Two passes, exact semantics:
 
     1. block-local (parallel over ``(entity, floor(ts/block_seconds))``):
-       in-block gap flags + running flag sums — the same ``gap_seconds``
-       comparison, on the same double-cast timestamps, as :func:`sessionize`;
+       in-block gap flags + running flag sums — the same integer-µs
+       ``gap_seconds`` comparison as :func:`sessionize`;
     2. carry (tiny: one row per non-empty ``(entity, block)``): the
        first-event flag of each block from the previous block's last
        timestamp, plus a running session offset over blocks.
@@ -179,17 +190,18 @@ def sessionize_blocked(
     ent = _ent_list(entity)
     if block_seconds <= 0:
         raise ValueError("block_seconds must be positive")
-    block_us = int(round(float(block_seconds) * 1_000_000))
-    blk = F.floor(_ep_us(df, ts) / F.lit(block_us)).cast("long")
-    tagged = df.withColumn("__blk", blk)
+    block_us = _seconds_us(block_seconds)
+    tagged = df.withColumn("__ep", _ep_us(df, ts)).withColumn(
+        "__blk", F.floor(F.col("__ep") / F.lit(block_us)).cast("long"))
 
     ords = [F.col(ts).asc(), *(F.col(c).asc() for c in tiebreak)]
     w_local = Window.partitionBy(*ent, "__blk").orderBy(*ords)
-    ep = F.col(ts).cast("double")
+    ep = F.col("__ep")
+    gap_us = _seconds_us(gap_seconds)
     gap = ep - F.lag(ep).over(w_local)
     # First row of a block has a NULL local gap -> local flag 0; its true
     # new-session flag is decided by the carry pass (never double-counted).
-    local_flag = F.when(gap > F.lit(float(gap_seconds)), 1).otherwise(0)
+    local_flag = F.when(gap > F.lit(gap_us), 1).otherwise(0)
     flagged = tagged.withColumn("__lflag", local_flag).withColumn(
         "__lrun",
         F.sum("__lflag").over(w_local.rowsBetween(Window.unboundedPreceding, 0)),
@@ -204,7 +216,7 @@ def sessionize_blocked(
     prev_last = F.lag("__last_ep").over(w_blocks)
     first_flag = F.when(
         prev_last.isNull()
-        | ((F.col("__first_ep") - prev_last) > F.lit(float(gap_seconds))),
+        | ((F.col("__first_ep") - prev_last) > F.lit(gap_us)),
         F.lit(1),
     ).otherwise(F.lit(0))
     base_prev = F.coalesce(
@@ -227,7 +239,7 @@ def sessionize_blocked(
     out = left.join(right, cond, "inner").select("L.*", F.col("R.__add"))
     return out.withColumn(
         session_col, (F.col("__add") + F.col("__lrun")).cast("long")
-    ).drop("__blk", "__lflag", "__lrun", "__add")
+    ).drop("__ep", "__blk", "__lflag", "__lrun", "__add")
 
 
 def pit_backfill_bounded(
@@ -278,7 +290,7 @@ def pit_backfill_bounded(
     ent = _ent_list(entity)
     if method not in ("window", "blocked"):
         raise ValueError(f"unknown method {method!r}")
-    tol_us = int(round(float(tolerance_seconds) * 1_000_000))
+    tol_us = _seconds_us(tolerance_seconds)
     if tol_us < 0:
         raise ValueError("tolerance_seconds must be non-negative")
     ep_us = _ep_us(df, ts)
@@ -313,7 +325,7 @@ def pit_backfill_bounded(
         return out.drop("__ep_us")
 
     block_s = float(block_seconds) if block_seconds is not None else float(tolerance_seconds)
-    block_us = int(round(block_s * 1_000_000))
+    block_us = _seconds_us(block_s)
     if block_us < tol_us or block_us <= 0:
         raise ValueError("block_seconds must be >= tolerance_seconds (and > 0)")
     base = df.withColumn("__ep_us", ep_us)
@@ -438,7 +450,7 @@ def asof_join(
     )
     out = picked.where(F.col("__side") == 1)
     if tolerance_seconds is not None:
-        tol_us = int(round(float(tolerance_seconds) * 1_000_000))
+        tol_us = _seconds_us(tolerance_seconds)
         in_tol = _ep_us(out, on) - F.col("__m.__ep") <= F.lit(tol_us)
         out = out.withColumn("__m", F.when(in_tol, F.col("__m")))
     for c in value_cols:
@@ -515,54 +527,33 @@ def interval_join(
     start: str,
     end: str,
     bucket_width_seconds: int | None = None,
-    broadcast_row_limit: int = 500_000,
 ) -> DataFrame:
     """Range join: every (event, interval) pair with ``start ≤ ts < end``.
 
-    Spark has no native range-join operator, so the naive plan for a pure
-    range predicate is a BroadcastNestedLoopJoin — correct, and fine ONLY
-    when the interval side is broadcast-small.
-
-    The scale path (``bucket_width_seconds=W``) buckets time: events get
+    Spark has no native range-join operator, and a pure range predicate
+    plans as a nested-loop join. This buckets time instead: events get
     ``floor(epoch/W)``; each interval EXPLODES over the buckets it overlaps
     (⌈len/W⌉ + 1 copies); the join becomes an EQUI-join on the bucket with a
-    cheap residual range filter — hash-partitioned, AQE-splittable, no
-    nested loop anywhere. Pick ``W`` near the typical interval length so
-    interval replication stays ~2×. Identical output to the naive path
-    (equality-tested); intervals with ``end ≤ start`` match nothing.
+    cheap residual range filter — hash-partitioned, AQE-splittable, and a
+    small interval side is broadcast by the planner as a hash join. Pick
+    ``W`` near the typical interval length so interval replication stays
+    ~2×. Intervals with ``end ≤ start`` match nothing.
 
-    ``bucket_width_seconds`` modes:
-
-    - ``None`` (default) — AUTO: one cheap sizing job on the interval side
-      (count + median interval length), run EAGERLY at plan-construction
-      time — a deliberate, documented exception to the repo's
-      plan-construction-runs-no-jobs rule (the broadcast/bucketed decision
-      changes the JOIN OPERATOR, which must be fixed before the plan
-      exists; test-pinned in test_temporal). At or under
-      ``broadcast_row_limit`` rows the broadcast NLJ wins (no shuffle, no
-      replication); above it the bucketed equi-join engages with ``W`` =
-      the median interval length (clamped to ≥ 1 s) — a large interval side
-      can never OOM the broadcast by default (VERDICT r3 #4).
-    - ``0`` — force the broadcast NLJ (caller asserts the side is small;
-      zero sizing jobs, plan construction stays job-free).
-    - ``W > 0`` — explicit bucket width, bucketed path, zero sizing jobs,
-      plan construction stays job-free.
+    ``bucket_width_seconds``: ``W ≥ 1`` is used as given (plan construction
+    runs no job); ``None`` (default) sizes ``W`` from the median interval
+    length (clamped to ≥ 1 s) with one eager sizing job on the interval
+    side. A width under 1 s raises ``ValueError``.
     """
     e_us = F.unix_micros(F.col(ts))
     s_us = F.unix_micros(F.col(start))
     n_us = F.unix_micros(F.col(end))
-    rng_pred = (e_us >= s_us) & (e_us < n_us)
     if bucket_width_seconds is None:
-        stats = intervals.select(
-            F.count("*").alias("n"),
-            F.percentile_approx((n_us - s_us) / F.lit(1_000_000), 0.5)
-            .alias("med_s")).first()
-        if int(stats["n"]) <= broadcast_row_limit:
-            bucket_width_seconds = 0
-        else:
-            bucket_width_seconds = max(1, int(stats["med_s"] or 1))
-    if bucket_width_seconds == 0:
-        return events.join(F.broadcast(intervals), rng_pred)
+        med_s = intervals.select(
+            F.percentile_approx((n_us - s_us) / F.lit(1_000_000), 0.5)).first()[0]
+        bucket_width_seconds = max(1, int(med_s or 1))
+    elif bucket_width_seconds < 1:
+        raise ValueError(
+            f"bucket_width_seconds must be at least 1, got {bucket_width_seconds}")
     w_us = int(bucket_width_seconds) * 1_000_000
     ev = events.withColumn("__b", F.floor(e_us / F.lit(w_us)))
     iv = (
@@ -573,7 +564,7 @@ def interval_join(
                                  F.floor((n_us - 1) / F.lit(w_us)))),
         )
     )
-    return ev.join(iv, ["__b"]).where(rng_pred).drop("__b")
+    return ev.join(iv, ["__b"]).where((e_us >= s_us) & (e_us < n_us)).drop("__b")
 
 
 def hypertable_rollup(

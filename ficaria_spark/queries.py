@@ -1364,12 +1364,11 @@ WHERE {_COS_FULL_SQL.format(a='a.vec', b='b.vec')} >= 0.4
 """,
 )
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, exact baseline path (the LSH-bucketed
-    variant is recall-tested in pytest; same verify expression)."""
+    """Embedding-cosine near-dup pairs (exact blocked all-pairs sweep)."""
     from ficaria_spark.operators.dedup import embedding_near_pairs
 
     emb = datagen.load(spark, sf_dir, "embeddings")
-    out = embedding_near_pairs(emb, threshold=0.4, exact=True)
+    out = embedding_near_pairs(emb, threshold=0.4)
     return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 

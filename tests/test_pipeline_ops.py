@@ -543,23 +543,16 @@ def test_rolling_fingerprints_xxhash_variant(spark):
 
 
 def test_embedding_near_pairs_exact_and_lsh(spark):
-    """Exact path equals the numpy all-pairs baseline; the LSH-bucketed path
-    recalls ≥90% of clustered high-cosine pairs (verified cosine exact on
-    candidates, so precision is 1 by construction)."""
+    """The blocked all-pairs sweep equals the numpy all-pairs baseline on
+    clustered embeddings (the name is kept from the retired LSH route)."""
     sdf, M = _embeddings(spark, n=90, clustered=True)
     S = M @ M.T
     exp = {(i, j) for i in range(len(M)) for j in range(i + 1, len(M)) if S[i, j] >= 0.9}
     assert exp, "clustered embeddings should contain high-cosine pairs"
 
-    exact = dd.embedding_near_pairs(sdf, threshold=0.9, exact=True).toPandas()
+    exact = dd.embedding_near_pairs(sdf, threshold=0.9).toPandas()
     got = set(zip(exact.id_a.astype(int), exact.id_b.astype(int)))
     assert got == exp
-
-    lsh = dd.embedding_near_pairs(sdf, threshold=0.9, dim=16,
-                                  n_planes=6, n_tables=8).toPandas()
-    got_lsh = set(zip(lsh.id_a.astype(int), lsh.id_b.astype(int)))
-    assert got_lsh <= exp                       # exact verify => no false pairs
-    assert len(got_lsh & exp) / len(exp) >= 0.9  # banded recall
 
 
 def test_operator_caches_released(spark):
@@ -765,7 +758,7 @@ def test_redact_pii_scrubs_planted_spans(spark):
 
 
 def test_embedding_near_pairs_exact_string_ids(spark):
-    """exact=True must preserve the caller's id type (review r4: the block
+    """The sweep must preserve the caller's id type (review r4: the block
     schema hardcoded long and Arrow-cast-failed string ids)."""
     import numpy as np
     import pandas as pd
@@ -778,7 +771,7 @@ def test_embedding_near_pairs_exact_string_ids(spark):
         rows.append((f"doc-{i}", [float(x) for x in v]))
     pdf = pd.DataFrame(rows, columns=["vec_id", "embedding"])
     out = dd.embedding_near_pairs(
-        spark.createDataFrame(pdf), threshold=0.95, exact=True).toPandas()
+        spark.createDataFrame(pdf), threshold=0.95).toPandas()
     assert len(out) >= 3  # the three near-copies pair up
     assert out.id_a.map(lambda s: s.startswith("doc-")).all()
     assert (out.id_a < out.id_b).all()
@@ -846,7 +839,7 @@ def test_real_codec_media_pipeline(spark):
 def test_zero_norm_vectors_excluded_consistently(spark):
     """Review r4 #2: a zero-norm embedding must NOT surface as a NaN-cosine
     near-duplicate or a rank-1 ANN neighbor (Spark sorts NaN above every
-    double). Both embedding_near_pairs paths and lsh_ann_topk exclude it."""
+    double). embedding_near_pairs and lsh_ann_topk exclude it."""
     import numpy as np
     import pandas as pd
 
@@ -857,12 +850,9 @@ def test_zero_norm_vectors_excluded_consistently(spark):
     pdf = pd.DataFrame(rows, columns=["vec_id", "embedding"])
     sdf = spark.createDataFrame(pdf)
 
-    ex = dd.embedding_near_pairs(sdf, threshold=0.9, exact=True).toPandas()
-    ls = dd.embedding_near_pairs(sdf, threshold=0.9, exact=False, dim=16,
-                                 n_planes=4, n_tables=6).toPandas()
-    for out in (ex, ls):
-        assert 2 not in set(out.id_a) | set(out.id_b)
-        assert not out.cosine.isna().any()
+    ex = dd.embedding_near_pairs(sdf, threshold=0.9).toPandas()
+    assert 2 not in set(ex.id_a) | set(ex.id_b)
+    assert not ex.cosine.isna().any()
     assert (0, 1) in set(zip(ex.id_a, ex.id_b))
 
     topk = sim.lsh_ann_topk(sdf, dim=16, k=2, n_planes=2, n_tables=4).toPandas()
@@ -1468,7 +1458,7 @@ def test_nan_component_vectors_excluded_consistently(spark):
     sdf = spark.createDataFrame(
         pd.DataFrame({"vec_id": range(4), "embedding": M}))
 
-    ex = dd.embedding_near_pairs(sdf, threshold=0.9, exact=True).toPandas()
+    ex = dd.embedding_near_pairs(sdf, threshold=0.9).toPandas()
     assert 3 not in set(ex.id_a) | set(ex.id_b)
     assert not ex.cosine.isna().any()
 

@@ -92,7 +92,7 @@ def test_temporal_kernel_has_no_python(spark):
         "tumble": tp.tumble(grid, "ts", width_seconds=3600),
         **{f"interval_join W={w}": tp.interval_join(
             ev, windows, ts="ts", start="ws", end="we",
-            bucket_width_seconds=w) for w in (0, 3600)},
+            bucket_width_seconds=w) for w in (None, 3600)},
         "hypertable_rollup": tp.hypertable_rollup(
             ev, ts="ts", keys=["event_type"], value_col="value"),
     }

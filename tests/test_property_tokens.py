@@ -79,10 +79,9 @@ _events = st.lists(st.integers(min_value=0, max_value=6000),
 @given(evs=_events, ivs=_intervals,
        w=st.sampled_from([60, 300, 3600, 86400]))
 def test_interval_join_paths_agree_on_arbitrary_relations(spark, evs, ivs, w):
-    """For ANY event/interval relation: the bucketed equi-join path (any
-    width), the forced-broadcast path, and the auto path return the same
-    (event, interval) pair set — including empty/negative intervals and
-    boundary timestamps."""
+    """For ANY event/interval relation: the bucketed equi-join at any width
+    and in auto mode returns the pure-Python (event, interval) pair set —
+    including empty/negative intervals and boundary timestamps."""
     import datetime as dt
 
     from ficaria_spark.operators.temporal import interval_join
@@ -103,13 +102,11 @@ def test_interval_join_paths_agree_on_arbitrary_relations(spark, evs, ivs, w):
             .select("event_id", "win_id").toPandas()
         return set(zip(out.event_id, out.win_id))
 
-    forced = pairs(bucket_width_seconds=0)
     # python oracle: start inclusive, end exclusive
     exp = {(e, i) for e, t in zip(ev.event_id, ev.ts)
            for i, s, x in zip(iv.win_id, iv.ws, iv.we) if s <= t < x}
-    assert forced == exp
     assert pairs(bucket_width_seconds=w) == exp
-    assert pairs(broadcast_row_limit=0) == exp  # auto → bucketed, median width
+    assert pairs() == exp  # auto: median width
 
 
 _texts = st.lists(

@@ -1,105 +1,9 @@
-"""Streaming stateful pit_backfill (applyInPandasWithState): single-batch
-parity with the batch operator, and checkpoint-resumed state carryover
-across two separate availableNow runs."""
+"""Stateless sampling operators run unchanged on a streaming DataFrame.
+The file name is kept from the retired streaming point-in-time backfill;
+checkpoint-resumable state lives in the manifest layer
+(``plans/lineage.py``)."""
 
 from __future__ import annotations
-
-import datetime as dt
-
-import numpy as np
-import pandas as pd
-
-from ficaria_spark.operators.temporal import pit_backfill
-from ficaria_spark.streaming.backfill import streaming_pit_backfill
-
-
-def _grid(n=400, n_entities=7, seed=3, t0=dt.datetime(2024, 1, 1), miss=0.4):
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        rows.append((
-            int(rng.integers(0, n_entities)),
-            t0 + dt.timedelta(seconds=int(i) * 60 + int(rng.integers(0, 50))),
-            i,
-            None if rng.random() < miss else float(np.round(rng.normal(), 4)),
-        ))
-    return pd.DataFrame(rows, columns=["entity_id", "ts", "event_id", "f_value"])
-
-
-def _run_stream(spark, src, ckpt, sink):
-    """File-source → stateful backfill → parquet sink (file sinks support
-    checkpoint recovery; memory sinks do not). Returns the FULL sink table."""
-    static = spark.read.parquet(src)
-    stream = spark.readStream.schema(static.schema).parquet(src)
-    out = streaming_pit_backfill(
-        stream, entity="entity_id", ts="ts", cols=["f_value"],
-        tiebreak=["event_id"])
-    q = (
-        out.writeStream.format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    return spark.read.parquet(sink).toPandas()
-
-
-def test_streaming_backfill_matches_batch_single_run(spark, tmp_path):
-    pdf = _grid()
-    src = str(tmp_path / "in")
-    spark.createDataFrame(pdf).write.parquet(src)
-    got = _run_stream(spark, src, str(tmp_path / "ck"), str(tmp_path / "sink")) \
-        .sort_values("event_id").reset_index(drop=True)
-    exp = (
-        pit_backfill(spark.read.parquet(src), "entity_id", "ts", ["f_value"],
-                     tiebreak=["event_id"])
-        .orderBy("event_id").toPandas()
-    )
-    assert len(got) == len(exp)
-    a = got.f_value_filled.to_numpy(dtype=float)
-    b = exp.f_value_filled.to_numpy(dtype=float)
-    assert np.allclose(a, b, equal_nan=True)
-    # leakage-free edge: rows before an entity's first observation stay NULL
-    # in BOTH engines (fixture guarantees such rows exist at 40% missingness)
-    assert np.isnan(a).any() and np.isnan(b).any()
-
-
-def test_streaming_backfill_state_survives_checkpoint_resume(spark, tmp_path):
-    """Two availableNow runs over the SAME checkpoint: run 2's fills must use
-    run 1's carried per-entity state — the streaming face of
-    checkpoint-resumable processing."""
-    pdf = _grid(n=300, seed=11)
-    pdf = pdf.sort_values("ts").reset_index(drop=True)
-    cut = 150
-    first, second = pdf.iloc[:cut], pdf.iloc[cut:]
-    src = str(tmp_path / "in2")
-    ckpt = str(tmp_path / "ck2")
-    spark.createDataFrame(first).write.mode("overwrite").parquet(src)
-    sink = str(tmp_path / "sink2")
-    got1 = _run_stream(spark, src, ckpt, sink)
-    assert set(got1.event_id) == set(first.event_id)
-
-    spark.createDataFrame(second).write.mode("append").parquet(src)
-    full = _run_stream(spark, src, ckpt, sink)
-    got2 = full[~full.event_id.isin(first.event_id)]
-    # run 2 only processed the NEW rows (checkpoint remembers the old files):
-    # the sink now holds each event exactly once
-    assert set(got2.event_id) == set(second.event_id)
-    assert len(full) == len(pdf) and full.event_id.is_unique
-
-    # expected: batch backfill over the FULL grid — state carried the last
-    # observed value of each entity across the file boundary
-    exp = (
-        pit_backfill(spark.createDataFrame(pdf), "entity_id", "ts", ["f_value"],
-                     tiebreak=["event_id"])
-        .orderBy("event_id").toPandas().set_index("event_id")
-    )
-    g2 = got2.set_index("event_id")
-    a = g2.f_value_filled.astype(float)
-    b = exp.loc[g2.index].f_value_filled.astype(float)
-    assert np.allclose(a.to_numpy(), b.to_numpy(), equal_nan=True)
-    # the test is vacuous unless some run-2 fill actually crossed the boundary
-    crossed = second[second.f_value.isna()].event_id
-    assert len(crossed) > 0 and not np.isnan(b.loc[crossed].to_numpy()).all()
 
 
 def test_sampling_ops_are_streaming_safe(spark, tmp_path):

@@ -7,9 +7,11 @@ itself, ``bench.py``, ``bench_extra.py``, ``main.py``,
 ``__spark_entry__.py``, ``perfbench/`` or ``tools/``. Docstrings and
 comments are blanked first, so a mention in prose does not count; other
 string literals do (a string in ``__all__`` or a registry is a reference).
-``@register`` query functions (reached through the ``QUERIES`` registry)
-and module ``__getattr__`` hooks are exempt; the few public names kept
-without a caller are allowlisted with a reason.
+The check is transitive: a def whose only references sit inside dead defs
+is dead too, so dead defs are blanked and the scan repeats until nothing
+new is found (allowlisted defs stay live). ``@register`` query functions (reached through the
+``QUERIES`` registry) and module ``__getattr__`` hooks are exempt; the few
+public names kept without a caller are allowlisted with a reason.
 """
 
 from __future__ import annotations
@@ -25,11 +27,6 @@ LIB = ROOT / "ficaria_spark"
 
 ALLOWLIST = {
     "Pipeline": "the reference's entry point, kept for its public surface",
-    "write_tokenized_corpus": "writes the canonical tokenized input table "
-                              "into the Catalog; its fate goes with the "
-                              "Catalog's URI-path fix",
-    "streaming_pit_backfill": "the checkpoint-resume streaming form of "
-                              "pit_backfill; a public entry point",
 }
 
 
@@ -87,21 +84,37 @@ def _top_level_defs(path: Path, text: str):
         yield node.name, first, node.end_lineno
 
 
+def _blank(text: str, first: int, last: int) -> str:
+    lines = text.splitlines(keepends=True)
+    for r in range(first - 1, last):
+        lines[r] = "\n" if lines[r].endswith("\n") else ""
+    return "".join(lines)
+
+
 def _unreferenced() -> list[str]:
     sources = _sources()
     code = {p: _code_only(text) for p, text in sources.items()}
-    dead = []
-    for path in sorted(p for p in sources if p.is_relative_to(LIB)):
-        lines = code[path].splitlines()
-        for name, first, last in _top_level_defs(path, sources[path]):
-            word = re.compile(rf"\b{re.escape(name)}\b")
-            outside = "\n".join(lines[:first - 1] + lines[last:])
-            if word.search(outside) or any(
-                    word.search(text) for p, text in code.items()
-                    if p != path):
+    defs = [(path, *d) for path in sorted(p for p in sources
+                                          if p.is_relative_to(LIB))
+            for d in _top_level_defs(path, sources[path])]
+    dead: dict[str, tuple] = {}
+    while True:
+        found = {}
+        for path, name, first, last in defs:
+            key = f"{path.relative_to(ROOT)}::{name}"
+            if key in dead:
                 continue
-            dead.append(f"{path.relative_to(ROOT)}::{name}")
-    return dead
+            word = re.compile(rf"\b{re.escape(name)}\b")
+            if not any(word.search(_blank(text, first, last) if p == path
+                                   else text)
+                       for p, text in code.items()):
+                found[key] = (path, first, last)
+        if not found:
+            return sorted(dead)
+        dead.update(found)
+        for key, (path, first, last) in found.items():
+            if key.split("::")[1] not in ALLOWLIST:
+                code[path] = _blank(code[path], first, last)
 
 
 def test_every_library_def_has_a_non_test_reference():

@@ -94,21 +94,45 @@ def test_lag_lead_matches_pandas(spark):
 
 
 def test_sessionize_matches_pandas(spark):
+    """Both sessionize routes against pandas, on the random grid and on
+    rows at t0, t0+100,000 µs and t0+100,001 µs with a 0.1 s gap: a gap
+    exactly equal to a fractional ``gap_seconds`` does not split (a
+    double-cast comparison reads this t0's gap as just over 0.1 s). The
+    same holds for numeric epoch-second ``ts`` (1.000001 → 1.300001 at
+    0.3 s)."""
+    from ficaria_spark.operators.temporal import sessionize_blocked
+
     sdf, pdf = _mk_events(spark)
-    gap = 86400.0
-    got = (
-        sessionize(sdf, "entity", "ts", gap_seconds=gap, tiebreak=["rid"])
-        .orderBy("rid")
-        .toPandas()
-    )
-    pdf = pdf.sort_values(["entity", "ts", "rid"], kind="mergesort")
+    t0 = dt.datetime(2023, 11, 16, 15, 53, 1, 445288)
+    exact_pdf = pd.DataFrame({
+        "entity": [1, 1, 1], "rid": [0, 1, 2],
+        "ts": [t0, t0 + dt.timedelta(microseconds=100_000),
+               t0 + dt.timedelta(microseconds=100_001)]})
+    num_pdf = pd.DataFrame({"entity": [1, 1, 1], "rid": [0, 1, 2],
+                            "ts": [1.000001, 1.300001, 1.300002]})
+    for sdf, pdf, gap in ((sdf, pdf, 86400.0),
+                          (spark.createDataFrame(exact_pdf), exact_pdf, 0.1),
+                          (spark.createDataFrame(num_pdf), num_pdf, 0.3)):
+        pdf = pdf.sort_values(["entity", "ts", "rid"], kind="mergesort")
+        if pd.api.types.is_numeric_dtype(pdf["ts"]):
+            ep = (pdf["ts"] * 1e6).round().astype("int64")
+        else:
+            ep = (pdf["ts"] - pd.Timestamp(0)) // pd.Timedelta(microseconds=1)
+        gap_us = round(gap * 1e6)
 
-    def sess(s):
-        d = s.diff().dt.total_seconds()
-        return (d.isna() | (d > gap)).cumsum()
+        def sess(s):
+            d = s.diff()
+            return (d.isna() | (d > gap_us)).cumsum()
 
-    exp = pdf.assign(sess=pdf.groupby("entity")["ts"].transform(sess)).sort_values("rid")
-    assert (got["session_seq"].to_numpy() == exp["sess"].to_numpy()).all()
+        exp = pdf.assign(sess=ep.groupby(pdf["entity"]).transform(sess)) \
+            .sort_values("rid")["sess"].to_numpy()
+        for got in (
+            sessionize(sdf, "entity", "ts", gap_seconds=gap, tiebreak=["rid"]),
+            sessionize_blocked(sdf, "entity", "ts", gap_seconds=gap,
+                               block_seconds=7 * 86400.0, tiebreak=["rid"]),
+        ):
+            got = got.orderBy("rid").toPandas()["session_seq"].to_numpy()
+            assert (got == exp).all(), (gap, got, exp)
 
 
 def test_tumble_buckets(spark):
@@ -225,10 +249,10 @@ def test_tumble_sliding_windows(spark):
 
 
 def test_interval_join_bucketed_equals_broadcast(spark):
-    """The bucketed equi-join range path must equal the naive broadcast
-    nested-loop path for every (event, interval) relation — including
-    intervals spanning multiple buckets, empty intervals, and boundary
-    timestamps (start inclusive, end exclusive)."""
+    """The bucketed equi-join range path, at every width and in auto mode,
+    must equal a pure-Python range check for every (event, interval)
+    relation — including intervals spanning multiple buckets, empty
+    intervals, and boundary timestamps (start inclusive, end exclusive)."""
     import datetime as dt
 
     import numpy as np
@@ -251,19 +275,33 @@ def test_interval_join_bucketed_equals_broadcast(spark):
     # boundary case: interval exactly [ts, ts+1min) of event 0
     iv_rows.append((99, ev.ts[0], ev.ts[0] + dt.timedelta(minutes=1)))
     iv = pd.DataFrame(iv_rows, columns=["win_id", "ws", "we"])
+    exp = {(e, i) for e, t in zip(ev.event_id, ev.ts)
+           for i, s, x in zip(iv.win_id, iv.ws, iv.we) if s <= t < x}
+    # start inclusive / end exclusive: the boundary interval matches event 0
+    assert {e for e, i in exp if i == 99} == {0}
 
     sev, siv = spark.createDataFrame(ev), spark.createDataFrame(iv)
-    naive = interval_join(sev, siv, ts="ts", start="ws", end="we") \
-        .select("event_id", "win_id").toPandas()
-    for W in (60, 3600, 86400):
+    for W in (None, 60, 3600, 86400):
         fast = interval_join(sev, siv, ts="ts", start="ws", end="we",
                              bucket_width_seconds=W) \
             .select("event_id", "win_id").toPandas()
-        assert set(zip(naive.event_id, naive.win_id)) \
-            == set(zip(fast.event_id, fast.win_id)), W
-    # start inclusive / end exclusive: the boundary interval matches event 0
-    assert (99 in set(naive.win_id)) and \
-        set(naive[naive.win_id == 99].event_id) == {0}
+        assert set(zip(fast.event_id, fast.win_id)) == exp, W
+
+
+def test_interval_join_rejects_sub_second_width(spark):
+    """A width under 1 s raises at the call; 0.5 used to truncate to a
+    0 µs bucket and fail at action time with DIVIDE_BY_ZERO."""
+    from ficaria_spark.operators.temporal import interval_join
+
+    ev = spark.createDataFrame(
+        pd.DataFrame({"event_id": [0], "ts": [dt.datetime(2024, 3, 1)]}))
+    iv = spark.createDataFrame(pd.DataFrame({
+        "win_id": [0], "ws": [dt.datetime(2024, 3, 1)],
+        "we": [dt.datetime(2024, 3, 2)]}))
+    for w in (0.5, 0, -60):
+        with pytest.raises(ValueError, match="bucket_width_seconds"):
+            interval_join(ev, iv, ts="ts", start="ws", end="we",
+                          bucket_width_seconds=w).collect()
 
 
 def test_hypertable_rollup_reaggregation_is_exact(spark, sf_dir):
@@ -328,10 +366,11 @@ def test_hypertable_rollup_misaligned_neighbours_use_aligned_source(spark, sf_di
 
 
 def test_interval_join_auto_mode_picks_safe_plan(spark):
-    """bucket_width_seconds=None (default) must never unconditionally
-    broadcast: a small interval side takes the broadcast NLJ; above
-    broadcast_row_limit the bucketed equi-join engages (no
-    BroadcastNestedLoopJoin in the plan) with identical output."""
+    """bucket_width_seconds=None (default) sizes the width from the median
+    interval length and takes the bucketed equi-join: no
+    BroadcastNestedLoopJoin in the plan; the small interval side is
+    broadcast by the planner as a hash join; the output equals an explicit
+    width's."""
     import datetime as dt
 
     import numpy as np
@@ -353,19 +392,16 @@ def test_interval_join_auto_mode_picks_safe_plan(spark):
     iv = pd.DataFrame(iv_rows, columns=["win_id", "ws", "we"])
     sev, siv = spark.createDataFrame(ev), spark.createDataFrame(iv)
 
-    small = interval_join(sev, siv, ts="ts", start="ws", end="we")
-    assert "BroadcastNestedLoop" in small._jdf.queryExecution().executedPlan().toString()
+    auto = interval_join(sev, siv, ts="ts", start="ws", end="we")
+    plan = auto._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoop" not in plan
+    assert "BroadcastHashJoin" in plan
 
-    big = interval_join(sev, siv, ts="ts", start="ws", end="we",
-                        broadcast_row_limit=10)
-    assert "BroadcastNestedLoop" not in big._jdf.queryExecution().executedPlan().toString()
-
-    forced = interval_join(sev, siv, ts="ts", start="ws", end="we",
-                           bucket_width_seconds=0)
-    a = set(map(tuple, small.select("event_id", "win_id").toPandas().to_numpy()))
-    b = set(map(tuple, big.select("event_id", "win_id").toPandas().to_numpy()))
-    c = set(map(tuple, forced.select("event_id", "win_id").toPandas().to_numpy()))
-    assert a == b == c and len(a) > 0
+    fixed = interval_join(sev, siv, ts="ts", start="ws", end="we",
+                          bucket_width_seconds=3600)
+    a = set(map(tuple, auto.select("event_id", "win_id").toPandas().to_numpy()))
+    b = set(map(tuple, fixed.select("event_id", "win_id").toPandas().to_numpy()))
+    assert a == b and len(a) > 0
 
 
 def test_asof_cogroup_null_entity_one_side(spark):
