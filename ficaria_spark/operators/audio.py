@@ -5,9 +5,8 @@ operators/jpeg.py closed the image one: a minimal RIFF/WAVE container
 parser plus decoders for the compressed format tags that are fully public
 specifications — G.711 μ-law (format 7) and A-law (format 6, ITU-T G.711),
 IMA/DVI ADPCM (format 0x11, the IMA "Recommended Practices" 4-bit coder),
-and IEEE float PCM (format 3). Encoders for each are included so tests and
-the synthetic media table can synthesize real compressed payloads
-deterministically and round-trip them. Integer PCM (format 1) stays on the
+and IEEE float PCM (format 3). Their encoders live beside the tests
+(tests/media_gen.py). Integer PCM (format 1) stays on the
 stdlib ``wave`` path in operators/multimodal.py — bit-identical to every
 previous round's decode.
 
@@ -52,6 +51,8 @@ def parse_wav_chunks(payload: bytes) -> dict:
         cid = payload[pos:pos + 4]
         (clen,) = struct.unpack_from("<I", payload, pos + 4)
         body = payload[pos + 8: pos + 8 + clen]
+        if len(body) < {b"fmt ": 16, b"fact": 4}.get(cid, 0):
+            raise ValueError(f"truncated WAV payload (cut {cid!r} chunk)")
         if cid == b"fmt ":
             tag, ch, rate, _br, ba, bits = struct.unpack_from("<HHIIHH", body, 0)
             out.update(format_tag=tag, channels=ch, rate=rate,
@@ -66,61 +67,12 @@ def parse_wav_chunks(payload: bytes) -> dict:
     return out
 
 
-def _wav_container(format_tag: int, channels: int, rate: int, bits: int,
-                   block_align: int, data: bytes, *,
-                   extra: bytes = b"", fact_samples: int | None = None,
-                   samples_per_block: int | None = None) -> bytes:
-    if format_tag == WAVE_FORMAT_IMA_ADPCM:
-        # bytes/sec at the COMPRESSED rate: each block of block_align bytes
-        # carries samples_per_block samples (r6 review: rate*block_align
-        # overstated this ~500×, a conformance defect for external tools
-        # that trust nAvgBytesPerSec for duration/buffering)
-        if not samples_per_block:
-            raise ValueError(
-                "IMA ADPCM container requires samples_per_block "
-                "(nAvgBytesPerSec is undefined without it)")
-        byte_rate = rate * block_align // samples_per_block
-    else:
-        byte_rate = rate * channels * max(bits // 8, 1)
-    fmt = struct.pack("<HHIIHH", format_tag, channels, rate,
-                      byte_rate, block_align, bits)
-    if format_tag != WAVE_FORMAT_PCM:
-        fmt += struct.pack("<H", len(extra)) + extra
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    if fact_samples is not None:
-        chunks += b"fact" + struct.pack("<II", 4, fact_samples)
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        chunks += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
 # ---------------------------------------------------------------------------
 # G.711 μ-law / A-law (ITU-T G.711 segmented companding; same expansion
 # tables every telephony stack publishes)
 
 _MU_BIAS = 0x84  # 132
 _MU_CLIP = 32635
-
-
-def mulaw_encode(pcm16: np.ndarray) -> np.ndarray:
-    """int16 → μ-law uint8 — the classic G.711 14-bit-domain linear2ulaw
-    (arithmetic ``>>2`` BEFORE the negative fold, CLIP 8159, BIAS 33),
-    vectorized; bit-identical to CPython's ``audioop.lin2ulaw`` for all
-    65536 inputs (cross-checked in tests)."""
-    x = np.asarray(pcm16, dtype=np.int32)
-    q = x >> 2                               # arithmetic shift to 14-bit
-    sign = np.where(x < 0, 0x80, 0)
-    mag = np.minimum(np.where(q < 0, -q, q), 8159) + 33
-    # segment = position of the MSB above bit 5 (mag >= 33 → exp in 0..7);
-    # mag 8192 (CLIP+BIAS) overflows every segment → saturated code, like
-    # the classic search() returning 8
-    magc = np.minimum(mag, 8191)
-    exp = np.maximum(
-        np.floor(np.log2(magc)).astype(np.int32) - 5, 0)
-    mant = (magc >> (exp + 1)) & 0x0F
-    body = np.where(mag > 8191, 0x7F, (exp << 4) | mant)
-    return (~(sign | body)).astype(np.uint8)
 
 
 def mulaw_decode(ulaw: np.ndarray) -> np.ndarray:
@@ -131,22 +83,6 @@ def mulaw_decode(ulaw: np.ndarray) -> np.ndarray:
     mant = u & 0x0F
     mag = (((mant << 3) + _MU_BIAS) << exp) - _MU_BIAS
     return np.where(sign, -mag, mag).astype(np.int16)
-
-
-def alaw_encode(pcm16: np.ndarray) -> np.ndarray:
-    """int16 → A-law uint8 — the classic G.711 linear2alaw algorithm
-    (13-bit domain, ``-x-1`` negative fold, segment-dependent mantissa
-    shift, 0x55 toggle), vectorized."""
-    x = np.asarray(pcm16, dtype=np.int32)
-    sign = x >= 0
-    mag = np.where(sign, x, -x - 1) >> 3          # to the 13-bit domain
-    mag = np.minimum(mag, 0xFFF)
-    # segment = position of the MSB above bit 4 (0 for mag <= 0x1F)
-    exp = np.maximum(
-        np.floor(np.log2(np.maximum(mag, 1))).astype(np.int32) - 4, 0)
-    mant = (mag >> np.maximum(exp, 1)) & 0x0F
-    return ((np.where(sign, 0x80, 0) | (exp << 4) | mant) ^ 0x55) \
-        .astype(np.uint8)
 
 
 def alaw_decode(alaw: np.ndarray) -> np.ndarray:
@@ -191,43 +127,6 @@ def _ima_step_sample(step: int, nibble: int) -> int:
     return -diff if nibble & 8 else diff
 
 
-def ima_adpcm_encode(pcm16: np.ndarray, *, block_samples: int = 505) -> bytes:
-    """Mono int16 → IMA ADPCM data bytes (4-bit, block header per block:
-    int16 predictor, uint8 step index, reserved). ``block_samples`` is the
-    per-block sample count INCLUDING the header sample (505 → block_align
-    256, the common default for 4-bit mono)."""
-    x = pcm16.astype(np.int32)
-    out = bytearray()
-    index = 0
-    for start in range(0, len(x), block_samples):
-        block = x[start:start + block_samples]
-        pred = int(block[0])
-        out += struct.pack("<hBB", pred, index, 0)
-        nibbles = []
-        for s in block[1:]:
-            step = int(_IMA_STEP[index])
-            diff = int(s) - pred
-            nib = 8 if diff < 0 else 0
-            diff = abs(diff)
-            if diff >= step:
-                nib |= 4
-                diff -= step
-            if diff >= step >> 1:
-                nib |= 2
-                diff -= step >> 1
-            if diff >= step >> 2:
-                nib |= 1
-            pred += _ima_step_sample(step, nib)
-            pred = max(-32768, min(32767, pred))
-            index = int(np.clip(index + _IMA_INDEX[nib], 0, 88))
-            nibbles.append(nib)
-        if len(nibbles) & 1:
-            nibbles.append(0)  # pad the last byte's high nibble
-        for lo, hi in zip(nibbles[0::2], nibbles[1::2]):
-            out.append(lo | (hi << 4))
-    return bytes(out)
-
-
 def ima_adpcm_decode(data: bytes, *, block_align: int,
                      n_samples: int | None = None) -> np.ndarray:
     """IMA ADPCM data bytes (mono) → int16 samples. ``block_align`` is the
@@ -259,36 +158,7 @@ def ima_adpcm_decode(data: bytes, *, block_align: int,
 
 
 # ---------------------------------------------------------------------------
-# WAV encode/decode entry points for the compressed tags
-
-
-def encode_wav_compressed(pcm16: np.ndarray, rate: int, *,
-                          codec: str) -> bytes:
-    """Mono int16 samples → complete WAV bytes in the named compressed
-    format: ``"mulaw"``, ``"alaw"``, ``"ima_adpcm"`` or ``"float32"``.
-    Deterministic; round-trips through :func:`decode_wav_any`."""
-    pcm16 = np.asarray(pcm16, dtype=np.int16).reshape(-1)
-    if codec == "mulaw":
-        data = mulaw_encode(pcm16).tobytes()
-        return _wav_container(WAVE_FORMAT_MULAW, 1, rate, 8, 1, data,
-                              fact_samples=len(pcm16))
-    if codec == "alaw":
-        data = alaw_encode(pcm16).tobytes()
-        return _wav_container(WAVE_FORMAT_ALAW, 1, rate, 8, 1, data,
-                              fact_samples=len(pcm16))
-    if codec == "ima_adpcm":
-        block_samples = 505
-        block_align = 4 + (block_samples - 1 + 1) // 2
-        data = ima_adpcm_encode(pcm16, block_samples=block_samples)
-        extra = struct.pack("<H", block_samples)
-        return _wav_container(WAVE_FORMAT_IMA_ADPCM, 1, rate, 4, block_align,
-                              data, extra=extra, fact_samples=len(pcm16),
-                              samples_per_block=block_samples)
-    if codec == "float32":
-        data = (pcm16.astype(np.float32) / 32768.0).tobytes()
-        return _wav_container(WAVE_FORMAT_IEEE_FLOAT, 1, rate, 32, 4, data,
-                              fact_samples=len(pcm16))
-    raise ValueError(f"unknown codec {codec!r}")
+# WAV decode entry point for the compressed tags
 
 
 def decode_wav_compressed(payload: bytes) -> tuple[np.ndarray, int]:
@@ -306,6 +176,12 @@ def decode_wav_compressed(payload: bytes) -> tuple[np.ndarray, int]:
     elif tag == WAVE_FORMAT_IMA_ADPCM:
         if ch != 1:
             raise NotImplementedError("stereo IMA ADPCM not supported")
+        # the fmt extension's samples-per-block must match block_align, or
+        # a corrupt header decodes silently to a wrong-length signal
+        spb = (info["block_align"] - 4) * 2 + 1
+        if int.from_bytes(info["extra"][:2], "little") != spb:
+            raise ValueError("invalid IMA ADPCM WAV: block_align does not "
+                             "match the samples per block")
         x = ima_adpcm_decode(data, block_align=info["block_align"],
                              n_samples=info["fact_samples"]
                              ).astype(np.float64) / 32768.0

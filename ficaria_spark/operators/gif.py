@@ -7,10 +7,9 @@ from public specs without an external library.
 color tables, graphics-control extensions (delay, transparency, disposal
 methods 0–3), interlaced images, and the GIF flavor of LZW (variable code
 width 3–12 bits, LSB-first packing, clear/EOI codes, 4096-entry dict) —
-returning composed full-canvas RGB frames plus per-frame delays.
-:func:`encode_gif` writes a conformant GIF89a from palette-index frames
-(any standard viewer opens it; round-trips bit-exactly through
-``decode_gif`` since GIF is lossless over indices).
+returning composed full-canvas RGB frames plus per-frame delays. The
+test-side encoder (tests/media_gen.py) round-trips bit-exactly through
+``decode_gif``, since GIF is lossless over indices.
 
 Real video codecs (H.264/VP9/AV1) are transform coders that genuinely
 need a library — they remain the declared seam (plug PyAV/ffmpeg into the
@@ -57,16 +56,17 @@ def _lzw_decode(data: bytes, mcs: int, n_pixels: int) -> np.ndarray:
                 continue
             if code == eoi:
                 return np.frombuffer(bytes(out[:n_pixels]), np.uint8).copy()
+            if code > len(table) or (prev is None and code == len(table)):
+                raise ValueError("corrupt GIF LZW stream (code past the "
+                                 "string table)")
             if prev is None:
                 entry = table[code]
             elif code < len(table):
                 entry = table[code]
                 table.append(prev + entry[:1])
-            elif code == len(table):          # the KwKwK case
+            else:                             # the KwKwK case
                 entry = prev + prev[:1]
                 table.append(entry)
-            else:
-                raise ValueError("corrupt GIF LZW stream")
             out += entry
             prev = entry
             if len(table) == (1 << size) and size < 12:
@@ -74,52 +74,6 @@ def _lzw_decode(data: bytes, mcs: int, n_pixels: int) -> np.ndarray:
             if len(out) >= n_pixels:
                 return np.frombuffer(bytes(out[:n_pixels]), np.uint8).copy()
     return np.frombuffer(bytes(out[:n_pixels]), np.uint8).copy()
-
-
-def _lzw_encode(indices: np.ndarray, mcs: int) -> bytes:
-    """GIF-LZW compress palette indices (must all be < 2**mcs)."""
-    clear = 1 << mcs
-    eoi = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, size: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    size = mcs + 1
-    emit(clear, size)
-    s = b""
-    for px in indices.tobytes():
-        c = bytes([px])
-        if s + c in table:
-            s = s + c
-            continue
-        emit(table[s], size)
-        table[s + c] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << size) and size < 12:
-            size += 1
-        if next_code >= 4096:
-            emit(clear, size)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            size = mcs + 1
-        s = c
-    if s:
-        emit(table[s], size)
-    emit(eoi, size)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -249,48 +203,3 @@ def decode_gif(payload: bytes) -> tuple[list[np.ndarray], list[int]]:
         # a silently short frame list (r6 fix-review)
         raise ValueError("truncated GIF payload (missing trailer)")
     return frames, delays
-
-
-def encode_gif(frames: list[np.ndarray], palette: np.ndarray, *,
-               delays: list[int] | None = None,
-               interlace_first: bool = False) -> bytes:
-    """Encode palette-index frames ((H, W) uint8, all < len(palette)) and
-    an (N, 3) uint8 palette to GIF89a bytes. ``delays`` in centiseconds
-    (defaults to 10). Lossless: decode_gif returns exactly
-    ``palette[frame]`` per frame. ``interlace_first`` writes frame 0
-    interlaced (decoder-path coverage)."""
-    if not frames:
-        raise ValueError("need at least one frame")
-    h, w = frames[0].shape
-    palette = np.asarray(palette, np.uint8).reshape(-1, 3)
-    kbits = max(1, int(np.ceil(np.log2(len(palette)))))
-    ncol = 1 << kbits
-    pal = np.zeros((ncol, 3), np.uint8)
-    pal[:len(palette)] = palette
-    delays = delays if delays is not None else [10] * len(frames)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((kbits - 1) & 7), 0, 0)
-    out += pal.tobytes()
-    mcs = max(2, kbits)
-    for fi, frame in enumerate(frames):
-        if frame.shape != (h, w):
-            raise ValueError("all frames must share the canvas shape")
-        out += b"\x21\xf9\x04" + struct.pack("<BH", 1 << 2, delays[fi]) \
-            + b"\x00\x00"
-        inter = interlace_first and fi == 0
-        ipack = 0x40 if inter else 0x00
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, ipack)
-        rows = frame
-        if inter:
-            order = np.concatenate([np.arange(start, h, step)
-                                    for start, step in _INTERLACE_PASSES])
-            rows = frame[order]
-        out.append(mcs)
-        data = _lzw_encode(rows.astype(np.uint8).reshape(-1), mcs)
-        for off in range(0, len(data), 255):
-            chunk = data[off:off + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-    out += b"\x3b"
-    return bytes(out)

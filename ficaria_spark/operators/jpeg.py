@@ -1,4 +1,4 @@
-"""JPEG (JFIF) codec in pure stdlib + numpy — no external library.
+"""JPEG (JFIF) decoder in pure stdlib + numpy — no external library.
 
 Closes the "compressed image" half of the multimodal codec seam
 (VERDICT r5 "What's missing #1" named PNG; this is the follow-through on
@@ -8,28 +8,20 @@ the stream, grayscale or YCbCr, any h×v chroma subsampling (4:4:4 /
 4:2:2 / 4:2:0), restart markers — AND progressive DCT JPEG (SOF2) with
 spectral selection and successive approximation (multi-scan coefficient
 accumulation, EOB runs, AC refinement correction bits; T.81 G.2).
-:func:`encode_jpeg` emits conformant baseline JFIF (4:4:4 or 4:2:0) or,
-with ``progressive=True``, a progressive stream whose scan script
-exercises both progressive features; its quantized coefficients are
-identical to the baseline encoding, so the two decodes are bit-equal
-(pinned in tests).
+The test-side encoder (tests/media_gen.py) writes baseline and
+progressive streams with identical quantized coefficients, so the tests
+pin the two decodes bit-equal.
 
 Everything here is public knowledge: ITU-T T.81 (the JPEG standard —
 marker syntax, Annex C canonical Huffman construction, Annex F entropy
-coding), the JFIF spec, and the widely published IJG quality→quant
-scaling. The Annex-K "typical" quantization tables are used for rate
-control; Huffman tables are fixed-length canonical codes of our own
-construction (12 DC symbols at 4 bits, 162 AC symbols at 8 bits) — legal
-because JPEG carries its Huffman tables IN the stream (DHT), so
-conformance does not depend on using the Annex-K typical tables; ours
-trade ~2× entropy-stream size for a trivially-verifiable table
-definition, irrelevant at test-payload sizes.
+coding) and the JFIF spec. Huffman and quantization tables are read from
+the stream (DHT/DQT); a malformed header field raises ``ValueError``.
 
 Spark notes: this runs inside Arrow-batched ``mapInPandas`` workers
 (operators/multimodal.py) — per-payload Python is inherent to format
 decode, the same boundary as the netpbm/PNG/WAV codecs. The hot math
-(DCT/IDCT, quantization) is vectorized over all 8×8 blocks of a component
-with one einsum; only the entropy coder is serial per payload.
+(IDCT, dequantization) is vectorized over all 8×8 blocks of a component
+with one einsum; only the entropy decoder is serial per payload.
 
 Reference parity anchor: the reference treats media payloads as opaque
 bytes + metadata (SURVEY.md §2.3 multimodal family); codecs have no
@@ -45,29 +37,6 @@ import numpy as np
 
 # ---------------------------------------------------------------------------
 # Shared tables
-
-# Annex-K "typical" quantization tables (ITU-T T.81 Tables K.1/K.2).
-QUANT_LUMA = np.array([
-    [16, 11, 10, 16, 24, 40, 51, 61],
-    [12, 12, 14, 19, 26, 58, 60, 55],
-    [14, 13, 16, 24, 40, 57, 69, 56],
-    [14, 17, 22, 29, 51, 87, 80, 62],
-    [18, 22, 37, 56, 68, 109, 103, 77],
-    [24, 35, 55, 64, 81, 104, 113, 92],
-    [49, 64, 78, 87, 103, 121, 120, 101],
-    [72, 92, 95, 98, 112, 100, 103, 99],
-], dtype=np.int32)
-
-QUANT_CHROMA = np.array([
-    [17, 18, 24, 47, 99, 99, 99, 99],
-    [18, 21, 26, 66, 99, 99, 99, 99],
-    [24, 26, 56, 99, 99, 99, 99, 99],
-    [47, 66, 99, 99, 99, 99, 99, 99],
-    [99, 99, 99, 99, 99, 99, 99, 99],
-    [99, 99, 99, 99, 99, 99, 99, 99],
-    [99, 99, 99, 99, 99, 99, 99, 99],
-    [99, 99, 99, 99, 99, 99, 99, 99],
-], dtype=np.int32)
 
 
 def _zigzag_order() -> np.ndarray:
@@ -98,33 +67,9 @@ def _dct_matrix() -> np.ndarray:
 
 DCT8 = _dct_matrix()
 
-# Fixed-length canonical Huffman tables (see module docstring): BITS is the
-# count of codes per code length 1..16 (T.81 Annex C), HUFFVAL the symbols
-# in canonical order. DC: 12 categories at 4 bits. AC: EOB, ZRL and all
-# (run 0..15 × size 1..10) at 8 bits = 162 symbols (161 < 255, so the
-# all-ones code stays unused as T.81 recommends).
-_DC_BITS = [0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_DC_VALS = list(range(12))
-_AC_BITS = [0, 0, 0, 0, 0, 0, 0, 162, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC_VALS = [0x00, 0xF0] + [(r << 4) | s for r in range(16)
-                           for s in range(1, 11)]
-
-
-def _huff_encode_map(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length) by the Annex-C canonical construction."""
-    out: dict[int, tuple[int, int]] = {}
-    code, i = 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[i]] = (code, length)
-            code += 1
-            i += 1
-        code <<= 1
-    return out
-
 
 def _huff_decode_map(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol, same canonical walk as the encoder side."""
+    """(length, code) -> symbol by the Annex-C canonical construction."""
     out: dict[tuple[int, int], int] = {}
     code, i = 0, 0
     for length in range(1, 17):
@@ -134,197 +79,6 @@ def _huff_decode_map(bits: list[int], vals: list[int]) -> dict[tuple[int, int], 
             i += 1
         code <<= 1
     return out
-
-
-_ENC_DC = _huff_encode_map(_DC_BITS, _DC_VALS)
-_ENC_AC = _huff_encode_map(_AC_BITS, _AC_VALS)
-
-# Progressive AC table: the baseline 162 symbols plus the EOBn symbols
-# (r<<4 | 0 for r = 1..14 — end-of-band runs of length 2^r..2^(r+1)-1,
-# T.81 G.1.2.2); 176 codes at 8 bits is still canonical-legal (< 255).
-_AC_PROG_BITS = [0, 0, 0, 0, 0, 0, 0, 176, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC_PROG_VALS = _AC_VALS + [r << 4 for r in range(1, 15)]
-_ENC_AC_PROG = _huff_encode_map(_AC_PROG_BITS, _AC_PROG_VALS)
-
-
-def _ijg_scaled(table: np.ndarray, quality: int) -> np.ndarray:
-    """IJG quality scaling (public libjpeg convention): 1..100 → scaled
-    Annex-K table, each entry clamped to [1, 255] (8-bit Tq=0)."""
-    quality = min(max(int(quality), 1), 100)
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    return np.clip((table * scale + 50) // 100, 1, 255).astype(np.int32)
-
-
-# ---------------------------------------------------------------------------
-# Encoder
-
-
-class _BitWriter:
-    """MSB-first bit accumulator with JPEG 0xFF byte stuffing."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._nbits = 0
-
-    def put(self, code: int, length: int) -> None:
-        self._acc = (self._acc << length) | (code & ((1 << length) - 1))
-        self._nbits += length
-        while self._nbits >= 8:
-            self._nbits -= 8
-            byte = (self._acc >> self._nbits) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-        self._acc &= (1 << self._nbits) - 1
-
-    def flush(self) -> None:
-        if self._nbits:
-            self.put(0x7F, 8 - self._nbits)  # pad with 1-bits (F.1.2.3)
-
-
-def _category(v: int) -> int:
-    return int(v).bit_length() if v > 0 else int(-v).bit_length()
-
-
-def _blocks_of(plane: np.ndarray) -> np.ndarray:
-    """(H, W) plane (H, W multiples of 8) -> (H//8, W//8, 8, 8) blocks."""
-    h, w = plane.shape
-    return plane.reshape(h // 8, 8, w // 8, 8).swapaxes(1, 2)
-
-
-def _encode_component_blocks(plane: np.ndarray, qtab: np.ndarray) -> np.ndarray:
-    """Level-shift, forward-DCT and quantize every 8×8 block of a plane in
-    one vectorized einsum; returns int32 (by, bx, 64) zigzag coefficients."""
-    blocks = _blocks_of(plane.astype(np.float64) - 128.0)
-    coef = np.einsum("ij,byjk,lk->byil", DCT8, blocks, DCT8)
-    q = np.round(coef / qtab).astype(np.int32)
-    return q.reshape(q.shape[0], q.shape[1], 64)[..., ZIGZAG]
-
-
-def _write_block(w: _BitWriter, zz: np.ndarray, pred: int,
-                 enc_dc: dict, enc_ac: dict) -> int:
-    """Huffman-encode one zigzag block; returns the new DC predictor."""
-    dc = int(zz[0])
-    diff = dc - pred
-    t = _category(diff)
-    code, ln = enc_dc[t]
-    w.put(code, ln)
-    if t:
-        w.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    run = 0
-    nz = np.nonzero(zz[1:])[0]
-    last = int(nz[-1]) + 1 if len(nz) else 0
-    for k in range(1, last + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run >= 16:
-            code, ln = enc_ac[0xF0]           # ZRL
-            w.put(code, ln)
-            run -= 16
-        s = _category(v)
-        code, ln = enc_ac[(run << 4) | s]
-        w.put(code, ln)
-        w.put(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last < 63:
-        code, ln = enc_ac[0x00]               # EOB
-        w.put(code, ln)
-    return dc
-
-
-# --- progressive entropy coders (T.81 G.1.2; scan script in encode_jpeg) ---
-
-
-def _emit_eobrun(bw: _BitWriter, state: dict) -> None:
-    """Flush the pending end-of-band run (EOBn symbol + extension bits,
-    G.1.2.2) followed by the correction bits buffered under it."""
-    n = state["eobrun"]
-    if n:
-        t = n.bit_length() - 1
-        code, ln = _ENC_AC_PROG[t << 4]
-        bw.put(code, ln)
-        if t:
-            bw.put(n - (1 << t), t)
-        state["eobrun"] = 0
-    for b in state["pending"]:
-        bw.put(b, 1)
-    state["pending"] = []
-
-
-def _encode_ac_first_block(bw: _BitWriter, zz: np.ndarray, ss: int, se: int,
-                           al: int, state: dict) -> None:
-    """First AC scan of a spectral band: point-transformed values
-    (truncation toward zero by 2^al), zero runs, EOB runs."""
-    r = 0
-    for k in range(ss, se + 1):
-        v = int(zz[k])
-        v = (v >> al) if v >= 0 else -((-v) >> al)
-        if v == 0:
-            r += 1
-            continue
-        _emit_eobrun(bw, state)
-        while r > 15:
-            code, ln = _ENC_AC_PROG[0xF0]
-            bw.put(code, ln)
-            r -= 16
-        s = _category(v)
-        code, ln = _ENC_AC_PROG[(r << 4) | s]
-        bw.put(code, ln)
-        bw.put(v if v >= 0 else v + (1 << s) - 1, s)
-        r = 0
-    if r:
-        state["eobrun"] += 1
-        if state["eobrun"] == 0x7FFF:
-            _emit_eobrun(bw, state)
-
-
-def _encode_ac_refine_block(bw: _BitWriter, zz: np.ndarray, ss: int, se: int,
-                            al: int, state: dict) -> None:
-    """AC successive-approximation refinement (G.1.2.3): newly-nonzero
-    coefficients (current magnitude exactly 1) are coded as run/size-1 +
-    sign; previously-nonzero ones contribute one buffered correction bit
-    each, emitted after the next symbol (or after the EOB run they ride)."""
-    mags = [(abs(int(zz[k])) >> al, int(zz[k]) > 0) for k in range(ss, se + 1)]
-    eob_idx = -1
-    for i, (m, _) in enumerate(mags):
-        if m == 1:
-            eob_idx = i
-    r = 0
-    br_bits: list[int] = []
-    for i, (m, positive) in enumerate(mags):
-        if m == 0:
-            r += 1
-            continue
-        # emit ZRLs now unless the zeros can fold into the final EOB run;
-        # this must happen BEFORE buffering a correction bit so the decoder
-        # sees each bit inside the 16-zero window it belongs to
-        while r > 15 and i <= eob_idx:
-            _emit_eobrun(bw, state)
-            code, ln = _ENC_AC_PROG[0xF0]
-            bw.put(code, ln)
-            r -= 16
-            for b in br_bits:
-                bw.put(b, 1)
-            br_bits = []
-        if m > 1:
-            br_bits.append(m & 1)
-            continue
-        _emit_eobrun(bw, state)
-        code, ln = _ENC_AC_PROG[(r << 4) | 1]
-        bw.put(code, ln)
-        bw.put(1 if positive else 0, 1)
-        for b in br_bits:
-            bw.put(b, 1)
-        br_bits = []
-        r = 0
-    if r or br_bits:
-        state["eobrun"] += 1
-        state["pending"].extend(br_bits)
-        if state["eobrun"] == 0x7FFF:
-            _emit_eobrun(bw, state)
 
 
 def _ceil_div(a: int, b: int) -> int:
@@ -342,31 +96,6 @@ def _comp_block_dims(height: int, width: int, sh: int, sv: int,
     return _ceil_div(ch, 8), _ceil_div(cw, 8)
 
 
-def _emit_rst(bw: "_BitWriter", idx: int) -> None:
-    """Byte-align (1-bit padding, F.1.2.3) and append RSTn. Appended raw
-    to .out AFTER flush so the writer's 0xFF00 stuffing never touches the
-    marker. Shared by the baseline and progressive scan emitters."""
-    bw.flush()
-    bw.out += bytes([0xFF, 0xD0 + idx % 8])
-
-
-def _pad_to(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:
-    """Edge-replicate pad to multiples of (mh, mw)."""
-    h, w = plane.shape
-    ph = (-h) % mh
-    pw = (-w) % mw
-    if ph or pw:
-        plane = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
-    return plane
-
-
-def _rgb_to_ycbcr(img: np.ndarray) -> list[np.ndarray]:
-    r, g, b = (img[..., i].astype(np.float64) for i in range(3))
-    return [0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
-            0.5 * r - 0.418688 * g - 0.081312 * b + 128.0]
-
-
 def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
     cb = cb - 128.0
     cr = cr - 128.0
@@ -374,205 +103,6 @@ def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
                     y - 0.344136 * cb - 0.714136 * cr,
                     y + 1.772 * cb], axis=-1)
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def encode_jpeg(img: np.ndarray, *, quality: int = 85,
-                subsample: bool = False, restart_interval: int = 0,
-                progressive: bool = False) -> bytes:
-    """Encode (H, W, 3) RGB or (H, W)/(H, W, 1) grayscale uint8 to JFIF
-    bytes. ``subsample=True`` emits 4:2:0 (2×2-mean chroma), else 4:4:4;
-    ``restart_interval=N`` emits DRI + RSTn every N MCUs (in progressive
-    scans the interval counts MCUs for the interleaved DC scans and blocks
-    for the non-interleaved AC scans, per T.81 C.4).
-    ``progressive=True`` emits a progressive (SOF2) stream whose scan
-    script exercises both progressive features: successive approximation
-    (DC and AC first scans at Al=1, then Ah=1→Al=0 refinement scans) and
-    spectral selection (per-component AC bands 1–5 and 6–63) — the
-    quantized coefficients are identical to the baseline encoding, so
-    decode(progressive) == decode(baseline) bit-for-bit.
-    Deterministic: fixed tables, float64 DCT, round-half-even."""
-    img = np.asarray(img)
-    if img.ndim == 3 and img.shape[-1] == 1:
-        img = img[..., 0]
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    if not (0 < h <= 65535 and 0 < w <= 65535):
-        raise ValueError("image dimensions out of JPEG range")
-
-    qt_l = _ijg_scaled(QUANT_LUMA, quality)
-    qt_c = _ijg_scaled(QUANT_CHROMA, quality)
-    if gray:
-        planes = [img.astype(np.float64)]
-        samp = [(1, 1)]
-        qsel = [0]
-    else:
-        y, cb, cr = _rgb_to_ycbcr(img)
-        if subsample:
-            # 2×2 mean downsample of chroma (pad first so the mean window
-            # never crosses the edge asymmetrically)
-            def down(p: np.ndarray) -> np.ndarray:
-                p = _pad_to(p, 2, 2)
-                return (p[0::2, 0::2] + p[0::2, 1::2]
-                        + p[1::2, 0::2] + p[1::2, 1::2]) / 4.0
-            planes = [y, down(cb), down(cr)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [y, cb, cr]
-            samp = [(1, 1), (1, 1), (1, 1)]
-        qsel = [0, 1, 1]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-
-    # Per-component zigzag coefficient grids, padded to whole MCUs.
-    mcux = _ceil_div(w, 8 * hmax)
-    mcuy = _ceil_div(h, 8 * vmax)
-    comp_zz = []
-    for plane, (sh, sv), qi in zip(planes, samp, qsel):
-        padded = _pad_to(np.clip(np.round(plane), 0, 255),
-                         mcuy * sv * 8, mcux * sh * 8)
-        comp_zz.append(_encode_component_blocks(
-            padded, qt_l if qi == 0 else qt_c))
-
-    scans: list[tuple[bytes, bytes]] = []   # (SOS body, entropy bytes)
-    if not progressive:
-        # Entropy-coded segment: MCU-interleaved block order (T.81 A.2.3).
-        bw = _BitWriter()
-        preds = [0] * len(planes)
-        mcu_count = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if restart_interval and mcu_count \
-                        and mcu_count % restart_interval == 0:
-                    _emit_rst(bw, mcu_count // restart_interval - 1)
-                    preds = [0] * len(planes)
-                mcu_count += 1
-                for ci, (sh, sv) in enumerate(samp):
-                    for by in range(sv):
-                        for bx in range(sh):
-                            zz = comp_zz[ci][my * sv + by, mx * sh + bx]
-                            preds[ci] = _write_block(bw, zz, preds[ci],
-                                                     _ENC_DC, _ENC_AC)
-        bw.flush()
-    else:
-        # Progressive scan script (T.81 G.1): DC first at Al=1 (interleaved),
-        # per-component AC bands (1–5, 6–63) at Al=1, DC refinement, then
-        # per-component AC refinements — spectral selection AND successive
-        # approximation both on the wire. AC scans walk each component's own
-        # block raster (non-interleaved dims), so MCU-padding blocks carry
-        # DC only; they are cropped away at reconstruction.
-        ncomps = len(planes)
-        comp_dims = [_comp_block_dims(h, w, sh, sv, hmax, vmax)
-                     for sh, sv in samp]
-
-        def dc_scan(al: int, refine: bool) -> tuple[bytes, bytes]:
-            bwx = _BitWriter()
-            preds = [0] * ncomps
-            mcu_count = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    # DC scans are interleaved: the restart interval counts
-                    # MCUs (T.81 C.4); predictors reset at each RSTn.
-                    if restart_interval and mcu_count \
-                            and mcu_count % restart_interval == 0:
-                        _emit_rst(bwx, mcu_count // restart_interval - 1)
-                        preds = [0] * ncomps
-                    mcu_count += 1
-                    for ci, (sh, sv) in enumerate(samp):
-                        for by in range(sv):
-                            for bx in range(sh):
-                                dc = int(comp_zz[ci][my * sv + by,
-                                                     mx * sh + bx][0])
-                                if refine:
-                                    bwx.put((dc >> al) & 1, 1)
-                                    continue
-                                v = dc >> al
-                                diff = v - preds[ci]
-                                preds[ci] = v
-                                t = _category(diff)
-                                code, ln = _ENC_DC[t]
-                                bwx.put(code, ln)
-                                if t:
-                                    bwx.put(diff if diff >= 0
-                                            else diff + (1 << t) - 1, t)
-            bwx.flush()
-            sos = bytes([ncomps]) \
-                + b"".join(bytes([ci + 1, 0x00]) for ci in range(ncomps)) \
-                + bytes([0, 0, ((1 if refine else 0) << 4)
-                         | (0 if refine else al)])
-            return sos, bytes(bwx.out)
-
-        def ac_scan(ci: int, ss_: int, se_: int, al: int,
-                    refine: bool) -> tuple[bytes, bytes]:
-            bwx = _BitWriter()
-            state = {"eobrun": 0, "pending": []}
-            bh_c, bw_c = comp_dims[ci]
-            block = _encode_ac_refine_block if refine else _encode_ac_first_block
-            bcount = 0
-            for by in range(bh_c):
-                for bx in range(bw_c):
-                    # AC scans are non-interleaved: one block per MCU, so the
-                    # restart interval counts blocks. The pending EOB run and
-                    # its buffered correction bits flush BEFORE the marker —
-                    # EOB runs never cross a restart boundary (T.81 G.1.2.2).
-                    if restart_interval and bcount \
-                            and bcount % restart_interval == 0:
-                        _emit_eobrun(bwx, state)
-                        _emit_rst(bwx, bcount // restart_interval - 1)
-                    bcount += 1
-                    block(bwx, comp_zz[ci][by, bx], ss_, se_, al, state)
-            _emit_eobrun(bwx, state)
-            bwx.flush()
-            sos = bytes([1, ci + 1, 0x00, ss_, se_,
-                         ((1 if refine else 0) << 4)
-                         | (0 if refine else al)])
-            return sos, bytes(bwx.out)
-
-        scans.append(dc_scan(1, refine=False))
-        for ci in range(ncomps):
-            for ss_, se_ in ((1, 5), (6, 63)):
-                scans.append(ac_scan(ci, ss_, se_, 1, refine=False))
-        scans.append(dc_scan(0, refine=True))
-        for ci in range(ncomps):
-            for ss_, se_ in ((1, 5), (6, 63)):
-                scans.append(ac_scan(ci, ss_, se_, 0, refine=True))
-
-    # Marker segments.
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")                      # SOI
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00"
-               + struct.pack(">HH", 1, 1) + b"\x00\x00")
-    out += seg(0xFFDB, bytes([0x00])
-               + bytes(int(v) for v in qt_l.reshape(64)[ZIGZAG]))
-    if not gray:
-        out += seg(0xFFDB, bytes([0x01])
-                   + bytes(int(v) for v in qt_c.reshape(64)[ZIGZAG]))
-    ncomp = 1 if gray else 3
-    sof = bytearray(struct.pack(">BHHB", 8, h, w, ncomp))
-    for ci in range(ncomp):
-        sof += bytes([ci + 1, (samp[ci][0] << 4) | samp[ci][1], qsel[ci]])
-    out += seg(0xFFC2 if progressive else 0xFFC0, bytes(sof))
-    ac_tab = (_AC_PROG_BITS, _AC_PROG_VALS) if progressive \
-        else (_AC_BITS, _AC_VALS)
-    for tc_th, bits, vals in (((0 << 4) | 0, _DC_BITS, _DC_VALS),
-                              ((1 << 4) | 0, *ac_tab)):
-        out += seg(0xFFC4, bytes([tc_th]) + bytes(bits) + bytes(vals))
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-    if progressive:
-        for sos_body, entropy in scans:
-            out += seg(0xFFDA, sos_body)
-            out += entropy
-    else:
-        sos = bytearray([ncomp])
-        for ci in range(ncomp):
-            sos += bytes([ci + 1, 0x00])              # DC table 0, AC table 0
-        sos += b"\x00\x3f\x00"                        # Ss, Se, Ah/Al
-        out += seg(0xFFDA, bytes(sos))
-        out += bw.out
-    out += b"\xff\xd9"                                # EOI
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -644,6 +174,8 @@ class _BitReader:
 def _receive_extend(br: _BitReader, s: int) -> int:
     if s == 0:
         return 0
+    if s > 11:      # 8-bit DCT magnitude categories stop at 11 (DC)
+        raise ValueError(f"invalid JPEG: magnitude category {s} > 11")
     v = br.bits(s)
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
@@ -765,8 +297,9 @@ def _decode_scan_progressive(payload: bytes, pos: int, frame, grids,
         raise ValueError("invalid progressive JPEG: a DC scan (Ss=0) "
                          "must have Se=0 (a baseline stream relabeled "
                          "SOF2 looks exactly like this)")
-    if not (0 <= ss <= se <= 63):
-        raise ValueError("invalid progressive JPEG: bad spectral band")
+    if not (0 <= ss <= se <= 63) or ah > 13 or al > 13:
+        raise ValueError("invalid progressive JPEG: bad spectral band or "
+                         "successive-approximation bit position")
     for _, td, ta in scan_sel:
         # DC-first scans Huffman-decode with table (0, td); AC scans (first
         # AND refinement) with (1, ta); DC refinement reads raw bits only.
@@ -891,6 +424,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 bits = list(body[off + 1: off + 17])
                 nv = sum(bits)
                 vals = list(body[off + 17: off + 17 + nv])
+                if len(bits) < 16 or len(vals) < nv:
+                    raise ValueError("invalid JPEG: DHT segment shorter "
+                                     "than its code counts imply")
                 huff[(tc, th)] = _huff_decode_map(bits, vals)
                 off += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):      # SOF0/1 baseline, SOF2 prog
@@ -906,6 +442,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             comps = []
             for ci in range(ncomp):
                 cid, hv, tq = body[6 + 3 * ci: 9 + 3 * ci]
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 15 <= 4):
+                    raise ValueError("invalid JPEG: sampling factor "
+                                     "outside 1..4")
                 comps.append((cid, hv >> 4, hv & 15, tq))
             frame = (height, width, comps)
             progressive = marker == 0xC2

@@ -1,23 +1,26 @@
 """Multimodal columns: image/audio/video as opaque, self-describing
 ``binary`` payloads, processed through Arrow-batched ``mapInPandas`` stages.
 
-The Spark-side plumbing — schemas, batch shapes, partition sizing, UDF
-signatures — is real and tested. Codecs: binary netpbm images (P5/P6),
-8-bit PNG (stdlib ``zlib`` inflate + numpy unfiltering — see
-:func:`decode_png`), baseline JPEG (pure stdlib+numpy Huffman/DCT — see
-operators/jpeg.py), and WAV audio — integer PCM plus G.711 μ-law/A-law,
-IMA ADPCM and IEEE float (operators/audio.py) — decode FOR REAL here (no
-external library; all exercised end-to-end by ``synthetic_media_table``);
-the remaining compressed formats (perceptual audio MP3/AAC/Opus, video,
-exotic images) still dispatch to a clearly-marked ``NotImplementedError``
-seam — swap in Pillow/torchaudio/PyAV on a real cluster; nothing else
-changes.
+The library decodes; it does not encode. Binary netpbm (P5/P6), 8-bit PNG
+(stdlib ``zlib`` inflate + numpy unfiltering — see :func:`decode_png`),
+JPEG (operators/jpeg.py), lossless WebP, baseline TIFF, GIF video, and WAV
+audio — integer PCM plus G.711 μ-law/A-law, IMA ADPCM and IEEE float
+(operators/audio.py) — and FLAC decode FOR REAL here, with no external
+library. The ``media_features`` gate reads its 32 payloads from package
+data (:func:`media_fixture`); the encoders that built them live beside the
+tests. The remaining compressed formats (perceptual audio MP3/AAC/Opus,
+video codecs, exotic images) dispatch to a clearly-marked
+``NotImplementedError`` seam — swap in Pillow/torchaudio/PyAV on a real
+cluster; nothing else changes.
+
+Bad payloads: a null payload yields NaN features; a malformed one raises
+``ValueError`` (``NotImplementedError`` for an unsupported variant) and
+fails the task. Filter or repair undecodable rows before these stages.
 
 Scale notes: binary payloads dominate I/O — keep them in their own column so
 column pruning skips them unless the stage needs bytes; repartition by a
 size budget before decode so one Arrow batch stays within executor memory.
 """
-
 from __future__ import annotations
 
 from collections.abc import Iterator
@@ -70,20 +73,6 @@ def decode_netpbm(payload: bytes) -> np.ndarray:
     return data.reshape(height, width, channels)
 
 
-def encode_netpbm(img: np.ndarray) -> bytes:
-    """Inverse of :func:`decode_netpbm` (used by the synthetic media
-    table and tests): uint8 (h, w, 1|3) or 2-D gray (h, w) → P5/P6 bytes.
-    Any other channel count raises — netpbm has no 2- or 4-channel form,
-    and writing one would round-trip to silently interleaved garbage."""
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, c = img.shape
-    if c not in (1, 3):
-        raise ValueError(f"netpbm supports 1 (P5) or 3 (P6) channels, got {c}")
-    magic = b"P6" if c == 3 else b"P5"
-    return magic + f"\n{w} {h}\n255\n".encode() + img.astype(np.uint8).tobytes()
-
-
 def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     """REAL audio decode for WAV and FLAC payloads — no external codec.
     Returns ((n_samples, n_channels) float64 in [-1, 1], sample_rate).
@@ -118,9 +107,14 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
                 break
             pos += 8 + clen + (clen & 1)  # chunks are word-aligned
 
-    with wave.open(io.BytesIO(payload), "rb") as wf:
-        sw, nch, rate = wf.getsampwidth(), wf.getnchannels(), wf.getframerate()
-        raw = wf.readframes(wf.getnframes())
+    try:
+        with wave.open(io.BytesIO(payload), "rb") as wf:
+            sw, nch = wf.getsampwidth(), wf.getnchannels()
+            rate = wf.getframerate()
+            raw = wf.readframes(wf.getnframes())
+    except (wave.Error, EOFError, RuntimeError) as exc:
+        # the stdlib parser's own errors for a malformed RIFF/WAVE header
+        raise ValueError(f"invalid WAV payload ({exc!r})") from exc
     if sw == 2:
         x = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
     elif sw == 4:
@@ -135,13 +129,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 #: color type → sample count (8-bit depth; palette type 3 not supported)
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
-
-
-def _paeth_vec(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Vectorized Paeth predictor (PNG spec §9.4) over int32 inputs."""
-    p = a + b - c
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
 
 
 def decode_png(payload: bytes) -> np.ndarray:
@@ -169,12 +156,16 @@ def decode_png(payload: bytes) -> np.ndarray:
     pos, idat, ihdr = 8, [], None
     while pos + 8 <= len(payload):
         (length,) = struct.unpack(">I", payload[pos:pos + 4])
+        if pos + 12 + length > len(payload):
+            raise ValueError("truncated PNG payload (chunk runs past the end)")
         ctype = payload[pos + 4:pos + 8]
         data = payload[pos + 8:pos + 8 + length]
         (crc,) = struct.unpack(">I", payload[pos + 8 + length:pos + 12 + length])
         if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
             raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
         if ctype == b"IHDR":
+            if length != 13:
+                raise ValueError("invalid PNG: IHDR is not 13 bytes")
             ihdr = struct.unpack(">IIBBBBB", data)
         elif ctype == b"IDAT":
             idat.append(data)
@@ -196,9 +187,12 @@ def decode_png(payload: bytes) -> np.ndarray:
     # size so a crafted payload with small dimensions cannot allocate far
     # more during decompression (same class as the TIFF Deflate fix)
     dec = zlib.decompressobj()
-    raw = dec.decompress(b"".join(idat), h * (1 + stride))
-    if (dec.decompress(dec.unconsumed_tail, 1) or dec.flush(1)
-            or len(raw) != h * (1 + stride)):
+    try:
+        raw = dec.decompress(b"".join(idat), h * (1 + stride))
+        extra = dec.decompress(dec.unconsumed_tail, 1) or dec.flush(1)
+    except zlib.error as exc:
+        raise ValueError(f"invalid PNG: corrupt IDAT stream ({exc})") from exc
+    if extra or len(raw) != h * (1 + stride):
         raise ValueError("PNG IDAT length does not match dimensions")
     scan = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + stride)
     ftypes, lines = scan[:, 0], scan[:, 1:]
@@ -234,55 +228,6 @@ def decode_png(payload: bytes) -> np.ndarray:
         else:
             raise ValueError(f"PNG filter type {f} is invalid")
     return recon.reshape(h, w, ch)
-
-
-def encode_png(img: np.ndarray, *, filter_type: int = 0) -> bytes:
-    """Inverse of :func:`decode_png` (stdlib ``zlib`` deflate): uint8
-    (h, w, 1|2|3|4) or 2-D gray → 8-bit PNG bytes. ``filter_type`` selects
-    the scanline filter (0–4) applied to EVERY row — encoding filters from
-    the original bytes has no sequential dependency, so all five vectorize;
-    tests use this to exercise every decode unfilter path."""
-    import struct
-    import zlib
-
-    if img.ndim == 2:
-        img = img[:, :, None]
-    h, w, ch = img.shape
-    color = {1: 0, 3: 2, 2: 4, 4: 6}.get(ch)
-    if color is None:
-        raise ValueError(f"PNG supports 1/2/3/4 channels, got {ch}")
-    if not 0 <= filter_type <= 4:
-        raise ValueError(f"PNG filter type must be 0-4, got {filter_type}")
-    px = np.ascontiguousarray(img, dtype=np.uint8).reshape(h, w * ch)
-    left = np.zeros_like(px, dtype=np.int32)
-    left[:, ch:] = px[:, :-ch]
-    up = np.zeros_like(px, dtype=np.int32)
-    up[1:] = px[:-1]
-    upleft = np.zeros_like(px, dtype=np.int32)
-    upleft[1:, ch:] = px[:-1, :-ch]
-    x = px.astype(np.int32)
-    if filter_type == 0:
-        filt = x
-    elif filter_type == 1:
-        filt = x - left
-    elif filter_type == 2:
-        filt = x - up
-    elif filter_type == 3:
-        filt = x - ((left + up) >> 1)
-    else:
-        filt = x - _paeth_vec(left, up, upleft)
-    scan = np.empty((h, 1 + w * ch), dtype=np.uint8)
-    scan[:, 0] = filter_type
-    scan[:, 1:] = (filt & 0xFF).astype(np.uint8)
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (_PNG_MAGIC + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(scan.tobytes(), 6))
-            + chunk(b"IEND", b""))
 
 
 def _decode_image_real(payload: bytes) -> np.ndarray:
@@ -363,8 +308,9 @@ def image_features(
     dispatches netpbm/PNG/JPEG/WebP/TIFF by magic bytes; every payload is
     self-describing, so no metadata column is needed). Output drops the
     payload (features only), so the binary column never shuffles. A null
-    payload yields NaN features (and a null ``phash``) instead of failing
-    the stage. ``with_phash=True`` also emits :func:`phash64` from the SAME
+    payload (a failed fetch) yields NaN features and a null ``phash``; a
+    malformed payload raises ``ValueError`` and fails the task.
+    ``with_phash=True`` also emits :func:`phash64` from the SAME
     decode — callers needing both features and the perceptual hash (e.g.
     the media gate) avoid a second decode pass.
     """
@@ -381,9 +327,8 @@ def image_features(
             hashes: list[int | None] = []
             for payload in pdf[payload_col]:
                 if payload is None:
-                    # corrupt/failed-fetch row must not kill the stage
-                    # (same policy as audio_features): NaN features,
-                    # row alignment preserved
+                    # null (failed-fetch) row: NaN features, row alignment
+                    # preserved; a malformed payload raises in the decode
                     means.append(nan3); stds.append(nan3)
                     hists.append([float("nan")] * 8)
                     hashes.append(None)
@@ -411,9 +356,10 @@ def image_features(
 def audio_features(
     df: DataFrame, *, payload_col: str = "payload",
 ) -> DataFrame:
-    """REAL WAV decode (stdlib) → duration, RMS, peak, zero-crossing rate
+    """REAL WAV/FLAC decode → duration, RMS, peak, zero-crossing rate
     per row. One mapInPandas pass; the binary column never leaves the stage
-    (features only downstream)."""
+    (features only downstream). A null payload yields NaN features; a
+    malformed one raises ``ValueError`` and fails the task."""
     schema = _schema_minus(
         df, payload_col, "duration_s double, rms double, peak double, zcr double")
 
@@ -422,8 +368,8 @@ def audio_features(
             dur, rms, peak, zcr = [], [], [], []
             for payload in pdf[payload_col]:
                 if payload is None:
-                    # a failed-fetch/corrupt row must not kill the stage:
-                    # features are NaN, row alignment preserved
+                    # null (failed-fetch) row: NaN features, row alignment
+                    # preserved; a malformed payload raises in the decode
                     dur.append(float("nan")); rms.append(float("nan"))
                     peak.append(float("nan")); zcr.append(float("nan"))
                     continue
@@ -493,161 +439,24 @@ def video_features(
     return df.mapInPandas(run, schema)
 
 
-def synthetic_media_rows(n: int = 32, seed: int = 6) -> list[tuple[int, str, bytearray]]:
-    """Deterministic (item_id, kind, payload) rows with REAL decodable
-    payloads — P6 PPM images, 8-bit RGB PNGs (i % 4 == 2, filter type
-    cycling over the PNG rows actually emitted so every unfilter path —
-    None/Sub/Up/Average/Paeth — runs inside the driver gate), JPEGs
-    (i % 8 == 4 — baseline 4:4:4 / 4:2:0, progressive SOF2 at i >= 16,
-    restart intervals 0/1/2/3 by i//8), lossless WebPs (i % 32 == 16:
-    palette+bundling; i % 32 == 24: subtract-green/predictor/cross-color
-    + color cache + LZ77), a baseline TIFF (i % 32 == 22: LZW strips +
-    horizontal predictor — steals one PNG slot; the remaining 5 PNG rows
-    still cover all five filter types),
-    GIF videos (i % 16 == 14), and WAV clips — PCM-16 plus REAL compressed
-    audio (G.711 μ-law/A-law, IMA ADPCM 4-bit; audio slots by i % 8, see
-    below). Pure Python/numpy (no Spark) so the driver-side oracle twin
-    (oracle_fit.media_features_expected) regenerates byte-identical
-    payloads from the same (n, seed). NOTE: the rng variate sequence is a
-    function of the SLOT LAYOUT (the video slot draws palette/frames where
-    image slots draw one pixel array), so payloads are stable within a
-    code version, not across layout changes — parity is guaranteed by the
-    shared generator, never by cross-version payload stability. JPEG/GIF
-    features are pinned to these codecs' deterministic output (lossy /
-    palette-mapped by design; the twin decodes the same bytes with the
-    same decoders)."""
+def media_fixture():
+    """The ``media_features`` gate input: 32 ``(item_id, kind, payload)``
+    rows as a pyarrow Table, read from package data (so it also loads from
+    a zipped ``--py-files`` package). The gate query and its oracle twin
+    both read it here."""
     import io
-    import wave
+    from importlib.resources import files
 
-    rng = np.random.default_rng(seed)
-    rows = []
-    png_count = 0
-    for i in range(n):
-        if i % 16 == 14:
-            # video slot: a REAL multi-frame GIF (operators/gif.py) — 64-
-            # color palette, 3–6 frames, per-frame delays; the second one
-            # (i = 30) writes frame 0 interlaced so the deinterlace path
-            # runs inside the gate
-            from ficaria_spark.operators.gif import encode_gif
-            w, h = int(rng.integers(8, 32)), int(rng.integers(8, 32))
-            pal = rng.integers(0, 256, size=(64, 3), dtype=np.uint8)
-            nf = int(rng.integers(3, 7))
-            frames = [rng.integers(0, 64, size=(h, w), dtype=np.uint8)
-                      for _ in range(nf)]
-            delays = [int(rng.integers(4, 20)) for _ in range(nf)]
-            payload = encode_gif(frames, pal, delays=delays,
-                                 interlace_first=(i // 16) % 2 == 1)
-            rows.append((i, "video", bytearray(payload)))
-        elif i % 2 == 0:
-            w, h = int(rng.integers(8, 32)), int(rng.integers(8, 32))
-            img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-            if i % 32 == 22:
-                # baseline TIFF (operators/tiff.py): LZW + horizontal-
-                # predictor strips — the LZW early-change and predictor
-                # inverse paths run inside the gate. Steals one PNG slot;
-                # the remaining 5 PNG rows still cycle through all five
-                # filter types exactly once (png_count % 5 below)
-                from ficaria_spark.operators.tiff import encode_tiff
-                payload = encode_tiff(img, compression="lzw",
-                                      predictor=True, rows_per_strip=5)
-            elif i % 4 == 2:
-                # cycle the filter over the PNG rows ACTUALLY emitted (the
-                # video slot steals i=14, so an (i//4)%5 cycle would skip
-                # filter 3/Average entirely — r6 review finding)
-                payload = encode_png(img, filter_type=png_count % 5)
-                png_count += 1
-            elif i % 32 == 16 or i % 32 == 24:
-                from ficaria_spark.operators.webp import encode_webp_lossless
-                if i % 32 == 16:
-                    # palette (color-indexing) WebP: 16 colors -> 4-bit
-                    # indices bundled 2 px/byte (width_bits=1), plus the
-                    # delta-coded palette path, inside the gate
-                    pal = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-                    img = pal[img[..., 0] % 16]
-                    payload = encode_webp_lossless(img, palette=True,
-                                                   lz77=True)
-                else:
-                    # full VP8L transform chain: subtract-green ->
-                    # predictor (modes cycling per tile) -> cross-color,
-                    # color cache + LZ77 backward references
-                    payload = encode_webp_lossless(
-                        img, subtract_green=True, predictor=True,
-                        cross_color=True, cache_bits=6, lz77=True)
-            elif i % 8 == 4:
-                from ficaria_spark.operators.jpeg import encode_jpeg
-                # i//8 in {0,1} -> baseline (4:4:4 / 4:2:0);
-                # i//8 in {2,3} -> PROGRESSIVE (spectral selection +
-                # successive approximation), so both JPEG modes decode
-                # inside the driver gate. restart_interval = i//8 covers
-                # none/1/2/3 — interval > 1 bookkeeping (RSTn index wrap,
-                # mcu_count // interval) stays gate-exercised in BOTH modes
-                # (r6 review finding: progressive slots had dropped it).
-                payload = encode_jpeg(img, quality=90,
-                                      subsample=(i // 8) % 2 == 1,
-                                      restart_interval=i // 8,
-                                      progressive=(i // 8) >= 2)
-            else:
-                payload = encode_netpbm(img)
-            rows.append((i, "image", bytearray(payload)))
-        else:
-            rate = 8000
-            t = np.arange(int(rng.integers(800, 4000))) / rate
-            tone = (0.5 * np.sin(2 * np.pi * float(rng.integers(100, 800)) * t)
-                    * 32767).astype("<i2")
-            # audio slots by i % 8: 1 → PCM-16 (the original stdlib-wave
-            # path, byte-identical to earlier rounds) except i%32∈{17,25}
-            # which carry FLAC (operators/flac.py — 17: mono with LPC
-            # order 8 offered (cost-selected) + Rice partitions; 25:
-            # stereo mid/side, fixed prediction only),
-            # 3 → G.711 μ-law, 5 → IMA ADPCM (real 4-bit compression),
-            # 7 → G.711 A-law — every audio decoder runs inside the gate
-            if i % 32 in (17, 25):
-                from ficaria_spark.operators.flac import encode_flac
-                pcm = tone.astype(np.int64)
-                if i % 32 == 25:
-                    # second channel: scaled + delayed copy (decorrelates
-                    # enough that mid/side carries a real side signal)
-                    other = np.roll((pcm * 3) // 4, 7)
-                    pcm = np.stack([pcm, other], axis=1)
-                payload = encode_flac(
-                    pcm, rate, block_size=1024, partition_order=2,
-                    lpc_order=8 if i % 32 == 17 else 0,
-                    stereo_mode="mid_side" if i % 32 == 25
-                    else "independent")
-            elif i % 8 == 1:
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(2)
-                    wf.setframerate(rate)
-                    wf.writeframes(tone.tobytes())
-                payload = buf.getvalue()
-            else:
-                from ficaria_spark.operators.audio import encode_wav_compressed
-                codec = {3: "mulaw", 5: "ima_adpcm", 7: "alaw"}[i % 8]
-                payload = encode_wav_compressed(tone, rate, codec=codec)
-            rows.append((i, "audio", bytearray(payload)))
-    return rows
+    import pyarrow.parquet as pq
+
+    raw = files("ficaria_spark").joinpath("data/media_fixture.parquet")
+    return pq.read_table(io.BytesIO(raw.read_bytes()))
 
 
-def synthetic_media_table(spark, n: int = 32, seed: int = 6) -> DataFrame:
-    """(item_id, kind, payload binary) with REAL decodable payloads —
-    PPM/PNG/JPEG images and PCM/G.711/ADPCM WAV clips built in-process —
-    so the real-codec paths are exercised end-to-end without any external
-    library."""
-    import pyarrow as pa
-
-    rows = synthetic_media_rows(n, seed)
-    # Arrow-table construction (r7): the plain-list createDataFrame takes
-    # the pickle/py4j RDD path and re-serializes per action — measured
-    # 1.4 s per materialization for 32 rows vs 0.13 s through Arrow
-    tbl = pa.table({
-        "item_id": pa.array([r[0] for r in rows], pa.int64()),
-        "kind": pa.array([r[1] for r in rows], pa.string()),
-        "payload": pa.array([bytes(r[2]) for r in rows], pa.binary()),
-    })
-    # n is small (a synthetic fixture): without the coalesce, createDataFrame
-    # spreads it over defaultParallelism partitions and every downstream
-    # mapInPandas stage spins one Python worker PER near-empty partition
-    # (measured: 7.8 s cold for 32 rows at 32 partitions vs ~1 s coalesced)
-    return spark.createDataFrame(tbl).coalesce(max(1, min(4, n // 8)))
+def synthetic_media_table(spark) -> DataFrame:
+    """:func:`media_fixture` as a Spark DataFrame in 4 partitions."""
+    # Through Arrow, not a plain list (the pickle/py4j path re-serializes
+    # per action: 1.4 s vs 0.13 s per materialization); coalesced, or every
+    # mapInPandas stage spins one Python worker per near-empty partition
+    # (7.8 s cold at 32 partitions vs ~1 s)
+    return spark.createDataFrame(media_fixture()).coalesce(4)

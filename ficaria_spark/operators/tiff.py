@@ -4,10 +4,9 @@ Implements the public TIFF 6.0 baseline (plus the Deflate extension):
 both byte orders (II/MM), strip-based storage, 8-bit grayscale/RGB/RGBA,
 Compression 1 (none), 32773 (PackBits), 5 (LZW — MSB-first codes with
 the TIFF early-change convention), 8 (Deflate/zlib), and Predictor 2
-(horizontal differencing). The encoder emits a conformant subset
-(selectable compression/predictor/strip size, little-endian) used by
-round-trip tests and the media gate; the decoder additionally handles
-big-endian files, multi-strip layouts and inline-vs-offset IFD values.
+(horizontal differencing). The test-side encoder (tests/media_gen.py)
+writes little-endian files; the decoder also handles big-endian files,
+multi-strip layouts and inline-vs-offset IFD values.
 
 Extends the image family (multimodal._decode_image_real dispatches on
 the II*/MM* magic) alongside netpbm/PNG/JPEG/WebP — training-data-
@@ -101,64 +100,6 @@ def _lzw_decode(data: bytes, expected: int) -> bytes:
     return bytes(out)
 
 
-def _lzw_encode(data: bytes) -> bytes:
-    CLEAR, EOI = 256, 257
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def put(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append((acc >> nbits) & 0xFF)
-        # truncate drained bits — an unbounded Python-int accumulator
-        # makes encoding O(bytes^2) (the same trap fixed in the JPEG
-        # decoder; measured 4x-per-doubling on 50..400 KB strips)
-        acc &= (1 << nbits) - 1
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    width = 9
-    put(CLEAR, width)
-    w = b""
-    for b in bytes(data):
-        wb = w + bytes([b])
-        if wb in table:
-            w = wb
-            continue
-        put(table[w], width)
-        table[wb] = next_code
-        next_code += 1
-        # early change mirrors the decoder exactly
-        if next_code >= (1 << width) - 1:
-            if width < 12:
-                width += 1
-            else:
-                put(CLEAR, width)
-                table = {bytes([i]): i for i in range(256)}
-                next_code = 258
-                width = 9
-        w = bytes([b])
-    if w:
-        put(table[w], width)
-        # the decoder registers an entry for EVERY data code it processes
-        # — including this final one (it cannot know no more data follows)
-        # — so if the width boundary falls exactly here, EOI must be
-        # written at the grown width (the classic TIFF LZW end-of-strip
-        # off-by-one; traced via a 253-byte stream whose EOI straddled
-        # the 9->10-bit change)
-        next_code += 1
-        if next_code >= (1 << width) - 1 and width < 12:
-            width += 1
-    put(EOI, width)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
 # ---------------------------------------------------------------------------
 # PackBits (Apple RLE, TIFF 6.0 §9).
 
@@ -185,32 +126,6 @@ def _packbits_decode(data: bytes, expected: int) -> bytes:
         raise ValueError("invalid TIFF: PackBits strip shorter than "
                          "its raster")
     return bytes(out[:expected])
-
-
-def _packbits_encode(row: bytes) -> bytes:
-    out = bytearray()
-    i = 0
-    n = len(row)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and row[i + run] == row[i]:
-            run += 1
-        if run >= 2:
-            out.append(257 - run)
-            out.append(row[i])
-            i += run
-            continue
-        lit_start = i
-        while i < n and (i - lit_start) < 128:
-            nxt = 1
-            while i + nxt < n and nxt < 3 and row[i + nxt] == row[i]:
-                nxt += 1
-            if nxt >= 3:
-                break
-            i += 1
-        out.append(i - lit_start - 1)
-        out += row[lit_start:i]
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -354,122 +269,3 @@ def decode_tiff(payload: bytes) -> np.ndarray:
     if spp == 1:
         return np.repeat(img, 3, axis=2)
     return img.copy()
-
-
-# ---------------------------------------------------------------------------
-# Encoder.
-
-
-def encode_tiff(img: np.ndarray, *, compression: str = "none",
-                predictor: bool = False,
-                rows_per_strip: int = 0) -> bytes:
-    """Encode (H, W[, 3|4]) or (H, W) uint8 to little-endian TIFF.
-    ``compression`` ∈ {none, packbits, lzw, deflate}; ``predictor=True``
-    applies horizontal differencing (Predictor 2 — only meaningful with
-    lzw/deflate, where it helps smooth content); ``rows_per_strip=0``
-    puts the whole image in one strip."""
-    img = np.asarray(img)
-    if img.dtype != np.uint8:
-        raise ValueError("image must be uint8")
-    if img.ndim == 2:
-        img = img[:, :, None]
-    if img.ndim != 3 or img.shape[2] not in (1, 3, 4):
-        raise ValueError("image must be (H, W), (H, W, 3) or (H, W, 4)")
-    h, w, spp = img.shape
-    if h == 0 or w == 0:
-        raise ValueError("image must be non-empty")
-    comp_code = {"none": 1, "packbits": 32773, "lzw": 5,
-                 "deflate": 8}.get(compression)
-    if comp_code is None:
-        raise ValueError(f"unknown compression {compression!r}")
-    if predictor and compression in ("none", "packbits"):
-        raise ValueError("predictor=True requires lzw or deflate "
-                         "(TIFF 6.0 attaches Predictor to LZW; the "
-                         "baseline codecs don't use it)")
-
-    data = img
-    if predictor:
-        d = img.astype(np.int16)
-        d[:, 1:] = d[:, 1:] - d[:, :-1]
-        data = (d & 0xFF).astype(np.uint8)
-
-    rps = rows_per_strip if rows_per_strip > 0 else h
-    strips: list[bytes] = []
-    for y0 in range(0, h, rps):
-        chunk = data[y0:y0 + rps].tobytes()
-        if comp_code == 1:
-            strips.append(chunk)
-        elif comp_code == 32773:
-            # PackBits must not run across row boundaries (TIFF 6.0 §9)
-            rb = w * spp
-            enc = bytearray()
-            for r in range(0, len(chunk), rb):
-                enc += _packbits_encode(chunk[r:r + rb])
-            strips.append(bytes(enc))
-        elif comp_code == 5:
-            strips.append(_lzw_encode(chunk))
-        else:
-            strips.append(zlib.compress(chunk, 6))
-
-    def entry(tag: int, typ: int, count: int, value: int) -> bytes:
-        return struct.pack("<HHII", tag, typ, count, value)
-
-    entries = []
-    photometric = 1 if spp == 1 else 2
-    n_strips = len(strips)
-    # layout: header (8) + IFD + [BitsPerSample array for spp >= 3]
-    #         + [strip offset/count arrays] + strips
-    n_tags = 10 + (1 if predictor else 0) + (1 if spp == 4 else 0)
-    ifd_size = 2 + 12 * n_tags + 4
-    blob_base = 8 + ifd_size
-    bits_size = 2 * spp if spp >= 3 else 0
-    arrays_size = 8 * n_strips if n_strips > 1 else 0
-    data_start = blob_base + bits_size + arrays_size
-    extra = b""
-    if spp >= 3:
-        bits_val, bits_count = blob_base, spp
-        extra += struct.pack(f"<{spp}H", *([8] * spp))
-    else:
-        bits_val, bits_count = 8, 1
-    offs = []
-    pos = data_start
-    for s in strips:
-        offs.append(pos)
-        pos += len(s)
-    if n_strips > 1:
-        strip_off_pos = blob_base + bits_size
-        strip_cnt_pos = strip_off_pos + 4 * n_strips
-        extra += b"".join(struct.pack("<I", o) for o in offs) \
-            + b"".join(struct.pack("<I", len(s)) for s in strips)
-        so_val, sc_val = strip_off_pos, strip_cnt_pos
-        so_count = sc_count = n_strips
-    else:
-        so_val, sc_val = offs[0], len(strips[0])
-        so_count = sc_count = 1
-
-    entries.append(entry(_TAG_WIDTH, 4, 1, w))
-    entries.append(entry(_TAG_HEIGHT, 4, 1, h))
-    entries.append(entry(_TAG_BITS, 3, bits_count, bits_val))
-    entries.append(entry(_TAG_COMPRESSION, 3, 1, comp_code))
-    entries.append(entry(_TAG_PHOTOMETRIC, 3, 1, photometric))
-    entries.append(entry(_TAG_STRIP_OFFSETS, 4, so_count, so_val))
-    entries.append(entry(_TAG_SPP, 3, 1, spp))
-    entries.append(entry(_TAG_ROWS_PER_STRIP, 4, 1, rps))
-    entries.append(entry(_TAG_STRIP_COUNTS, 4, sc_count, sc_val))
-    entries.append(entry(_TAG_PLANAR, 3, 1, 1))
-    if predictor:
-        entries.append(entry(_TAG_PREDICTOR, 3, 1, 2))
-    if spp == 4:
-        # TIFF 6.0 requires ExtraSamples whenever samples exceed the
-        # photometric's channels; 2 = unassociated alpha
-        entries.append(entry(338, 3, 1, 2))
-    entries.sort(key=lambda e: struct.unpack("<H", e[:2])[0])
-
-    out = bytearray(b"II" + struct.pack("<HI", 42, 8))
-    out += struct.pack("<H", n_tags)
-    out += b"".join(entries)
-    out += struct.pack("<I", 0)           # no next IFD
-    out += extra
-    for s in strips:
-        out += s
-    return bytes(out)

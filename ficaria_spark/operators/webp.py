@@ -8,14 +8,9 @@ the color cache, meta-Huffman (per-tile code groups), and all four
 transforms — predictor (14 modes), cross-color, subtract-green and
 color-indexing with sub-byte pixel bundling.
 
-The encoder emits a spec-conformant subset chosen to exercise every
-decoder path in round-trip tests: optional subtract-green → predictor →
-cross-color transform chain (the canonical libwebp order), optional
-palette (color-indexing) with bundling, optional greedy LZ77 (distance 1 /
-distance width runs — both map through the 2D table), optional color
-cache, and per-alphabet simple-vs-full Huffman code selection with
-package-merge length-limited codes. Lossless: decode(encode(img)) == img
-exactly.
+The round-trip tests' encoder (tests/media_gen.py) emits a conformant
+subset that reaches every decoder path but meta-Huffman, which a
+hand-built stream covers.
 
 Closes the WebP half of the image-codec seam named in
 operators/multimodal.py (reference parity context: the reference engine
@@ -24,7 +19,7 @@ image_features over real-world corpora — szostkawron/ficaria has no
 counterpart, this is training-data-pipeline surface).
 
 The 2D distance table below is transcribed from the published spec
-(kCodeToPlane); encoder and decoder share it, so round-trips validate
+(kCodeToPlane); the test-side encoder imports it, so round-trips validate
 self-consistency by construction.
 """
 from __future__ import annotations
@@ -107,36 +102,6 @@ class _Reader:
         raise ValueError("invalid WebP: Huffman code longer than 15 bits")
 
 
-class _Writer:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def put(self, v: int, n: int) -> None:
-        self._acc |= (v & ((1 << n) - 1)) << self._n
-        self._n += n
-        while self._n >= 8:
-            self.out.append(self._acc & 0xFF)
-            self._acc >>= 8
-            self._n -= 8
-
-    def put_code(self, code: int, length: int) -> None:
-        """Emit a Huffman code MSB-first (reverse then put LSB-first)."""
-        rev = 0
-        for _ in range(length):
-            rev = (rev << 1) | (code & 1)
-            code >>= 1
-        self.put(rev, length)
-
-    def flush(self) -> bytes:
-        if self._n:
-            self.out.append(self._acc & 0xFF)
-            self._acc = 0
-            self._n = 0
-        return bytes(self.out)
-
-
 # ---------------------------------------------------------------------------
 # Canonical Huffman codes.
 
@@ -169,29 +134,8 @@ def _decode_table(lengths: dict[int, int]) -> dict[tuple[int, int], int]:
     return table
 
 
-def _package_merge(freqs: dict[int, int], limit: int) -> dict[int, int]:
-    """Length-limited Huffman code lengths (coin-collector package-merge)."""
-    items = sorted((f, (s,)) for s, f in freqs.items() if f > 0)
-    if not items:
-        return {}
-    if len(items) == 1:
-        return {items[0][1][0]: 1}
-    pm = list(items)
-    for _ in range(limit - 1):
-        packaged = [
-            (pm[i][0] + pm[i + 1][0], pm[i][1] + pm[i + 1][1])
-            for i in range(0, len(pm) - 1, 2)
-        ]
-        pm = sorted(packaged + items)
-    counts = {s: 0 for _f, (s,) in items}
-    for _f, syms in pm[: 2 * len(items) - 2]:
-        for s in syms:
-            counts[s] += 1
-    return counts
-
-
 # ---------------------------------------------------------------------------
-# Prefix (length/distance) coding shared by encoder and decoder.
+# Prefix (length/distance) coding.
 
 
 def _prefix_decode(sym: int, br: _Reader) -> int:
@@ -200,37 +144,6 @@ def _prefix_decode(sym: int, br: _Reader) -> int:
     extra = (sym - 2) >> 1
     offset = (2 + (sym & 1)) << extra
     return offset + br.bits(extra) + 1
-
-
-def _prefix_encode(value: int) -> tuple[int, int, int]:
-    """value (>= 1) -> (symbol, extra_bits_value, extra_bits_count)."""
-    x = value - 1
-    if x < 4:
-        return x, 0, 0
-    eb = x.bit_length() - 2
-    base = 1 << (eb + 1)
-    if x < base + (base >> 1):
-        return 2 * eb + 2, x - base, eb
-    return 2 * eb + 3, x - (base + (base >> 1)), eb
-
-
-_dist_reverse_cache: dict[int, dict[int, int]] = {}
-
-
-def _dist_reverse(width: int) -> dict[int, int]:
-    """distance -> plane code for the 120 neighborhood entries (per width).
-    When several entries map to the same linear distance the SMALLEST code
-    wins (they are interchangeable on the wire; smaller sorts first)."""
-    tab = _dist_reverse_cache.get(width)
-    if tab is None:
-        tab = {}
-        for i, pc in enumerate(_CODE_TO_PLANE):
-            dx, dy = _plane_to_offsets(pc)
-            d = dy * width + dx
-            if d >= 1 and d not in tab:
-                tab[d] = i + 1
-        _dist_reverse_cache[width] = tab
-    return tab
 
 
 # ---------------------------------------------------------------------------
@@ -639,392 +552,3 @@ def decode_webp(payload: bytes) -> np.ndarray:
     if alpha_used:
         return np.stack([r, g, b, a], axis=-1)
     return np.stack([r, g, b], axis=-1)
-
-
-# ---------------------------------------------------------------------------
-# Encoder.
-
-
-def _write_huffman_code(bw: _Writer, freqs: dict[int, int],
-                        alphabet_size: int) -> dict[int, tuple[int, int]]:
-    """Choose simple vs full representation, write it, return the symbol ->
-    (code, length) map for the payload emission."""
-    used = sorted(s for s, f in freqs.items() if f > 0)
-    if not used:
-        used = [0]                      # a code must define >= 1 symbol
-    if len(used) <= 2 and used[-1] <= 255:
-        bw.put(1, 1)                                     # simple
-        bw.put(len(used) - 1, 1)
-        if used[0] > 1:
-            bw.put(1, 1)
-            bw.put(used[0], 8)
-        else:
-            bw.put(0, 1)
-            bw.put(used[0], 1)
-        if len(used) == 1:
-            return {used[0]: (0, 0)}
-        bw.put(used[1], 8)
-        return {used[0]: (0, 1), used[1]: (1, 1)}
-
-    lengths = _package_merge({s: freqs[s] for s in used}, 15)
-    # Serialize the FULL length array with the code-length alphabet (RLE
-    # 16/17/18). No trailing-zero trim: without an explicit max_symbol the
-    # decoder keeps reading length tokens until every alphabet slot is
-    # covered, so trailing zeros must arrive as 17/18 runs.
-    arr = [lengths.get(s, 0) for s in range(alphabet_size)]
-    tokens: list[tuple[int, int, int]] = []   # (symbol, extra, extra_bits)
-    i = 0
-    while i < len(arr):
-        ln = arr[i]
-        run = 1
-        while i + run < len(arr) and arr[i + run] == ln:
-            run += 1
-        i += run
-        if ln == 0:
-            while run >= 3:
-                rep = min(run, 138)
-                if rep >= 11:
-                    tokens.append((18, rep - 11, 7))
-                else:
-                    tokens.append((17, rep - 3, 3))
-                run -= rep
-            tokens.extend((0, 0, 0) for _ in range(run))
-        else:
-            tokens.append((ln, 0, 0))   # literal sets prev_code_len = ln
-            run -= 1
-            while run >= 3:
-                rep = min(run, 6)
-                tokens.append((16, rep - 3, 2))
-                run -= rep
-            tokens.extend((ln, 0, 0) for _ in range(run))
-    clc_freqs: dict[int, int] = {}
-    for sym, _e, _eb in tokens:
-        clc_freqs[sym] = clc_freqs.get(sym, 0) + 1
-    clc_lengths = _package_merge(clc_freqs, 7)
-    clc_codes = _canonical_codes(clc_lengths)
-    if len(clc_codes) == 1:
-        # libwebp's trivial-table rule: a single-symbol code reads/writes
-        # 0 bits regardless of its declared length
-        clc_codes = {sym: (0, 0) for sym in clc_codes}
-    bw.put(0, 1)                                         # full code
-    bw.put(19 - 4, 4)                                    # all 19 clc slots
-    for sym in _CLC_ORDER:
-        bw.put(clc_lengths.get(sym, 0), 3)
-    bw.put(0, 1)                                         # no max_symbol
-    for sym, extra, ebits in tokens:
-        code, ln = clc_codes[sym]
-        bw.put_code(code, ln)
-        if ebits:
-            bw.put(extra, ebits)
-    payload_codes = _canonical_codes(lengths)
-    if len(payload_codes) == 1:
-        payload_codes = {sym: (0, 0) for sym in payload_codes}
-    return payload_codes
-
-
-def _tokenize(argb: np.ndarray, w: int, *, lz77: bool, cache_bits: int
-              ) -> list[tuple]:
-    """Greedy tokenizer: ('lit', px) | ('copy', length, dist) |
-    ('cache', idx). Mirrors the decoder's cache-update rule (insert on
-    literal and on every copied pixel)."""
-    n = len(argb)
-    tokens: list[tuple] = []
-    cache = [None] * (1 << cache_bits) if cache_bits else None
-    shift = 32 - cache_bits if cache_bits else 0
-    pos = 0
-    px_at = argb
-    while pos < n:
-        if lz77 and pos >= 1:
-            best_len = 0
-            best_dist = 0
-            for dist in (1, w):
-                if dist > pos:
-                    continue
-                length = 0
-                maxlen = min(n - pos, 4096)
-                while length < maxlen and \
-                        px_at[pos + length] == px_at[pos + length - dist]:
-                    length += 1
-                if length > best_len:
-                    best_len, best_dist = length, dist
-            if best_len >= 3:
-                tokens.append(("copy", best_len, best_dist))
-                if cache is not None:
-                    for i in range(pos, pos + best_len):
-                        px = int(px_at[i])
-                        cache[(_HASH_MUL * px & 0xFFFFFFFF) >> shift] = px
-                pos += best_len
-                continue
-        px = int(px_at[pos])
-        if cache is not None:
-            slot = (_HASH_MUL * px & 0xFFFFFFFF) >> shift
-            if cache[slot] == px:
-                tokens.append(("cache", slot))
-                pos += 1
-                continue
-            cache[slot] = px
-        tokens.append(("lit", px))
-        pos += 1
-    return tokens
-
-
-def _encode_image_stream(bw: _Writer, argb: np.ndarray, w: int, h: int, *,
-                         lz77: bool = False, cache_bits: int = 0,
-                         level0: bool = False) -> None:
-    """Entropy-coded image (no transforms — callers write those), one
-    Huffman group. Only a level-0 stream carries the meta-Huffman bit;
-    transform/palette sub-images must not write it."""
-    tokens = _tokenize(argb, w, lz77=lz77, cache_bits=cache_bits)
-    if cache_bits:
-        bw.put(1, 1)
-        bw.put(cache_bits, 4)
-    else:
-        bw.put(0, 1)
-    if level0:
-        bw.put(0, 1)                   # no meta-Huffman (single code group)
-    g_f: dict[int, int] = {}
-    r_f: dict[int, int] = {}
-    b_f: dict[int, int] = {}
-    a_f: dict[int, int] = {}
-    d_f: dict[int, int] = {}
-    dist_rev = _dist_reverse(w)
-    emits: list[tuple] = []
-    for tok in tokens:
-        if tok[0] == "lit":
-            px = tok[1]
-            g, r, b, a = (px >> 8) & 0xFF, (px >> 16) & 0xFF, \
-                px & 0xFF, (px >> 24) & 0xFF
-            g_f[g] = g_f.get(g, 0) + 1
-            r_f[r] = r_f.get(r, 0) + 1
-            b_f[b] = b_f.get(b, 0) + 1
-            a_f[a] = a_f.get(a, 0) + 1
-            emits.append(("lit", g, r, b, a))
-        elif tok[0] == "copy":
-            _, length, dist = tok
-            lsym, lex, leb = _prefix_encode(length)
-            g_f[256 + lsym] = g_f.get(256 + lsym, 0) + 1
-            dist_code = dist_rev.get(dist, dist + 120)
-            dsym, dex, deb = _prefix_encode(dist_code)
-            d_f[dsym] = d_f.get(dsym, 0) + 1
-            emits.append(("copy", lsym, lex, leb, dsym, dex, deb))
-        else:
-            idx = tok[1]
-            sym = 256 + 24 + idx
-            g_f[sym] = g_f.get(sym, 0) + 1
-            emits.append(("cache", sym))
-    green_size = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-    g_c = _write_huffman_code(bw, g_f, green_size)
-    r_c = _write_huffman_code(bw, r_f, 256)
-    b_c = _write_huffman_code(bw, b_f, 256)
-    a_c = _write_huffman_code(bw, a_f, 256)
-    d_c = _write_huffman_code(bw, d_f, 40)
-    for e in emits:
-        if e[0] == "lit":
-            _, g, r, b, a = e
-            bw.put_code(*g_c[g])
-            bw.put_code(*r_c[r])
-            bw.put_code(*b_c[b])
-            bw.put_code(*a_c[a])
-        elif e[0] == "copy":
-            _, lsym, lex, leb, dsym, dex, deb = e
-            bw.put_code(*g_c[256 + lsym])
-            if leb:
-                bw.put(lex, leb)
-            bw.put_code(*d_c[dsym])
-            if deb:
-                bw.put(dex, deb)
-        else:
-            bw.put_code(*g_c[e[1]])
-
-
-def _to_argb(img: np.ndarray) -> tuple[np.ndarray, int, int, bool]:
-    img = np.asarray(img)
-    if img.dtype != np.uint8:
-        raise ValueError("image must be uint8")
-    if img.ndim == 2:
-        img = np.stack([img] * 3, axis=-1)
-    if img.ndim != 3 or img.shape[2] not in (3, 4):
-        raise ValueError("image must be (H, W), (H, W, 3) or (H, W, 4)")
-    h, w = img.shape[:2]
-    if not (0 < w <= 16384 and 0 < h <= 16384):
-        raise ValueError("image dimensions out of VP8L range (14 bits)")
-    alpha_used = img.shape[2] == 4
-    a = img[..., 3].astype(np.uint32) if alpha_used else np.uint32(255)
-    argb = ((a << np.uint32(24))
-            | (img[..., 0].astype(np.uint32) << np.uint32(16))
-            | (img[..., 1].astype(np.uint32) << np.uint32(8))
-            | img[..., 2].astype(np.uint32))
-    return np.ascontiguousarray(argb.reshape(-1)), w, h, alpha_used
-
-
-def _forward_subtract_green(argb: np.ndarray) -> np.ndarray:
-    g = (argb >> np.uint32(8)) & np.uint32(0xFF)
-    r = (((argb >> np.uint32(16)) & np.uint32(0xFF)) - g) & np.uint32(0xFF)
-    b = ((argb & np.uint32(0xFF)) - g) & np.uint32(0xFF)
-    return (argb & np.uint32(0xFF00FF00)) | (r << np.uint32(16)) | b
-
-
-def _sub_pixels(a: int, b: int) -> int:
-    out = 0
-    for s in (0, 8, 16, 24):
-        out |= ((((a >> s) & 0xFF) - ((b >> s) & 0xFF)) & 0xFF) << s
-    return out
-
-
-def _forward_predictor(argb: np.ndarray, w: int, h: int, bits: int
-                       ) -> tuple[np.ndarray, np.ndarray]:
-    """Residuals + the predictor sub-image. Tile modes cycle 0..13 so every
-    inverse-predictor path runs in round-trip tests."""
-    tw, th = _ceil_div(w, 1 << bits), _ceil_div(h, 1 << bits)
-    modes = np.arange(tw * th, dtype=np.int64) % 14
-    out = np.empty_like(argb)
-    for y in range(h):
-        trow = (y >> bits) * tw
-        for x in range(w):
-            pos = y * w + x
-            if pos == 0:
-                pred = 0xFF000000
-            elif y == 0:
-                pred = int(argb[pos - 1])
-            elif x == 0:
-                pred = int(argb[pos - w])
-            else:
-                pred = _predict(int(modes[trow + (x >> bits)]), argb, pos, w)
-            out[pos] = _sub_pixels(int(argb[pos]), pred)
-    sub = (np.uint32(0xFF000000)
-           | (modes.astype(np.uint32) << np.uint32(8)))
-    return out, sub
-
-
-def _forward_color_transform(argb: np.ndarray, w: int, h: int, bits: int
-                             ) -> tuple[np.ndarray, np.ndarray]:
-    """Apply a deterministic per-tile cross-color transform; returns
-    (transformed pixels, element sub-image)."""
-    tw, th = _ceil_div(w, 1 << bits), _ceil_div(h, 1 << bits)
-    ti = np.arange(tw * th, dtype=np.uint32)
-    g2r = (ti * np.uint32(17) + np.uint32(3)) & np.uint32(0xFF)
-    g2b = (ti * np.uint32(29) + np.uint32(7)) & np.uint32(0xFF)
-    r2b = (ti * np.uint32(13) + np.uint32(11)) & np.uint32(0xFF)
-    sub = (np.uint32(0xFF000000) | (r2b << np.uint32(16))
-           | (g2b << np.uint32(8)) | g2r)
-    xs = np.arange(w) >> bits
-    ys = np.arange(h) >> bits
-    tile = (ys[:, None] * tw + xs[None, :]).reshape(-1)
-    G2R = g2r[tile].astype(np.uint8).view(np.int8).astype(np.int32)
-    G2B = g2b[tile].astype(np.uint8).view(np.int8).astype(np.int32)
-    R2B = r2b[tile].astype(np.uint8).view(np.int8).astype(np.int32)
-    g = ((argb >> 8) & 0xFF).astype(np.uint8).view(np.int8).astype(np.int32)
-    red = ((argb >> 16) & 0xFF).astype(np.int32)
-    blue = (argb & 0xFF).astype(np.int32)
-    red_s = red.astype(np.uint8).view(np.int8).astype(np.int32)
-    new_red = (red - ((G2R * g) >> 5)) & 0xFF
-    new_blue = (blue - ((G2B * g) >> 5) - ((R2B * red_s) >> 5)) & 0xFF
-    out = (argb & np.uint32(0xFF00FF00)) | \
-        (new_red.astype(np.uint32) << np.uint32(16)) | \
-        new_blue.astype(np.uint32)
-    return out, sub
-
-
-def encode_webp_lossless(img: np.ndarray, *, subtract_green: bool = False,
-                         predictor: bool = False, cross_color: bool = False,
-                         palette: bool = False, lz77: bool = True,
-                         cache_bits: int = 0,
-                         transform_bits: int = 2) -> bytes:
-    """Encode (H, W[, 3|4]) uint8 to a lossless WebP (RIFF/VP8L) payload.
-    Deterministic; decode_webp(encode_webp_lossless(img)) == img exactly.
-
-    Transform flags compose in the canonical libwebp order
-    subtract-green → predictor → cross-color (each optional); ``palette``
-    is exclusive with the others and bundles sub-byte indices when the
-    image has ≤ 16 distinct colors. ``cache_bits`` (0 = off, 1..11)
-    enables the color cache; ``lz77`` emits greedy distance-1 /
-    distance-width backward references (both routes through the 2D
-    distance map)."""
-    argb, w, h, alpha_used = _to_argb(img)
-    if palette and (subtract_green or predictor or cross_color):
-        raise ValueError("palette is exclusive with the pixel transforms")
-    if not 0 <= cache_bits <= 11:
-        raise ValueError("cache_bits must be 0 (off) or 1..11")
-    if not 2 <= transform_bits <= 9:
-        raise ValueError("transform_bits must be in 2..9")
-
-    bw = _Writer()
-    bw.put(0x2F, 8)                    # VP8L signature
-    bw.put(w - 1, 14)
-    bw.put(h - 1, 14)
-    bw.put(1 if alpha_used else 0, 1)
-    bw.put(0, 3)                       # version
-
-    cur = argb
-    cur_w = w
-    if subtract_green:
-        bw.put(1, 1)
-        bw.put(2, 2)
-        cur = _forward_subtract_green(cur)
-    if predictor:
-        bw.put(1, 1)
-        bw.put(0, 2)
-        bw.put(transform_bits - 2, 3)
-        cur, sub = _forward_predictor(cur, w, h, transform_bits)
-        _encode_image_stream(bw, sub, _ceil_div(w, 1 << transform_bits),
-                             _ceil_div(h, 1 << transform_bits))
-    if cross_color:
-        bw.put(1, 1)
-        bw.put(1, 2)
-        bw.put(transform_bits - 2, 3)
-        cur, sub = _forward_color_transform(cur, w, h, transform_bits)
-        _encode_image_stream(bw, sub, _ceil_div(w, 1 << transform_bits),
-                             _ceil_div(h, 1 << transform_bits))
-    if palette:
-        colors, first_idx = np.unique(cur, return_index=True)
-        order = np.argsort(first_idx)          # first-occurrence order
-        pal = colors[order]
-        num_colors = len(pal)
-        if num_colors > 256:
-            raise ValueError(
-                f"palette requested but image has {num_colors} > 256 "
-                "distinct colors")
-        bw.put(1, 1)
-        bw.put(3, 2)
-        bw.put(num_colors - 1, 8)
-        ch = pal.copy().view(np.uint8).reshape(-1, 4).astype(np.int32)
-        deltas = ch.copy()
-        deltas[1:] = (ch[1:] - ch[:-1]) & 0xFF
-        pal_img = np.ascontiguousarray(
-            deltas.astype(np.uint8)).view(np.uint32).reshape(-1)
-        _encode_image_stream(bw, pal_img, num_colors, 1)
-        lut = {int(c): i for i, c in enumerate(pal)}
-        idx = np.array([lut[int(p)] for p in cur], np.uint32)
-        if num_colors <= 2:
-            width_bits = 3
-        elif num_colors <= 4:
-            width_bits = 2
-        elif num_colors <= 16:
-            width_bits = 1
-        else:
-            width_bits = 0
-        if width_bits:
-            bpp = 8 >> width_bits
-            per = 1 << width_bits
-            packed_w = _ceil_div(w, per)
-            packed = np.zeros((h, packed_w), np.uint32)
-            grid = idx.reshape(h, w)
-            for sub_x in range(per):
-                cols = grid[:, sub_x::per]
-                packed[:, :cols.shape[1]] |= cols << np.uint32(sub_x * bpp)
-            cur = (np.uint32(0xFF000000)
-                   | (packed.reshape(-1) << np.uint32(8)))
-            cur_w = packed_w
-        else:
-            cur = np.uint32(0xFF000000) | (idx << np.uint32(8))
-            cur_w = w
-    bw.put(0, 1)                       # no more transforms
-
-    _encode_image_stream(bw, cur, cur_w, h, lz77=lz77, cache_bits=cache_bits,
-                         level0=True)
-    vp8l = bw.flush()
-    chunk = b"VP8L" + struct.pack("<I", len(vp8l)) + vp8l
-    if len(vp8l) & 1:
-        chunk += b"\x00"
-    riff = b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
-    return riff

@@ -917,20 +917,22 @@ FROM (VALUES
 """
 
 
-def media_features_expected(n: int = 32, seed: int = 6):
-    """media_features driver twin: regenerate the synthetic media payloads
-    from the same (n, seed) and compute the image/audio features with the
-    SAME numpy expressions the mapInPandas kernels use (multimodal.py
-    image_features/audio_features) — identical ops on identical arrays give
-    bit-identical float64, the structural-parity pattern the FCKI/DT twins
-    established."""
+def media_features_expected():
+    """media_features driver twin: read the same media fixture
+    (multimodal.media_fixture) and compute the image/audio/video features
+    with the SAME numpy expressions the mapInPandas kernels use
+    (multimodal.py image_features/audio_features/video_features) —
+    identical ops on identical arrays give bit-identical float64, the
+    structural-parity pattern the FCKI/DT twins established."""
     from ficaria_spark.operators.multimodal import (
-        _decode_image_real, decode_wav, phash64, synthetic_media_rows)
+        _decode_image_real, decode_wav, media_fixture, phash64)
 
     from ficaria_spark.operators.gif import decode_gif
 
+    fx = media_fixture().to_pydict()
     out = []
-    for item_id, kind, payload in synthetic_media_rows(n, seed):
+    for item_id, kind, payload in zip(fx["item_id"], fx["kind"],
+                                      fx["payload"]):
         if kind == "video":
             # same numpy expressions as multimodal.video_features
             frames, delays = decode_gif(bytes(payload))

@@ -12,7 +12,8 @@ import hashlib
 import numpy as np
 import pytest
 
-from ficaria_spark.operators.flac import decode_flac, encode_flac
+from ficaria_spark.operators.flac import decode_flac
+from media_gen import encode_flac
 
 
 def _tone(n=5000, period=20.0, amp=20000):

@@ -28,9 +28,8 @@ def test_phash_invariant_across_lossless_encodings():
     encodings of the same image decode to identical arrays and must hash
     identically (the cross-codec property that makes phash-dedup find the
     same image stored in different formats)."""
-    from ficaria_spark.operators.multimodal import (
-        _decode_image_real, encode_netpbm, encode_png)
-    from ficaria_spark.operators.webp import encode_webp_lossless
+    from ficaria_spark.operators.multimodal import _decode_image_real
+    from media_gen import encode_netpbm, encode_png, encode_webp_lossless
 
     rng = np.random.default_rng(3)
     for shape in ((16, 16, 3), (33, 21, 3)):
@@ -90,9 +89,8 @@ def test_image_near_pairs_end_to_end(spark):
     from pyspark.sql import functions as F
 
     from ficaria_spark.operators.dedup import hamming_near_pairs
-    from ficaria_spark.operators.multimodal import (
-        encode_netpbm, encode_png, image_features)
-    from ficaria_spark.operators.webp import encode_webp_lossless
+    from ficaria_spark.operators.multimodal import image_features
+    from media_gen import encode_netpbm, encode_png, encode_webp_lossless
 
     rng = np.random.default_rng(11)
     base = rng.integers(0, 256, size=(24, 24, 3), dtype=np.uint8)
@@ -120,7 +118,8 @@ def test_image_near_pairs_end_to_end(spark):
 def test_image_phash_null_payloads(spark):
     """image_features(with_phash=True) emits phash64 of the decoded pixels
     and a null hash (not a dead stage) for a null payload."""
-    from ficaria_spark.operators.multimodal import encode_netpbm, image_features
+    from ficaria_spark.operators.multimodal import image_features
+    from media_gen import encode_netpbm
 
     rng = np.random.default_rng(2)
     img = rng.integers(0, 256, size=(9, 9, 3), dtype=np.uint8)

@@ -12,6 +12,9 @@ from ficaria_spark.operators import dedup as dd
 from ficaria_spark.operators import similarity as sim
 from ficaria_spark.operators import text as tx
 from ficaria_spark.operators.multimodal import image_features
+from media_gen import (
+    alaw_encode, encode_gif, encode_jpeg, encode_netpbm, encode_png,
+    encode_wav_compressed, ima_adpcm_encode, mulaw_encode)
 
 
 def _docs(spark, n=60, seed=4, dup_every=10):
@@ -333,7 +336,6 @@ def test_rolling_fingerprints_shape(spark):
 def _image_rows(n, seed=5):
     """(item_id, payload) rows of real netpbm (even ids) and PNG (odd ids)
     payloads of assorted sizes, and the pixel arrays they encode."""
-    from ficaria_spark.operators.multimodal import encode_netpbm, encode_png
 
     rng = np.random.default_rng(seed)
     rows, imgs = [], {}
@@ -786,7 +788,7 @@ def test_netpbm_roundtrip_and_wav_decode():
 
     import numpy as np
 
-    from ficaria_spark.operators.multimodal import decode_netpbm, decode_wav, encode_netpbm
+    from ficaria_spark.operators.multimodal import decode_netpbm, decode_wav
 
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, size=(11, 7, 3), dtype=np.uint8)
@@ -817,7 +819,7 @@ def test_real_codec_media_pipeline(spark):
     from ficaria_spark.operators.multimodal import (
         audio_features, decode_netpbm, image_features, synthetic_media_table)
 
-    media = synthetic_media_table(spark, n=16)
+    media = synthetic_media_table(spark).where("item_id < 16")
     imgs = media.where("kind = 'image'")
     img_feats = image_features(imgs).toPandas()
     assert len(img_feats) == 7  # 8 even ids minus the video slot (i = 14)
@@ -867,7 +869,7 @@ def test_audio_features_null_payload_row(spark):
 
     from ficaria_spark.operators.multimodal import audio_features, synthetic_media_table
 
-    media = synthetic_media_table(spark, n=4).where("kind = 'audio'")
+    media = synthetic_media_table(spark).where("item_id < 4 AND kind = 'audio'")
     with_null = media.unionByName(
         media.limit(1).selectExpr("item_id + 100 as item_id", "kind",
                                   "cast(null as binary) as payload"))
@@ -898,7 +900,7 @@ def test_encode_netpbm_rejects_bad_channels():
     import numpy as np
     import pytest as _pytest
 
-    from ficaria_spark.operators.multimodal import decode_netpbm, encode_netpbm
+    from ficaria_spark.operators.multimodal import decode_netpbm
 
     gray2d = np.arange(12, dtype=np.uint8).reshape(3, 4)
     assert (decode_netpbm(encode_netpbm(gray2d))[:, :, 0] == gray2d).all()
@@ -915,7 +917,7 @@ def test_png_codec_roundtrip_all_filters_and_color_types():
     import numpy as np
     import pytest as _pytest
 
-    from ficaria_spark.operators.multimodal import decode_png, encode_png
+    from ficaria_spark.operators.multimodal import decode_png
 
     rng = np.random.default_rng(7)
     for ch in (1, 2, 3, 4):
@@ -951,7 +953,7 @@ def test_png_rows_flow_through_media_gate_kernel(spark):
     from ficaria_spark.operators.multimodal import (
         _PNG_MAGIC, _decode_image_real, image_features, synthetic_media_table)
 
-    media = synthetic_media_table(spark, n=32, seed=6)
+    media = synthetic_media_table(spark)
     imgs = media.where("kind = 'image'")
     payloads = {r.item_id: bytes(r.payload) for r in imgs.collect()}
     png_ids = [i for i, p in payloads.items() if p[:8] == _PNG_MAGIC]
@@ -977,7 +979,7 @@ def test_jpeg_codec_roundtrip_determinism_and_conformance():
     import numpy as np
     import pytest as _pytest
 
-    from ficaria_spark.operators.jpeg import decode_jpeg, encode_jpeg
+    from ficaria_spark.operators.jpeg import decode_jpeg
 
     h, w = 21, 37
     yy, xx = np.mgrid[0:h, 0:w]
@@ -1039,7 +1041,7 @@ def test_jpeg_progressive_matches_baseline_bit_for_bit():
     import numpy as np
     import pytest as _pytest
 
-    from ficaria_spark.operators.jpeg import decode_jpeg, encode_jpeg
+    from ficaria_spark.operators.jpeg import decode_jpeg
 
     rng = np.random.default_rng(13)
     yy, xx = np.mgrid[0:48, 0:37]
@@ -1114,7 +1116,7 @@ def test_jpeg_single_component_scan_is_noninterleaved():
     per MCU and desynced)."""
     import numpy as np
 
-    from ficaria_spark.operators.jpeg import decode_jpeg, encode_jpeg
+    from ficaria_spark.operators.jpeg import decode_jpeg
 
     rng = np.random.default_rng(11)
     for shape in ((8, 8), (9, 9), (24, 17)):
@@ -1141,7 +1143,7 @@ def test_jpeg_corrupt_streams_raise_typed_errors_only():
     import numpy as np
     import pytest as _pytest
 
-    from ficaria_spark.operators.jpeg import decode_jpeg, encode_jpeg
+    from ficaria_spark.operators.jpeg import decode_jpeg
 
     # SOF body shorter than its fixed 6-byte header
     p = b"\xff\xd8" + _struct.pack(">HH", 0xFFC0, 4) + b"\x08\x00" \
@@ -1189,7 +1191,7 @@ def test_jpeg_malformed_sos_fails_loudly():
     import numpy as np
     import pytest as _pytest
 
-    from ficaria_spark.operators.jpeg import decode_jpeg, encode_jpeg
+    from ficaria_spark.operators.jpeg import decode_jpeg
 
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
@@ -1249,7 +1251,7 @@ def test_jpeg_rows_flow_through_media_gate_kernel(spark):
     from ficaria_spark.operators.multimodal import (
         _decode_image_real, image_features, synthetic_media_table)
 
-    media = synthetic_media_table(spark, n=32, seed=6)
+    media = synthetic_media_table(spark)
     imgs = media.where("kind = 'image'")
     payloads = {r.item_id: bytes(r.payload) for r in imgs.collect()}
     jpeg_ids = [i for i, p in payloads.items() if p[:2] == b"\xff\xd8"]
@@ -1277,9 +1279,7 @@ def test_audio_codecs_g711_bit_parity_and_roundtrips():
     import pytest as _pytest
 
     from ficaria_spark.operators.audio import (
-        alaw_decode, alaw_encode, decode_wav_compressed,
-        encode_wav_compressed, ima_adpcm_decode, ima_adpcm_encode,
-        mulaw_decode, mulaw_encode)
+        alaw_decode, decode_wav_compressed, ima_adpcm_decode, mulaw_decode)
     from ficaria_spark.operators.multimodal import decode_wav
 
     try:
@@ -1331,6 +1331,12 @@ def test_audio_codecs_g711_bit_parity_and_roundtrips():
         assert rate2 == 8000 and np.array_equal(x, x2)
     with _pytest.raises(ValueError, match="RIFF"):
         decode_wav_compressed(b"nope")
+    # a corrupt block_align (fmt offset 32) no longer decodes silently
+    w = bytearray(encode_wav_compressed(tone, 8000, codec="ima_adpcm"))
+    for ba in (2, 5, 300):
+        w[32:34] = ba.to_bytes(2, "little")
+        with _pytest.raises(ValueError, match="block_align"):
+            decode_wav_compressed(bytes(w))
 
 
 def test_compressed_audio_rows_flow_through_media_gate_kernel(spark):
@@ -1343,7 +1349,7 @@ def test_compressed_audio_rows_flow_through_media_gate_kernel(spark):
     from ficaria_spark.operators.multimodal import (
         audio_features, decode_wav, synthetic_media_table)
 
-    media = synthetic_media_table(spark, n=32, seed=6)
+    media = synthetic_media_table(spark)
     auds = media.where("kind = 'audio'")
     payloads = {r.item_id: bytes(r.payload) for r in auds.collect()}
     compressed = [i for i, p in payloads.items()
@@ -1367,7 +1373,7 @@ def test_gif_codec_roundtrip_lzw_and_interlace():
     import numpy as np
     import pytest as _pytest
 
-    from ficaria_spark.operators.gif import decode_gif, encode_gif
+    from ficaria_spark.operators.gif import decode_gif
 
     rng = np.random.default_rng(3)
     pal = rng.integers(0, 256, size=(64, 3), dtype=np.uint8)
@@ -1403,7 +1409,7 @@ def test_video_rows_flow_through_media_gate_and_frame_sample(spark):
     from ficaria_spark.operators.multimodal import (
         synthetic_media_table, video_features)
 
-    media = synthetic_media_table(spark, n=32, seed=6)
+    media = synthetic_media_table(spark)
     vids = media.where("kind = 'video'")
     payloads = {r.item_id: bytes(r.payload) for r in vids.collect()}
     assert sorted(payloads) == [14, 30]

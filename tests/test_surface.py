@@ -4,7 +4,10 @@ and its own definition.
 
 A reference is a whole-word match of the name in the code of the library
 itself, ``bench.py``, ``bench_extra.py``, ``main.py``,
-``__spark_entry__.py``, ``perfbench/`` or ``tools/``. Docstrings and
+``__spark_entry__.py``, ``perfbench/`` or ``tools/``. A private ``_name``
+is qualified by its module: it counts only inside that module, or in a
+file that imports it from that module or writes ``module._name`` (so two
+modules' same-named helpers cannot keep each other alive). Docstrings and
 comments are blanked first, so a mention in prose does not count; other
 string literals do (a string in ``__all__`` or a registry is a reference).
 The check is transitive: a def whose only references sit inside dead defs
@@ -91,6 +94,32 @@ def _blank(text: str, first: int, last: int) -> str:
     return "".join(lines)
 
 
+def _module(path: Path) -> str:
+    return ".".join(path.relative_to(ROOT).with_suffix("").parts)
+
+
+_FROM_IMPORT = re.compile(r"from\s+([\w.]+)\s+import\s+(\([^)]*\)|[^\n]*)")
+_IMPORT_AS = re.compile(r"import\s+([\w.]+)\s+as\s+(\w+)")
+
+
+def _refers_private(text: str, module: str, name: str) -> bool:
+    """Does ``text`` (another file's code) import ``name`` from ``module``
+    or write ``<alias of module>.name``?"""
+    aliases = {module.rsplit(".", 1)[-1]}
+    for src, names in _FROM_IMPORT.findall(text):
+        for item in names.strip("()").replace("\n", " ").split(","):
+            parts = item.split()
+            if not parts:
+                continue
+            if src == module and parts[0] == name:
+                return True
+            if f"{src}.{parts[0]}" == module:
+                aliases.add(parts[-1])
+    aliases.update(a for m, a in _IMPORT_AS.findall(text) if m == module)
+    return any(re.search(rf"\b{re.escape(a)}\.{re.escape(name)}\b", text)
+               for a in aliases)
+
+
 def _unreferenced() -> list[str]:
     sources = _sources()
     code = {p: _code_only(text) for p, text in sources.items()}
@@ -105,10 +134,16 @@ def _unreferenced() -> list[str]:
             if key in dead:
                 continue
             word = re.compile(rf"\b{re.escape(name)}\b")
-            if not any(word.search(_blank(text, first, last) if p == path
-                                   else text)
-                       for p, text in code.items()):
-                found[key] = (path, first, last)
+            if word.search(_blank(code[path], first, last)):
+                continue
+            others = (text for p, text in code.items() if p != path)
+            if name.startswith("_"):
+                module = _module(path)
+                if any(_refers_private(t, module, name) for t in others):
+                    continue
+            elif any(word.search(t) for t in others):
+                continue
+            found[key] = (path, first, last)
         if not found:
             return sorted(dead)
         dead.update(found)

@@ -14,13 +14,9 @@ import numpy as np
 import pytest
 
 from ficaria_spark.operators.tiff import (
-    _lzw_decode,
-    _lzw_encode,
-    _packbits_decode,
-    _packbits_encode,
-    decode_tiff,
-    encode_tiff,
-)
+    _lzw_decode, _packbits_decode, decode_tiff)
+from media_gen import _packbits_encode, encode_tiff
+from media_gen import _tiff_lzw_encode as _lzw_encode
 
 
 def _expected(img: np.ndarray) -> np.ndarray:

@@ -14,14 +14,9 @@ import numpy as np
 import pytest
 
 from ficaria_spark.operators.webp import (
-    _CODE_TO_PLANE,
-    _Writer,
-    _dist_reverse,
-    _encode_image_stream,
-    _plane_to_offsets,
-    decode_webp,
-    encode_webp_lossless,
-)
+    _CODE_TO_PLANE, _plane_to_offsets, decode_webp)
+from media_gen import _dist_reverse, _encode_image_stream, encode_webp_lossless
+from media_gen import _VP8LWriter as _Writer
 
 
 def test_roundtrip_matrix():

@@ -7,15 +7,20 @@ and does the family scale with executor parallelism (the per-row decode
 is embarrassingly parallel, so anything below ~linear is harness
 overhead or the DRAM wall)?
 
-Parent: generate N deterministic payloads (the gate generator at larger
-n — every codec slot repeats every 32 items: netpbm/PNG/JPEG
-baseline+progressive/WebP palette+transform images, PCM/μ-law/ADPCM/
-A-law/FLAC audio, GIF video), write parquet to /tmp. Children (one
-pinned subprocess per parallelism level, interleaved reps — the bench.py
---scaling methodology) read it, run image_features(real codec) +
-audio_features + video_features, and report wall + rows/s.
+Parent: generate N deterministic payloads (the gate generator,
+tests/media_gen.py, at larger n — every codec slot repeats every 32 items:
+netpbm/PNG/JPEG baseline+progressive/WebP palette+transform images,
+PCM/μ-law/ADPCM/A-law/FLAC audio, GIF video), write parquet to /tmp.
+Children (one pinned subprocess per parallelism level, interleaved reps —
+the bench.py --scaling methodology) read it, run image_features(real
+codec) + audio_features + video_features, and report wall + rows/s.
 
-Run:  python tools/probe_media_scale.py            (N=8192, local[8] vs local[32])
+The levels are the CPUs this process may run on: 4N = the size of
+``os.sched_getaffinity(0)`` (rounded down to a multiple of 4), N = 4N/4,
+each child pinned to that many of them. Below 4 CPUs there is no N→4N
+step to measure, and the probe exits.
+
+Run:  python tools/probe_media_scale.py            (8192 items)
       SPARK_GRAFT_MEDIA_PROBE_N=2048 python tools/probe_media_scale.py
 """
 from __future__ import annotations
@@ -27,7 +32,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 PARQUET = "/tmp/ficaria_media_probe.parquet"
 
@@ -36,7 +42,8 @@ def _generate(n: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ficaria_spark.operators.multimodal import synthetic_media_rows
+    sys.path.insert(0, os.path.join(ROOT, "tests"))
+    from media_gen import synthetic_media_rows
 
     rows = synthetic_media_rows(n, seed=6)
     table = pa.table({
@@ -77,7 +84,12 @@ def main() -> None:
     # (8-core wall 7.5 s), 8192 puts the 8-core wall near a minute
     n = int(os.environ.get("SPARK_GRAFT_MEDIA_PROBE_N", "8192"))
     reps = int(os.environ.get("SPARK_GRAFT_MEDIA_PROBE_REPS", "2"))
-    lo, hi = 8, 32
+    cpus = sorted(os.sched_getaffinity(0))
+    if len(cpus) < 4:
+        sys.exit(f"probe_media_scale: {len(cpus)} usable CPU(s); the "
+                 "N->4N scaling probe needs at least 4")
+    hi = len(cpus) - len(cpus) % 4
+    lo = hi // 4
     t0 = time.time()
     _generate(n)
     gen_s = time.time() - t0
@@ -86,11 +98,11 @@ def main() -> None:
         cmd = [sys.executable, os.path.abspath(__file__), "--child",
                str(cores)]
         if shutil.which("taskset"):
-            # pin to EXACTLY `cores` CPUs — giving the low-core child
-            # driver-slack CPUs the high-core child can't have inflates
-            # its throughput and biases the efficiency ratio (r6 review)
+            # pin to EXACTLY `cores` of the CPUs we may use — giving the
+            # low-core child driver-slack CPUs the high-core child can't
+            # have inflates its throughput and biases the efficiency ratio
             cmd = ["taskset", "-c",
-                   f"0-{min(cores, os.cpu_count() or 32) - 1}"] + cmd
+                   ",".join(str(c) for c in cpus[:cores])] + cmd
         out = subprocess.run(cmd, capture_output=True, text=True, check=True)
         return json.loads(out.stdout.strip().splitlines()[-1])
 
@@ -107,7 +119,7 @@ def main() -> None:
                 best[c] = r
     effs = sorted(pairs)
     print(json.dumps({
-        "metric": "media codec family rows/sec and 8->32-core scaling "
+        "metric": f"media codec family rows/sec and {lo}->{hi}-core scaling "
                   "efficiency (image+audio+video_features, real codecs, "
                   "interleaved pinned reps)",
         "n_items": n,
